@@ -141,7 +141,7 @@ object DumpPlans {
       ("q119_ohlc_bars", Analytics.q119OhlcBars(spark, d),
         "struct-keyed min_by/max_by partial SortAggregate, ONE bar-key " +
           "exchange — the MEASURED winner over the hash-aggregable " +
-          "packed-decimal key (BenchOhlcAB: 0.37 vs 0.53 s at sf0.1)"),
+          "packed-decimal key (0.37 vs 0.53 s at sf0.1, BASELINE.md §Round-9 OHLC)"),
       ("q125_brand_basket", Relational.q125BrandBasket(spark, d),
         "pair fan-out keys on the order (bounded by basket size); " +
           "support counts combine map-side; brand marginals and the " +

@@ -746,7 +746,8 @@ object Analytics {
     * (no arithmetic → bit-exact across engines); turnover sums in
     * DECIMAL(38,10) after an identical cast on both sides, so the
     * addition order doesn't matter. */
-  /** Aggregate-strategy note (measured, see BenchOhlcAB + BASELINE.md):
+  /** Aggregate-strategy note (measured, BASELINE.md §"Round-9: OHLC
+    * aggregate-strategy A/B (q119)"):
     * the struct ordering key makes the aggregation buffer a struct, which
     * HashAggregate can't mutate in place — Spark plans SortAggregate with
     * a per-partition sort on the bar key. The tempting "fix" — packing

@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   * injected runtime filter; differential + FP-rate spec in
   * BloomPruneSpec, plan audit in PlanAuditSpec).
   *
-  * When to apply (measured, BenchBloomAB in BASELINE.md): ONLY in
+  * When to apply (measured, BASELINE.md §"Round-8: explicit bloom
+  * pre-probe A/B (q93 pattern)"): ONLY in
   * front of a SHUFFLE join — there it wins even single-JVM at sf0.1
   * (1.27×) because pruned rows never enter the exchange, and the win
   * grows with fact size on a real network. In front of a broadcast

@@ -1685,9 +1685,8 @@ object Curation {
     decontamGramsToks(df.withColumn("toks", Dedup.tokensCodegen(col("text"))))
 
   /** [[decontamGrams]] over an already-tokenized (doc_id, toks) frame —
-    * the r18 funnel-cache path hands q222's persisted token arrays in
-    * directly so stage 3 doesn't re-tokenize (identical expression tree
-    * when uncached: Catalyst collapses the projections either way). */
+    * q222's funnel hands its persisted token arrays in directly so
+    * stage 3 doesn't re-tokenize. */
   private[graft] def decontamGramsToks(df: DataFrame): DataFrame = df
     .select(col("doc_id"), explode(expr(
       "CASE WHEN size(toks) >= 8 THEN " +
@@ -1704,28 +1703,15 @@ object Curation {
     * match THESE verdicts row for row on closed windows. */
   private[graft] def funnelVerdicts(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
-    // r18 funnel cache (VERDICT item 4, guide §5): stages 1 (quality
-    // stats) and 3 (decontam grams) tokenize the train split
-    // independently; `spark.graft.funnel.cache` (default ON) persists
-    // the tokenized train split ONCE (MEMORY_AND_DISK — spillable,
-    // lineage-replayable) so both stages read it. MEASURED
-    // (BenchFunnelAB, alternating OFF/ON in one JVM, cache cleared per
-    // rep): sf0.1 ×5 medians 5.54 s OFF → 4.73 s ON with EVERY rep's ON
-    // beating its OFF; sf1-equivalent ×3 5.79 → 5.60. Unlike the r17
-    // shared-BIGRAM checkpoint (a no-win, r17 ledger §2) this caches the
-    // token ARRAYS reused by two differently-shaped consumers, so the
-    // reuse is intra-query and wins even under the bench's
-    // one-query-per-cleared-cache regime. Set false to trade the time
-    // back for memory on constrained executors. Repeated q222 builds in
-    // one session share ONE cache entry (CacheManager matches the
-    // canonicalized plan), so nothing accumulates.
-    val trainTok0 = docs.filter(col("doc_id") % 7 =!= 0)
+    // stages 1 (quality stats) and 3 (decontam grams) both read the
+    // tokenized train split; persisting it (MEMORY_AND_DISK: spillable
+    // and lineage-replayable) tokenizes it once instead of twice.
+    // Repeated builds in one session share one cache entry, because
+    // CacheManager matches the canonicalized plan.
+    val trainTok = docs.filter(col("doc_id") % 7 =!= 0)
       .select(col("doc_id"), col("source"), col("text"),
         Dedup.tokensCodegen(col("text")).as("toks"))
-    val trainTok =
-      if (s.conf.getOption("spark.graft.funnel.cache").forall(_.toBoolean))
-        trainTok0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else trainTok0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val train = trainTok.select(col("doc_id"), col("source"), col("text"))
 
     // stage 1 — C4/Gopher rules at doc grain (q175's expressions)

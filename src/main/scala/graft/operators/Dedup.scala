@@ -40,12 +40,12 @@ object Dedup {
     * re-tokenizes per query unless the gram rows are cached (shuffle
     * reuse is per-query; the cache is cross-query — Spark's CacheManager
     * matches the canonicalized gramHashRows plan, so every later query
-    * hits the persisted rows). MEASURED (graft.BenchCacheAB, sf0.1, ×5
-    * OFF/ON alternated): bundle median 7.54 s off → 6.30 s on, every
-    * rep's ON beating its OFF — see BASELINE.md round-6. Slim 16-byte
-    * rows, MEMORY_AND_DISK so it spills. Default stays OFF because the
-    * gate/bench paths run one query per cleared cache, where the
-    * build cost is a strict loss; set it for multi-query sessions. */
+    * hits the persisted rows). MEASURED (sf0.1, ×5 OFF/ON alternated):
+    * bundle median 7.54 s off → 6.30 s on, every rep's ON beating its
+    * OFF — BASELINE.md §"Round-6: cross-query dedup cache A/B". Slim
+    * 16-byte rows, MEMORY_AND_DISK so it spills. Default stays OFF
+    * because the gate/bench paths run one query per cleared cache,
+    * where the build cost is a strict loss; set it for multi-query sessions. */
   private def maybeCache(df: DataFrame): DataFrame =
     if (df.sparkSession.conf.getOption("spark.graft.dedup.cache").exists(_.toBoolean))
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -533,7 +533,7 @@ object Dedup {
     // branches) make the copies canonically different, so runtime
     // exchange reuse NEVER fires — measured 16 executed parquet scans of
     // `documents` (tokenize+gram-hash ×8 per union arm) in q21 before,
-    // 2 after (BenchScanReuse). grams: 16-byte (doc_id, gh) rows, 3
+    // 2 after. grams: 16-byte (doc_id, gh) rows, 3
     // consumers (signatures, set sizes, verify intersection); banded:
     // (doc_id, band, bkey) rows, 2 consumers (cap census + capped flow).
     // The cap observes stay ABOVE the checkpoints — CollectMetrics on a
@@ -763,8 +763,8 @@ object Dedup {
     * (stop-gram census, per-doc sizes, both inverted-index join arms)
     * carry canonically different inferred filters, so runtime exchange
     * reuse never fires and each re-ran the whole tokenize→shingle
-    * pipeline — 4 documents scans per query (BenchScanTotal). Gated the
-    * neardupPairs way: under spark.graft.dedup.cache the maybeCache
+    * pipeline — 4 documents scans per query (OPTIMIZATION_r18.md §11).
+    * Gated the neardupPairs way: under spark.graft.dedup.cache the maybeCache
     * inside gramHashRows already dedups the consumers (checkpoint+cache
     * would double-materialize). */
   private def sharedGramFrame(docs: DataFrame): DataFrame = {
@@ -789,7 +789,13 @@ object Dedup {
     * measured first: same 32-way parallelism, but each pair's rows
     * scatter across the gram partitions and the partial aggregate
     * stopped collapsing — 1.1 GB partial-output exchange, wall
-    * unchanged. */
+    * unchanged.
+    *
+    * This pays only while the id_b arm is broadcast. Once that arm
+    * outgrows the broadcast threshold (larger SF, looser df cap), the
+    * join becomes a shuffle join that re-exchanges BOTH sides on gh,
+    * which discards the doc_id layout: the pinned doc_id shuffle is
+    * then pure overhead, one extra exchange of the streamed arm. */
   private def spreadForSelfJoin(gramRows: DataFrame): DataFrame =
     gramRows.repartition(
       gramRows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
@@ -1050,20 +1056,14 @@ object Dedup {
       capGramDf(gramHashRows(
         documents(s, d).select(col("doc_id"), col("text"))), 1000), 0.8)
 
-  /** A/B arms for graft.BenchContainAB: (the registered prefix-filtered
-    * form, the round-10 inverted-index baseline) — identical output. */
-  def containmentArms(docs: DataFrame, maxDf: Int,
-      t: Double): (DataFrame, DataFrame) =
-    (containmentPrefixJoin(capGramDf(gramHashRows(docs), maxDf), t),
-      containmentPairs(docs, maxDf, t))
-
   /** df-capped distinct gram items — the q22/q121 set universe, exposed
-    * for the A/B harnesses. */
+    * for the reference forms in DedupPropertiesSpec. */
   def cappedGramItems(docs: DataFrame, maxDf: Int): DataFrame =
     capGramDf(gramHashRows(docs), maxDf)
 
   /** q22's inverted-index Jaccard shape at any (maxDf, threshold) — the
-    * BenchJaccardAB baseline arm. */
+    * baseline of BASELINE.md §"Round-11: prefix filtering does NOT pay
+    * at low thresholds (q22 A/B)". */
   def q22Shape(docs: DataFrame, maxDf: Int, threshold: Double): DataFrame = {
     val bounded = cappedGramItems(docs, maxDf)
     val sizes = bounded.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))

@@ -331,31 +331,6 @@ object Graph {
             .cast("double") / col("n_tri"), 6)).as("rel_err"))
   }
 
-  /** The PRODUCTION forms BenchTriangleAB times against each other —
-    * exact total vs estimator-only total (the gated q246 runs both
-    * arms for the referee gate; a 100 TB deployment runs only the
-    * estimator, so the speedup must be measured on these). */
-  def triangleTotalExact(s: SparkSession, d: String): DataFrame =
-    orientedTriangles(basketEdges(s, d)).agg(count(lit(1)).as("n_tri"))
-
-  def triangleTotalEstimate(s: SparkSession, d: String,
-      keepHex: Int = DoulionKeepHex): DataFrame = {
-    // same domain check as triangleDoulion: a keepHex that does not
-    // divide 16 (e.g. 5 → inv = 3) would silently mis-scale 1/p³
-    require(keepHex >= 1 && keepHex <= 16 && 16 % keepHex == 0,
-      s"keepHex must divide 16, got $keepHex")
-    val inv = 16 / keepHex
-    val scale = inv.toLong * inv * inv
-    val e = basketEdges(s, d)
-    val sampled =
-      if (keepHex == 16) e
-      else e.filter(
-        substring(md5(concat(col("u"), lit("_"), col("v"))), 1, 1) <
-          lit(keepHex.toHexString))
-    orientedTriangles(sampled)
-      .agg((count(lit(1)) * scale).as("est_tri"))
-  }
-
   /** The deg→orient→wedge→close CTE chain over edge CTE `eName`, names
     * suffixed `_$sfx` — emitted twice by q246Sql (exact arm over `e`,
     * sampled arm over `es`). */

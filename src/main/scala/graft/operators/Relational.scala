@@ -859,9 +859,11 @@ object Relational {
         expr("percentile(l_quantity, 0.9, c)").as("p90_qty"))
     val priceP = li.groupBy(col("l_returnflag"), col("l_extendedprice"))
       .agg(count(lit(1)).as("c"))
-      .groupBy(col("l_returnflag"))
+      .groupBy(col("l_returnflag").as("rf"))
       .agg(expr("percentile(l_extendedprice, 0.5, c)").as("p50_price"))
-    qtyP.join(priceP, Seq("l_returnflag"))
+    // null-safe: GROUP BY keeps a NULL flag as a group, so the two
+    // halves must pair on it too
+    qtyP.join(priceP, col("l_returnflag") <=> col("rf"))
       .select(col("l_returnflag"), col("p50_qty"), col("p90_qty"),
         col("p50_price"))
   }
@@ -2062,7 +2064,7 @@ object Relational {
     // brand marginals, both self-join sides), and their inferred filters
     // make the copies canonically different, so runtime exchange reuse
     // never fires — each consumer re-ran the lineitem⋈part scan and the
-    // distinct (4 fact scans per query, BenchScanTotal). The lazy
+    // distinct (4 fact scans per query, OPTIMIZATION_r18.md §10). The lazy
     // checkpoint shares ONE materialization of the slim (long, brand)
     // rows — the q77 set-table / q205 key-count discipline.
     val ob = li.join(pt, col("l_partkey") === col("p_partkey"))

@@ -619,7 +619,8 @@ object Similarity {
     * round(double); integer sums commute) — so err2 is EXACT, the
     * argmin (tiebreak smaller code) cannot flip across engines or
     * partitionings, and the hot path is long arithmetic, not per-row
-    * wide-decimal (the BenchOhlcAB lesson: ~3× cheaper here). */
+    * wide-decimal (the lesson of BASELINE.md §"Round-9: OHLC
+    * aggregate-strategy A/B (q119)": ~3× cheaper here). */
   def q131PqCodes(s: SparkSession, d: String): DataFrame =
     pqCodes(embeddings(s, d), subDim = 8, k = 16)
 

@@ -30,9 +30,10 @@ import org.apache.spark.sql.functions._
   *     exception to the no-collect rule: a plan decision needs a scalar on
   *     the driver, the same way AQE reads runtime shuffle stats (bytes per
   *     partition) on the driver between stages.
-  *   - BenchPlanAB (harness): measures the decision's worth — sketch cost
-  *     vs the runtime gap between the two orders on a corpus where the
-  *     wrong first join explodes.
+  *   - the decision's worth — sketch cost vs the runtime gap between
+  *     the two orders on a corpus where the wrong first join explodes —
+  *     is recorded in BASELINE.md §"Round-12: q205 sketch join planner
+  *     A/B".
   *
   * Scale shape: each side folds to ≤4·16384 counters map-side (the q145
   * partial-agg shape — every map task ships at most the sketch, never
@@ -54,8 +55,9 @@ object SketchPlanner {
     * same filtered subquery hits), which is the same plan-identity
     * Spark's own CacheManager uses. A second decision over the same
     * corpus therefore adds ZERO table scans (SketchPlannerSpec pins
-    * this via a QueryExecutionListener execution count; BenchPlanAB
-    * records the plan-arm drop).
+    * this via a QueryExecutionListener execution count; BASELINE.md
+    * §"Round-14: sketch catalog + automatic chain reorder" records the
+    * plan-arm drop).
     *
     * Staleness contract — the same one Spark's catalog statistics and
     * every stats-cache in Delta/Iceberg carry: entries describe the
@@ -736,20 +738,6 @@ object SketchPlanner {
       val d = if (st.bcastDim) broadcast(dims(st.edge)) else dims(st.edge)
       acc.join(d, edges(st.edge)._1 === edges(st.edge)._2)
     }
-
-  /** Decide + build in one call. */
-  def planStar(fact: DataFrame, dims: Seq[DataFrame],
-      edges: Seq[(Column, Column)],
-      bcastRows: Long = broadcastRowThreshold): (Seq[StarStep], DataFrame) = {
-    val d = decideStar(fact, dims, edges, bcastRows)
-    (d, buildStar(fact, dims, edges, d))
-  }
-
-  /** The literal written order with no hints — the A/B comparison arm. */
-  def starLiteralOrder(fact: DataFrame, dims: Seq[DataFrame],
-      edges: Seq[(Column, Column)]): DataFrame =
-    buildStar(fact, dims, edges,
-      edges.indices.map(i => StarStep(i, bcastDim = false)))
 
   /** Greedy-rank arithmetic for a 3-EDGE chain (4 tables), shared
     * verbatim by the Spark plan and the DuckDB oracle: given edge

@@ -528,7 +528,8 @@ object Storage {
     * to the data (`_zonemap/zones-00000.json`). Stats are collected at WRITE time
     * and read back in O(1) at plan time, the Delta/Iceberg split:
     * measured locally, re-reading 64 footers per query cost more than
-    * the full scan it saved at sf0.1 (BenchPruneAB's first cut), while
+    * the full scan it saved at sf0.1 (the first cut in BASELINE.md
+    * §"Round-13: zone-map pruned read A/B"), while
     * the persisted manifest makes the plan cost one small file. */
   def zonemapClusteredWrite(df: DataFrame, dateCol: String, nFiles: Int,
       path: String): Unit = {
@@ -1815,7 +1816,8 @@ object Storage {
     * table — if pruning ever dropped or duplicated a file, the
     * row/hash gate fails. File-skipping itself is pinned in StorageSpec
     * (scan metrics: only surviving files opened) and quantified in
-    * BASELINE.md (BenchPruneAB); it cannot be oracled here because the
+    * BASELINE.md §"Round-13: zone-map pruned read A/B"; it cannot be
+    * oracled here because the
     * range partitioner's sampled file boundaries are not replicable in
     * SQL. Quantity accumulates in DECIMAL (the q70 convention). */
   /** Build (once per session) and return the 64-file ship_date-clustered

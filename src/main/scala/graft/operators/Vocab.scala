@@ -334,7 +334,6 @@ object Vocab {
     * top-10 window runs on that grain under WindowGroupLimit — never
     * on token rows. */
   def q173Keyness(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val cnt = documents(s, d)
       // native tokenizer + the ≠"" filter ≡ the old unanchored split
       // (split's possible leading empty token was filtered anyway)

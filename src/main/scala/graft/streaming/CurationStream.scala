@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.sql.Timestamp
 
 import org.apache.spark.broadcast.Broadcast

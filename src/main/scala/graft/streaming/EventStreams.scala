@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -265,13 +265,4 @@ object EventStreams {
       .groupBy(window(col("ts"), "1 day").as("w"))
       .agg(count(lit(1)).as("new_users"))
       .select(col("w.start").as("day"), col("new_users"))
-
-  /** Convenience: run [[hourlyAgg]] as a file-source stream over a
-    * parquet directory into an in-memory table — the readStream →
-    * transform → writeStream wiring. */
-  def streamParquetToMemory(s: SparkSession, dir: String, schema: String,
-                            queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    hourlyAgg(s.readStream.schema(schema).parquet(dir))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append).start()
 }

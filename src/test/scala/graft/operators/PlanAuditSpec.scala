@@ -335,9 +335,10 @@ class PlanAuditSpec extends SparkSpec {
     val finalPlan = plan.split("== Initial Plan ==").head
     // struct-keyed min_by/max_by plans as SortAggregate (struct buffers
     // aren't hash-mutable) — the MEASURED winner over a hash-aggregable
-    // packed-decimal key (BenchOhlcAB: 0.37 vs 0.53 s). What must hold:
-    // map-side combine before the single bar-key shuffle, and no Window
-    // (a window formulation would shuffle per-bar ORDERED rows).
+    // packed-decimal key (0.37 vs 0.53 s, BASELINE.md §Round-9 OHLC).
+    // What must hold: map-side combine before the single bar-key
+    // shuffle, and no Window (a window formulation would shuffle
+    // per-bar ORDERED rows).
     assert(!finalPlan.contains("Window"), finalPlan.take(2000))
     assert(finalPlan.contains("partial_min_by"), finalPlan.take(2000))
     val exchanges = finalPlan.linesIterator.count(_.contains("Exchange hashpartitioning"))

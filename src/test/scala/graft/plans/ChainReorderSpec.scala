@@ -372,9 +372,9 @@ class ChainReorderSpec extends SparkSpec {
     // FIRST (dim grain) and only then touches the fact — the bushy
     // alternative the r16 verdict asks to price. Left-deep threading
     // drags the fact-sized stream through every branch link instead.
-    // BenchPlanAB's decided-vs-literal arm shows the wall-clock delta
-    // (1.25 s vs 1.58 s at 2M rows); this lemma pins the shape and the
-    // intermediate-row counts at spec scale.
+    // BASELINE.md §"Round-16 record" gives the wall-clock delta of
+    // decided vs literal order (1.25 s vs 1.58 s at 2M rows); this lemma
+    // pins the shape and the intermediate-row counts at spec scale.
     val fact = spark.range(5000).select(pmod(col("id"), lit(100)).as("sk"),
       col("id").as("ok"), lit(1L).as("fv"))
     val supp = spark.range(100).select(col("id").as("sk"),

@@ -8,23 +8,31 @@
 #                            incl. the dtype gate + pandas-mirror hash)
 #   3. plan drift          — fresh DumpPlans vs committed PLANS.md
 #                            (tools/plan_drift.py)
+#   4. mrbench compile     — the benchmark harness compiled together with
+#                            src/main/scala (the root build never compiles
+#                            it, so an engine change could break it unseen);
+#                            needs SPARK_HOME
 #
 # Exit nonzero on the first failing stage. Run before every round-closing
 # commit; stages 2–3 alone take ~4 min at sf0.01.
 set -e
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
+: "${SPARK_HOME:?SPARK_HOME must name the Spark installation (stage 4)}"
 
-echo "=== [1/3] sbt test ==="
+echo "=== [1/4] sbt test ==="
 sbt -batch test
 
-echo "=== [2/3] oracle gate at $SF ==="
+echo "=== [2/4] oracle gate at $SF ==="
 rm -rf /tmp/gate_verify
 sbt -batch "runMain graft.Verify $SF /tmp/gate_verify"
 python3 tools/check_oracle.py "$SF" /tmp/gate_verify
 
-echo "=== [3/3] plan drift vs committed PLANS.md ==="
+echo "=== [3/4] plan drift vs committed PLANS.md ==="
 sbt -batch "runMain graft.DumpPlans /tmp/plans_fresh.md"
 python3 tools/plan_drift.py PLANS.md /tmp/plans_fresh.md
+
+echo "=== [4/4] mrbench harness compile ==="
+(cd mrbench && sbt -batch compile)
 
 echo "=== local gate green ==="
