@@ -35,7 +35,16 @@ object GraftSession {
   def getOrCreate(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    install(spark)
+    registerCapListener(spark)
+    spark
+  }
+
+  /** Register every native kernel and plan extension: the one list both
+    * [[getOrCreate]] and the test session use. */
+  def install(spark: SparkSession): Unit = {
     graft.functions.FnvHash.register(spark)
+    graft.functions.Md5Bits.register(spark)
     graft.functions.TextTokens.register(spark)
     graft.functions.VecMath.register(spark)
     graft.functions.MinhashBands.register(spark)
@@ -46,8 +55,6 @@ object GraftSession {
     graft.plans.GroupTopKExtension.install(spark)
     graft.plans.ChainReorderExtension.install(spark)
     graft.plans.ZonemapPruneExtension.install(spark)
-    registerCapListener(spark)
-    spark
   }
 
   /** NO SILENT CAPS: operators that bound their work (e.g. the LSH

@@ -17,16 +17,15 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * Spark's `hex()` and DuckDB's `hex()` both emit), take 16-hex-char
   * grams at an 8-hex-char stride (8-byte grams, 4-byte stride), hash
   * each gram string's ASCII bytes with md5, keep the leading 15 hex
-  * chars as a 60-bit value (= the first 8 digest bytes big-endian
-  * >>> 4), vote ±1 per bit, set fingerprint bit b iff its vote sum is
-  * positive. Payloads shorter than one gram yield NULL — the
-  * aggregation form's no-row convention.
+  * chars as a 60-bit value ([[Md5Bits]]), vote ±1 per bit, set
+  * fingerprint bit b iff its vote sum is positive. Payloads shorter
+  * than one gram yield NULL — the aggregation form's no-row convention.
   *
   * Why native: the DataFrame form explodes bytes/4 gram rows per
   * record through md5+conv and folds them back with 60 SUM aggregates —
   * an exchange-free but allocation-heavy two-stage shape. The kernel
-  * is a single fused pass: one hex buffer per record, one MessageDigest
-  * (thread-local) updated per gram window, votes in a stack array —
+  * is a single fused pass: one hex buffer per record, one md5_bits
+  * kernel call per gram window, votes in a stack array —
   * no gram strings, no row explosion, no aggregation state. Runs
   * per-row, so the STREAMING form of media dedup can band fingerprints
   * at ingest the way `minhash_bands` does for text. Measured in
@@ -39,11 +38,6 @@ object PayloadSimhash {
   private val bits = 60
 
   private val HEX = "0123456789ABCDEF".getBytes("US-ASCII")
-
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** Boxed Long fingerprint, or null for payloads under one gram. */
   def payloadSimhash(payload: Array[Byte]): java.lang.Long = {
@@ -58,17 +52,10 @@ object PayloadSimhash {
       i += 1
     }
     val votes = new Array[Int](bits)
-    val md = mdLocal.get()
     val nGrams = (n * 2 - gramHexChars) / strideHexChars + 1
     var g = 0
     while (g < nGrams) {
-      md.reset()
-      md.update(hex, g * strideHexChars, gramHexChars)
-      val d = md.digest()
-      var h = 0L
-      var k = 0
-      while (k < 8) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
-      h = h >>> 4 // leading 15 hex chars = 60 bits
+      val h = Md5Bits.bits(hex, g * strideHexChars, gramHexChars)
       var b = 0
       while (b < bits) {
         if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Bits.md5Bucket
 
 /** Event-sequence analytics over the events table — the classic product
   * questions a clickstream engine must answer:
@@ -1112,16 +1113,20 @@ object Analytics {
     * folds new maxima in, which IS streaming HLL maintenance
     * (StreamingSpec diffs the two modes). */
   private[graft] def hllRegisters(keys: DataFrame): DataFrame =
-    keys
-      .select(md5(col("key")).as("hx"))
-      .select(
-        conv(substring(col("hx"), 1, 2), 16, 10).cast("long").as("reg"),
-        conv(substring(col("hx"), 3, 10), 16, 10).cast("long").as("w"))
-      .select(col("reg"),
-        when(col("w") === 0, lit(41L))
-          .otherwise(lit(41L) - length(bin(col("w")))).as("rank"))
+    hllRanks(keys.select(md5(col("key")).as("hx")), col("hx"))
       .groupBy(col("reg"))
       .agg(max(col("rank")).cast("long").as("max_rank"))
+
+  /** The q140 step over md5 hex column `hex`: (`keep`, reg = hex chars
+    * 1–2, rank = 41 − length(bin(w)) for w = chars 3–12, 41 if w = 0). Two
+    * projections, so w is computed once per row. */
+  private[graft] def hllRanks(df: DataFrame, hex: Column, keep: Column*): DataFrame =
+    df.select(keep ++ Seq(
+        conv(substring(hex, 1, 2), 16, 10).cast("long").as("reg"),
+        conv(substring(hex, 3, 10), 16, 10).cast("long").as("w")): _*)
+      .select(keep ++ Seq(col("reg"),
+        when(col("w") === 0, lit(41L))
+          .otherwise(lit(41L) - length(bin(col("w")))).as("rank")): _*)
 
   val q140Sql: String =
     """WITH h AS (
@@ -1252,13 +1257,7 @@ object Analytics {
     * cardinality estimator (q204) needs width ≈ the additive-error
     * budget ||f_A||₁·||f_B||₁/ε and uses 16384. */
   private[graft] def cmsSketchW(keys: DataFrame, w: Long): DataFrame =
-    keys
-      .select(col("key"),
-        explode(array((0 until 4).map(i => lit(i.toLong)): _*)).as("row_idx"))
-      .select(col("row_idx"),
-        pmod(conv(substring(md5(concat_ws(":",
-            col("row_idx").cast("string"), col("key"))), 1, 15), 16, 10)
-          .cast("long"), lit(w)).as("col_idx"))
+    cmsCells(keys, w)
       .groupBy(col("row_idx"), col("col_idx"))
       .agg(count(lit(1)).as("cnt"))
 
@@ -1269,16 +1268,19 @@ object Analytics {
     * frame's Exchange with the exact referee it is graded against
     * (SketchPlanner q204/q205/q211/q217 — guide §1.2/§2.3). */
   private[graft] def cmsSketchWeighted(keyCounts: DataFrame, w: Long): DataFrame =
-    keyCounts
-      .select(col("key"), col("kn"),
-        explode(array((0 until 4).map(i => lit(i.toLong)): _*)).as("row_idx"))
-      .select(col("row_idx"),
-        pmod(conv(substring(md5(concat_ws(":",
-            col("row_idx").cast("string"), col("key"))), 1, 15), 16, 10)
-          .cast("long"), lit(w)).as("col_idx"),
-        col("kn"))
+    cmsCells(keyCounts, w, col("kn"))
       .groupBy(col("row_idx"), col("col_idx"))
       .agg(sum(col("kn")).as("cnt"))
+
+  /** The CMS fan-out: each key lands in all 4 rows, at column
+    * md5(row:key) mod w; `keep` columns ride along. */
+  private def cmsCells(keys: DataFrame, w: Long, keep: Column*): DataFrame =
+    keys
+      .select(Seq(col("key")) ++ keep :+
+        explode(array((0 until 4).map(i => lit(i.toLong)): _*)).as("row_idx"): _*)
+      .select(Seq(col("row_idx"),
+        md5Bucket(concat_ws(":", col("row_idx").cast("string"), col("key")), w)
+          .as("col_idx")) ++ keep: _*)
 
   val q145Sql: String =
     """WITH g AS (SELECT CAST(range AS BIGINT) AS row_idx FROM range(4)),
@@ -1913,8 +1915,7 @@ object Analytics {
         round(col("value") * 1000, 0).cast("long").as("v"))
     ev.select(col("event_id"), col("v"),
         explode(sequence(lit(0), lit(31))).as("b"))
-      .withColumn("w", pmod(conv(substring(md5(concat_ws(":",
-        col("event_id"), col("b"))), 1, 15), 16, 10).cast("long"), lit(3L)))
+      .withColumn("w", md5Bucket(concat_ws(":", col("event_id"), col("b")), 3))
       .groupBy(col("b"))
       .agg(sum(col("w")).cast(dec).as("dn"),
         sum(col("w").cast(dec) * col("v").cast(dec)).as("dsum"))

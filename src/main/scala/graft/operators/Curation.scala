@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Bits.{md5Bits, md5Bucket}
 
 /** Corpus-curation operators a production training-data pipeline runs
   * besides dedup/quality (all oracle-checked):
@@ -23,11 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
   import Tables._
-
-  /** 60-bit hash from the leading 15 hex chars of md5 — engine-portable
-    * (same construction as Dedup.simhash's token hash). */
-  private def md5Bucket(c: Column, buckets: Int): Column =
-    pmod(conv(substring(md5(c), 1, 15), 16, 10).cast("long"), lit(buckets.toLong))
 
   /** Deterministic 80/10/10 split keyed on doc_id, reported per source:
     * the assignment is a pure function of the document identity, so any
@@ -616,12 +612,7 @@ object Curation {
         // bounded: exactly 10 rows reach this window
         sum(col("n_new")).over(Window.orderBy(col("decile")))
           .as("cum_distinct"))
-    val regs = ch.select(col("decile"),
-        conv(substring(col("chunk_hash"), 1, 2), 16, 10).cast("long").as("reg"),
-        conv(substring(col("chunk_hash"), 3, 10), 16, 10).cast("long").as("w"))
-      .select(col("decile"), col("reg"),
-        when(col("w") === 0, lit(41L))
-          .otherwise(lit(41L) - length(bin(col("w")))).as("rank"))
+    val regs = Analytics.hllRanks(ch, col("chunk_hash"), col("decile"))
       .groupBy(col("decile"), col("reg"))
       .agg(max(col("rank")).as("mr"))
     val grid = {
@@ -1109,8 +1100,8 @@ object Curation {
   def q148WeightedSample(s: SparkSession, d: String): DataFrame =
     documents(s, d)
       .select(col("doc_id"), col("n_chars"),
-        ((conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") + 1).cast("double") / lit(1.152921504606846976e18))
+        ((md5Bits(col("doc_id").cast("string")) + 1).cast("double") /
+          lit(1.152921504606846976e18))
           .as("u"))
       .select(col("doc_id"), col("n_chars"),
         (log(col("u")) / col("n_chars").cast("double")).as("key"))
@@ -1682,19 +1673,7 @@ object Curation {
     * streaming funnel's frozen-reference compiler
     * (graft.streaming.CurationStream) shares the exact arithmetic. */
   private[graft] def decontamGrams(df: DataFrame): DataFrame =
-    decontamGramsToks(df.withColumn("toks", Dedup.tokensCodegen(col("text"))))
-
-  /** [[decontamGrams]] over an already-tokenized (doc_id, toks) frame —
-    * q222's funnel hands its persisted token arrays in directly so
-    * stage 3 doesn't re-tokenize. */
-  private[graft] def decontamGramsToks(df: DataFrame): DataFrame = df
-    .select(col("doc_id"), explode(expr(
-      "CASE WHEN size(toks) >= 8 THEN " +
-        "transform(sequence(1, size(toks) - 7), " +
-        "j -> conv(substring(md5(concat_ws(' ', slice(toks, j, 8))), " +
-        "1, 15), 16, 10)) ELSE array() END")).as("g"))
-    .select(col("doc_id"), col("g").cast("long").as("gram"))
-    .distinct()
+    Dedup.gramHashes(df.withColumn("toks", Dedup.tokensCodegen(col("text"))), 8)
 
   /** The funnel at DOC grain — (doc_id, source, keep1..keep4), exactly
     * the frame [[q222CurationFunnel]] rolls up per source. Shared by
@@ -1748,7 +1727,8 @@ object Curation {
     val evalGrams = decontamGrams(docs.filter(col("doc_id") % 7 === 0)
         .select(col("doc_id"), col("text")))
       .select(col("gram")).distinct()
-    val contam = decontamGramsToks(trainTok.select(col("doc_id"), col("toks")))
+    // the persisted token arrays go in directly: stage 3 doesn't re-tokenize
+    val contam = Dedup.gramHashes(trainTok.select(col("doc_id"), col("toks")), 8)
       .join(evalGrams.withColumn("hit", lit(1L)), Seq("gram"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Bits.md5Bits
 
 /** Deduplication operators for LLM-training-data pipelines over the
   * documents table: exact (normalize → hash → group), MinHash-LSH
@@ -78,6 +79,18 @@ object Dedup {
     * (size 1 → callers' short-doc fallback branch), matching the
     * oracle semantics of an empty token list joined with ' '. */
   def tokensCodegen(c: Column): Column = call_function("alpha_tokens", c)
+
+  /** Distinct (doc_id, gram = md5_bits of each space-joined n-token
+    * window) rows of a (doc_id, toks) frame. CASE guard, not greatest():
+    * Spark's sequence(1, 0) DESCENDS to [1, 0] (DuckDB's generate_series
+    * yields empty), and j = 0 is an invalid slice start. */
+  private[graft] def gramHashes(df: DataFrame, n: Int): DataFrame = df
+    .select(col("doc_id"), explode(expr(
+      s"CASE WHEN size(toks) >= $n THEN " +
+        s"transform(sequence(1, size(toks) - ${n - 1}), " +
+        s"j -> md5_bits(concat_ws(' ', slice(toks, j, $n)))) " +
+        "ELSE array() END")).as("gram"))
+    .distinct()
 
   /** The regex formulation tokensCodegen replaced — kept as the
     * in-repo reference semantics for the AlphaTokensSpec differential
@@ -650,8 +663,8 @@ object Dedup {
   }
 
   /** Number of SimHash fingerprint bits. 60 rather than 64 so the
-    * per-token hash can be derived from the leading 15 hex chars of md5 —
-    * an engine-portable construction (both Spark and DuckDB have md5, so
+    * per-token hash can be the leading 15 hex chars of md5 (`md5_bits`)
+    * — an engine-portable construction (both Spark and DuckDB have md5, so
     * the whole fingerprint is oracle-checkable; xxhash64 is Spark-only).
     * 60 bits lose nothing for near-dup detection: Hamming distance on a
     * random 60-bit vs 64-bit simhash separates dup/non-dup identically. */
@@ -665,8 +678,13 @@ object Dedup {
   def simhash(docs: DataFrame): DataFrame = {
     // explode + codegen'd SUM aggregates (partial agg map-side)
     // instead of interpreted higher-order lambdas.
-    val hashed = wordRows(docs).select(col("doc_id"),
-      conv(substring(md5(col("w")), 1, 15), 16, 10).cast("long").as("h"))
+    simhashVotes(wordRows(docs).select(col("doc_id"), md5Bits(col("w")).as("h")),
+      "simhash")
+  }
+
+  /** The simhash fold of (doc_id, h) rows: bit b of the (doc_id, `out`)
+    * output is 1 iff more rows have bit b of h set than clear. */
+  private[operators] def simhashVotes(hashed: DataFrame, out: String): DataFrame = {
     val votes = (0 until simhashBits).map { b =>
       sum(shiftright(col("h"), b).bitwiseAND(lit(1L)) * lit(2L) - lit(1L)).as(s"v$b")
     }
@@ -675,7 +693,7 @@ object Dedup {
       .select(col("doc_id"),
         (0 until simhashBits).map { b =>
           when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L))
-        }.reduce(_ + _).as("simhash"))
+        }.reduce(_ + _).as(out))
   }
 
   def q31Simhash(s: SparkSession, d: String): DataFrame =
@@ -1529,8 +1547,7 @@ object Dedup {
       .select(col("source"), explode(array((0 until 32).map(lit): _*)).as("j"),
         col("g"))
       .select(col("source"), col("j"),
-        conv(substring(md5(concat(col("g"), lit("|"),
-          col("j").cast("string"))), 1, 15), 16, 10).cast("long").as("h"))
+        md5Bits(concat(col("g"), lit("|"), col("j").cast("string"))).as("h"))
       .groupBy(col("source"), col("j"))
       .agg(min(col("h")).as("m"))
     val est = sigs.as("a")
@@ -1694,20 +1711,9 @@ object Dedup {
   def q210NgramDecontam(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d).select(col("doc_id"), col("text"), col("source"))
       .withColumn("toks", tokensCodegen(col("text")))
-    // CASE guard, not greatest(): Spark's sequence(1, 0) DESCENDS to
-    // [1, 0] (DuckDB's generate_series yields empty), and j = 0 is an
-    // invalid slice start
-    def grams(df: DataFrame): DataFrame = df
-      .select(col("doc_id"), explode(expr(
-        "CASE WHEN size(toks) >= 8 THEN " +
-          "transform(sequence(1, size(toks) - 7), " +
-          "j -> conv(substring(md5(concat_ws(' ', slice(toks, j, 8))), " +
-          "1, 15), 16, 10)) ELSE array() END")).as("g"))
-      .select(col("doc_id"), col("g").cast("long").as("gram"))
-      .distinct()
-    val evalGrams = grams(docs.filter(col("doc_id") % 7 === 0))
+    val evalGrams = gramHashes(docs.filter(col("doc_id") % 7 === 0), 8)
       .select(col("gram")).distinct()
-    val trainGrams = grams(docs.filter(col("doc_id") % 7 =!= 0))
+    val trainGrams = gramHashes(docs.filter(col("doc_id") % 7 =!= 0), 8)
     val perDoc = trainGrams
       .join(evalGrams.withColumn("hit", lit(1L)), Seq("gram"), "left")
       .groupBy(col("doc_id"))
@@ -1778,18 +1784,10 @@ object Dedup {
       .withColumn("toks", tokensCodegen(col("text")))
       .select(col("doc_id"), col("toks"))
       .localCheckpoint(false) // consumers: one gram pass per n
-    def grams(df: DataFrame, n: Int): DataFrame = df
-      .select(col("doc_id"), explode(expr(
-        s"CASE WHEN size(toks) >= $n THEN " +
-          s"transform(sequence(1, size(toks) - ${n - 1}), " +
-          s"j -> conv(substring(md5(concat_ws(' ', slice(toks, j, $n))), " +
-          "1, 15), 16, 10)) ELSE array() END")).as("g"))
-      .select(col("doc_id"), col("g").cast("long").as("gram"))
-      .distinct()
     Seq(4, 8, 13).map { n =>
-      val ev = grams(docs.filter(col("doc_id") % 7 === 0), n)
+      val ev = gramHashes(docs.filter(col("doc_id") % 7 === 0), n)
         .select(col("gram")).distinct()
-      val perDoc = grams(docs.filter(col("doc_id") % 7 =!= 0), n)
+      val perDoc = gramHashes(docs.filter(col("doc_id") % 7 =!= 0), n)
         .join(ev.withColumn("hit", lit(1L)), Seq("gram"), "left")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_grams"),
@@ -1857,8 +1855,8 @@ object Dedup {
     * partial, nothing corpus×corpus; the fingerprint SET (not built
     * here) is what a downstream index would join on. Documents under
     * w+4 tokens yield no windows and are absent — the document-grain
-    * q28/minhash paths cover short docs. 60-bit md5-prefix hashes (the
-    * q210 convention) keep both engines bit-identical. */
+    * q28/minhash paths cover short docs. 60-bit md5-prefix hashes
+    * ([[graft.functions.Md5Bits]]) keep both engines bit-identical. */
   def q251Winnowing(s: SparkSession, d: String): DataFrame = {
     val g = documents(s, d)
       .select(col("doc_id"), tokensCodegen(col("text")).as("tk"))
@@ -1866,10 +1864,9 @@ object Dedup {
       .select(col("doc_id"), (size(col("tk")) - 7).cast("long").as("n_windows"),
         posexplode(expr(
           "transform(sequence(1, size(tk) - 4), q -> " +
-            "conv(substring(md5(concat_ws(' ', slice(tk, q, 5))), 1, 15), " +
-            "16, 10))")).as(Seq("pos", "hs")))
+            "md5_bits(concat_ws(' ', slice(tk, q, 5))))")).as(Seq("pos", "h")))
       .select(col("doc_id"), col("n_windows"),
-        (col("pos") + 1).cast("long").as("p"), col("hs").cast("long").as("h"))
+        (col("pos") + 1).cast("long").as("p"), col("h"))
       .localCheckpoint(false) // consumers: membership ×2 + hash lookup
     val memb = g.select(col("doc_id"), col("n_windows"), col("p"), col("h"),
         explode(expr("sequence(greatest(p - 3, 1L), least(p, n_windows))"))
@@ -1937,7 +1934,7 @@ object Dedup {
     * cross-engine, so the hashing convention, the min fold, and the
     * agreement count are all gated. Production signatures use the
     * native `minhash_bands` kernel; this referee recomputes them in
-    * portable md5 ("i:gram", 60-bit prefix — the q210 convention)
+    * portable md5 ("i:gram", 60-bit prefix — [[graft.functions.Md5Bits]])
     * because the gate needs DuckDB to derive the identical signature.
     *
     * Scale shape: grams × 16 seeds (linear, the referee's cost) →
@@ -1968,8 +1965,7 @@ object Dedup {
     val seeds = (0 until 16).toDF("i")
     val sig = capped.crossJoin(broadcast(seeds))
       .select(col("doc_id"), col("i"),
-        expr("CAST(conv(substring(md5(concat(i, ':', g)), 1, 15), 16, 10) " +
-          "AS BIGINT)").as("h"))
+        md5Bits(concat(col("i"), lit(":"), col("g"))).as("h"))
       .groupBy(col("doc_id"), col("i")).agg(min(col("h")).as("mh"))
     val sizes = capped.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val pairs = capped.select(col("doc_id").as("id_a"), col("g"))

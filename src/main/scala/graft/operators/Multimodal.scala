@@ -211,17 +211,8 @@ object Multimodal {
           s"div ${strideBytes * 2} AS INT)), " +
           s"i -> substring(hx, i * ${strideBytes * 2} + 1, ${gramBytes * 2}))"))
         .as("g"))
-    val hashed = grams.select(col("doc_id"),
-      conv(substring(md5(col("g")), 1, 15), 16, 10).cast("long").as("h"))
-    val votes = (0 until fpBits).map { b =>
-      sum(shiftright(col("h"), b).bitwiseAND(lit(1L)) * lit(2L) - lit(1L)).as(s"v$b")
-    }
-    hashed.groupBy(col("doc_id"))
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"),
-        (0 until fpBits).map { b =>
-          when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L))
-        }.reduce(_ + _).as("fp"))
+    Dedup.simhashVotes(grams.select(col("doc_id"),
+      conv(substring(md5(col("g")), 1, 15), 16, 10).cast("long").as("h")), "fp")
   }
 
   /** Hamming-radius-3 near-dup pairs over (doc_id, fp) fingerprints via

@@ -1140,14 +1140,11 @@ object Similarity {
     * trivially cross-engine identical AND a genuine data-independent
     * random projection (Achlioptas 2003 shows ±1 entries suffice for
     * the JL guarantee). */
-  private[operators] lazy val jlSigns: Array[Array[Int]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+  private[operators] lazy val jlSigns: Array[Array[Int]] =
     Array.tabulate(16, 64) { (i, j) =>
-      val hex = md.digest(s"$i:$j".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(15)
-      if (java.lang.Long.parseLong(hex, 16) % 2 == 0) 1 else -1
+      val h = graft.functions.Md5Bits.bits(s"$i:$j".getBytes("UTF-8"))
+      if (h % 2 == 0) 1 else -1
     }
-  }
 
   /** JOHNSON–LINDENSTRAUSS SIGN PROJECTION + SELF-RECALL EVAL — the
     * embedding-compression operator a retrieval pipeline runs before

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan}
 
 /** SKETCH-DRIVEN JOIN PLANNING — the consumer of q204's CMS
   * join-cardinality estimator (round-11 verdict task 3): price every
@@ -906,23 +907,16 @@ object SketchPlanner {
       .agg(count(lit(1)).as("n_rows"),
         sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast("decimal(18,4)")).cast("double").as("revenue"))
-    val flag = graft.plans.RewriteChainJoin.FLAG
-    val prior = s.conf.getOption(flag)
-    s.conf.set(flag, "true")
-    val optimized =
-      try star.queryExecution.optimizedPlan
-      finally prior match {
-        case Some(v) => s.conf.set(flag, v)
-        case None => s.conf.unset(flag)
-      }
-    val hinted = optimized.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join
-          if j.hint != org.apache.spark.sql.catalyst.plans.logical.JoinHint.NONE => j
+    org.apache.spark.sql.GraftSqlBridge.optimizedWithFlag(star,
+        graft.plans.RewriteChainJoin.FLAG) { optimized =>
+      require(hasJoinHint(optimized),
+        "the star rewrite did not fire: no broadcast hints in the plan")
     }
-    require(hinted.nonEmpty,
-      "the star rewrite did not fire: no broadcast hints in the plan")
-    org.apache.spark.sql.GraftSqlBridge.ofRows(s, optimized)
   }
+
+  /** Did the chain-reorder rule leave a join hint anywhere in `plan`? */
+  private def hasJoinHint(plan: LogicalPlan): Boolean =
+    plan.exists { case j: Join => j.hint != JoinHint.NONE; case _ => false }
 
   val q248Sql: String =
     """SELECT o_orderstatus, count(*) AS n_rows,
@@ -964,22 +958,11 @@ object SketchPlanner {
       .agg(count(lit(1)).as("n_rows"),
         sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast("decimal(18,4)")).cast("double").as("revenue"))
-    val flag = graft.plans.RewriteChainJoin.FLAG
-    val prior = s.conf.getOption(flag)
-    s.conf.set(flag, "true")
-    val optimized =
-      try q.queryExecution.optimizedPlan
-      finally prior match {
-        case Some(v) => s.conf.set(flag, v)
-        case None => s.conf.unset(flag)
-      }
-    val hinted = optimized.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join
-          if j.hint != org.apache.spark.sql.catalyst.plans.logical.JoinHint.NONE => j
+    org.apache.spark.sql.GraftSqlBridge.optimizedWithFlag(q,
+        graft.plans.RewriteChainJoin.FLAG) { optimized =>
+      require(hasJoinHint(optimized),
+        "the snowflake rewrite did not fire: no broadcast hints in the plan")
     }
-    require(hinted.nonEmpty,
-      "the snowflake rewrite did not fire: no broadcast hints in the plan")
-    org.apache.spark.sql.GraftSqlBridge.ofRows(s, optimized)
   }
 
   val q262Sql: String =
@@ -1023,24 +1006,16 @@ object SketchPlanner {
       .agg(count(lit(1)).as("n_rows"),
         sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast("decimal(18,4)")).cast("double").as("revenue"))
-    val flag = graft.plans.RewriteChainJoin.FLAG
-    val prior = s.conf.getOption(flag)
-    s.conf.set(flag, "true")
-    val optimized =
-      try q.queryExecution.optimizedPlan
-      finally prior match {
-        case Some(v) => s.conf.set(flag, v)
-        case None => s.conf.unset(flag)
+    org.apache.spark.sql.GraftSqlBridge.optimizedWithFlag(q,
+        graft.plans.RewriteChainJoin.FLAG) { optimized =>
+      val bushy = optimized.collect {
+        case j: Join
+            if j.left.collectFirst { case i: Join => i }.isDefined &&
+               j.right.collectFirst { case i: Join => i }.isDefined => j
       }
-    import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
-    val bushy = optimized.collect {
-      case j: LJoin
-          if j.left.collectFirst { case i: LJoin => i }.isDefined &&
-             j.right.collectFirst { case i: LJoin => i }.isDefined => j
+      require(bushy.nonEmpty,
+        "the bushy rewrite did not fire: no join-of-joins in the plan")
     }
-    require(bushy.nonEmpty,
-      "the bushy rewrite did not fire: no join-of-joins in the plan")
-    org.apache.spark.sql.GraftSqlBridge.ofRows(s, optimized)
   }
 
   val q267Sql: String =

@@ -5,6 +5,7 @@ import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Bits.{md5Bits, md5Bucket}
 
 /** Source/sink breadth under the driver gate (not just under specs):
   *
@@ -255,8 +256,7 @@ object Storage {
   def q144CompactionPlan(s: SparkSession, d: String): DataFrame = {
     val files = documents(s, d)
       .groupBy(col("source"),
-        pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-          .cast("long"), lit(8L)).as("file_id"))
+        md5Bucket(col("doc_id").cast("string"), 8).as("file_id"))
       .agg(sum(col("n_chars")).as("bytes"), count(lit(1)).as("n_docs"))
     val w = Window.partitionBy(col("source")).orderBy(col("file_id"))
     files
@@ -356,8 +356,7 @@ object Storage {
       when(c.isNull, lit("N"))
         .otherwise(concat(lit("V"), length(c).cast("string"), lit(":"), c))
     def dig(df: DataFrame, name: String, cols: Seq[org.apache.spark.sql.Column]) =
-      df.select(conv(substring(md5(concat_ws("|", cols.map(f): _*)), 1, 15), 16, 10)
-          .cast("long").as("h"))
+      df.select(md5Bits(concat_ws("|", cols.map(f): _*)).as("h"))
         .agg(lit(name).as("tbl"), count(lit(1)).as("n_rows"),
           expr("bit_xor(h)").as("digest"))
     dig(orders(s, d), "orders", Seq(
@@ -443,10 +442,8 @@ object Storage {
       .select(col("l_shipdate"),
         expr("CAST((rnk - 1) * 64 div n AS BIGINT)").as("file"))
     val hashed = li.select(col("l_shipdate"),
-      pmod(conv(substring(md5(concat_ws(":",
-          col("l_orderkey").cast("string"),
-          col("l_linenumber").cast("string"))), 1, 15), 16, 10)
-        .cast("long"), lit(64L)).as("file"))
+      md5Bucket(concat_ws(":", col("l_orderkey").cast("string"),
+        col("l_linenumber").cast("string")), 64).as("file"))
     def census(rows: DataFrame, layout: String): DataFrame =
       rows.groupBy(col("file"))
         .agg(min(col("l_shipdate")).as("lo_d"),
@@ -1867,7 +1864,7 @@ object Storage {
       .groupBy(month(col("ship_date")).as("mth"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))
-    autoPruned(s, probe, totalFiles = 64)
+    autoPruned(probe, totalFiles = 64)
   }
 
   val q247Sql: String =
@@ -1879,30 +1876,22 @@ object Storage {
       |GROUP BY 1""".stripMargin
 
   /** Shared q247-pattern harness: optimize `probe` with the automatic
-    * pruning rule scoped to THIS optimization (flag set, plan frozen,
-    * flag restored), `require` the pruned file index actually shrank
-    * below `totalFiles` (an inert rule must FAIL the gate), return the
-    * frozen plan as a DataFrame. */
-  private def autoPruned(s: SparkSession, probe: DataFrame,
-      totalFiles: Int): DataFrame = {
-    val prior = s.conf.getOption(graft.plans.ZonemapPruneRule.FLAG)
-    s.conf.set(graft.plans.ZonemapPruneRule.FLAG, "true")
-    val optimized =
-      try probe.queryExecution.optimizedPlan
-      finally prior match {
-        case Some(v) => s.conf.set(graft.plans.ZonemapPruneRule.FLAG, v)
-        case None => s.conf.unset(graft.plans.ZonemapPruneRule.FLAG)
-      }
-    val scannedFiles = optimized.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.inputFiles.length
-    }.sum
-    require(scannedFiles > 0 && scannedFiles < totalFiles,
-      s"automatic zone-map pruning did not fire: $scannedFiles of $totalFiles files")
-    org.apache.spark.sql.GraftSqlBridge.ofRows(s, optimized)
-  }
+    * pruning rule scoped to THIS optimization
+    * (`GraftSqlBridge.optimizedWithFlag`), `require` the pruned file index
+    * actually shrank below `totalFiles` (an inert rule must FAIL the
+    * gate), return the frozen plan as a DataFrame. */
+  private def autoPruned(probe: DataFrame, totalFiles: Int): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.optimizedWithFlag(probe,
+        graft.plans.ZonemapPruneRule.FLAG) { optimized =>
+      val scannedFiles = optimized.collect {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          lr.relation.asInstanceOf[
+            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+            .location.inputFiles.length
+      }.sum
+      require(scannedFiles > 0 && scannedFiles < totalFiles,
+        s"automatic zone-map pruning did not fire: $scannedFiles of $totalFiles files")
+    }
 
   /** The WIDENED extraction under the gate (round-15 verdict task 4):
     * a date IN-LIST through a plain `read.filter(isin(...))` over the
@@ -1918,7 +1907,7 @@ object Storage {
       .groupBy(col("ship_date"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))
-    autoPruned(s, probe, totalFiles = 64)
+    autoPruned(probe, totalFiles = 64)
   }
 
   val q260Sql: String =
@@ -1949,7 +1938,7 @@ object Storage {
       .filter(col("source") >= "src12" && col("source") <= "src14")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-    autoPruned(s, probe, totalFiles = 16)
+    autoPruned(probe, totalFiles = 16)
   }
 
   val q261Sql: String =
@@ -2064,7 +2053,7 @@ object Storage {
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
           .as("sum_price"))
-    autoPruned(s, probe, totalFiles = 32)
+    autoPruned(probe, totalFiles = 32)
   }
 
   val q265Sql: String =
@@ -2101,7 +2090,7 @@ object Storage {
       .groupBy(col("ev_date"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-    autoPruned(s, probe, totalFiles = total)
+    autoPruned(probe, totalFiles = total)
   }
 
   val q266Sql: String =
@@ -2137,7 +2126,7 @@ object Storage {
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
           .as("sum_price"))
-    autoPruned(s, probe, totalFiles = 32)
+    autoPruned(probe, totalFiles = 32)
   }
 
   val q268Sql: String =
@@ -2181,7 +2170,7 @@ object Storage {
       .groupBy(col("ev_date"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-    autoPruned(s, probe, totalFiles = 32)
+    autoPruned(probe, totalFiles = 32)
   }
 
   val q269Sql: String =
@@ -2218,7 +2207,7 @@ object Storage {
       .agg(count(lit(1)).as("n_rows"),
         sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double")
           .as("sum_price"))
-    autoPruned(s, probe, totalFiles = 64)
+    autoPruned(probe, totalFiles = 64)
   }
 
   val q270Sql: String =
@@ -2257,7 +2246,7 @@ object Storage {
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
           .as("sum_price"))
-    autoPruned(s, probe, totalFiles = 32)
+    autoPruned(probe, totalFiles = 32)
   }
 
   val q271Sql: String =
@@ -2308,7 +2297,7 @@ object Storage {
       .agg(count(lit(1)).as("n_rows"),
         sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double")
           .as("sum_price"))
-    autoPruned(s, probe, totalFiles = 8)
+    autoPruned(probe, totalFiles = 8)
   }
 
   val q272Sql: String =
@@ -2354,7 +2343,7 @@ object Storage {
       .agg(count(lit(1)).as("n_rows"),
         sum(col("big_value").cast("decimal(18,2)")).cast("double")
           .as("sum_big"))
-    autoPruned(s, probe, totalFiles = 16)
+    autoPruned(probe, totalFiles = 16)
   }
 
   val q273Sql: String =
@@ -2374,7 +2363,7 @@ object Storage {
       .filter(col("big_value").isNull)
       .groupBy(pmod(col("user_id"), lit(8L)).as("ubucket"))
       .agg(count(lit(1)).as("n_rows"))
-    autoPruned(s, probe, totalFiles = 16)
+    autoPruned(probe, totalFiles = 16)
   }
 
   val q274Sql: String =

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Bits.md5Bits
 
 /** Text-analysis operators for a training-data pipeline over documents:
   * quality scoring (q24), n-gram counting (q25), TF-IDF (q26),
@@ -765,7 +766,7 @@ object TextAnalysis {
     * self-pairs excluded, the graph undirected. A composition proof:
     * the tokenizer (q25's adjacency idiom) feeds [[Graph.pagerank]]'s
     * integer fixed-point power iteration UNCHANGED — words become
-    * 60-bit nodes via the md5-prefix idiom, so the walk is the same
+    * 60-bit nodes via `md5_bits` ([[graft.functions.Md5Bits]]), so the walk is the same
     * bit-identical BIGINT computation q81 gates.
     *
     * Scale shape: one tokenize pass → DISTINCT normalized pairs
@@ -775,8 +776,6 @@ object TextAnalysis {
     * top-20 with the word labels joined on the node id. The rank
     * frame, not the corpus, flows through the iterations. */
   def q196Textrank(s: SparkSession, d: String): DataFrame = {
-    def nid(c: Column): Column =
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
     val stop = stopwords
     val pairs = documents(s, d)
       .withColumn("ws", Dedup.tokensCodegen(col("text")))
@@ -791,11 +790,11 @@ object TextAnalysis {
         greatest(col("wa"), col("wb")).as("b"))
       .distinct()
       .localCheckpoint(false) // two consumers: edges + label table
-    val edges = pairs.select(nid(col("a")).as("src"), nid(col("b")).as("dst"))
-      .unionAll(pairs.select(nid(col("b")).as("src"), nid(col("a")).as("dst")))
+    val edges = pairs.select(md5Bits(col("a")).as("src"), md5Bits(col("b")).as("dst"))
+      .unionAll(pairs.select(md5Bits(col("b")).as("src"), md5Bits(col("a")).as("dst")))
     val labels = pairs.select(col("a").as("word"))
       .union(pairs.select(col("b").as("word"))).distinct()
-      .select(col("word"), nid(col("word")).as("node"))
+      .select(col("word"), md5Bits(col("word")).as("node"))
     Graph.pagerank(edges)
       .join(labels, Seq("node"))
       .orderBy(col("rank_e12").desc, col("word"))

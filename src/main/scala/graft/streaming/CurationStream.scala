@@ -197,7 +197,8 @@ object CurationStream {
         val grams: Set[Long] =
           if (toks.length < 8) Set.empty
           else (0 to toks.length - 8).iterator
-            .map(j => gramHash(toks.slice(j, j + 8).mkString(" "))).toSet
+            .map(j => graft.functions.Md5Bits.bits(
+              toks.slice(j, j + 8).mkString(" ").getBytes("UTF-8"))).toSet
         val hits = grams.count(r.evalGrams.contains).toLong
         val contaminated = grams.nonEmpty && hits * 10 >= grams.size.toLong
         // stage 4 ingredient — frozen-KN score, q212's exact arithmetic;
@@ -219,15 +220,6 @@ object CurationStream {
         }
         FunnelIn(id, ts, src, bkey, keep1, contaminated, scored, sFp)
       }
-  }
-
-  /** 60-bit md5-prefix hash of a gram string — q222's
-    * `conv(substring(md5(g), 1, 15), 16, 10)` in Scala. */
-  private def gramHash(g: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(g.getBytes("UTF-8"))
-      .map(b => f"${b & 0xff}%02x").mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
   /** First-wins text-hash claims carrying the full enriched row: a

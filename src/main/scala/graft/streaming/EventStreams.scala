@@ -48,14 +48,9 @@ object EventStreams {
     *
     * Input contract: (ts timestamp, user_id). */
   def hourlyHll(events: DataFrame): DataFrame =
-    events
-      .select(col("ts"), md5(col("user_id").cast("string")).as("hx"))
-      .select(col("ts"),
-        conv(substring(col("hx"), 1, 2), 16, 10).cast("long").as("reg"),
-        conv(substring(col("hx"), 3, 10), 16, 10).cast("long").as("w0"))
-      .select(col("ts"), col("reg"),
-        when(col("w0") === 0, lit(41L))
-          .otherwise(lit(41L) - length(bin(col("w0")))).as("rank"))
+    graft.operators.Analytics.hllRanks(
+        events.select(col("ts"), md5(col("user_id").cast("string")).as("hx")),
+        col("hx"), col("ts"))
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("reg"))
       .agg(max(col("rank")).cast("long").as("max_rank"))

@@ -15,22 +15,12 @@ object SharedSpark {
       .config("spark.sql.shuffle.partitions", "8")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    graft.functions.FnvHash.register(s)
-    graft.functions.TextTokens.register(s)
-    graft.functions.VecMath.register(s)
-    graft.functions.MinhashBands.register(s)
-    graft.functions.ZorderBits.register(s)
-    graft.functions.BloomFilterFns.register(s)
-    graft.functions.PayloadSimhash.register(s)
-    graft.functions.ChunkStats.register(s)
-    // Mirror GraftSession.getOrCreate: the driver-run session always has
-    // the plan extensions installed, so pins must assert the plans users
-    // actually get. Installing here (not lazily inside whichever suite
-    // first touches topKPerGroup) also makes plan shapes independent of
-    // suite execution order. ChainReorder stays conf-gated (default off).
-    graft.plans.GroupTopKExtension.install(s)
-    graft.plans.ChainReorderExtension.install(s)
-    graft.plans.ZonemapPruneExtension.install(s)
+    // The kernels and plan extensions of every GraftSession.getOrCreate
+    // session, installed here (not lazily inside whichever suite first
+    // needs them) so plan pins assert the plans users actually get,
+    // independent of suite order. ChainReorder and ZonemapPrune stay
+    // conf-gated (default off).
+    GraftSession.install(s)
     s
   }
 

@@ -31,6 +31,62 @@ class FunctionsSpec extends SparkSpec {
     assert(df.selectExpr("sum(h)").as[Long].head() > 0)
   }
 
+  /** The builtin chain `md5_bits` replaces, over SQL expression `x`. */
+  private def md5Chain(x: String): String =
+    s"CAST(conv(substring(md5($x), 1, 15), 16, 10) AS BIGINT)"
+
+  private val md5Strings: Seq[Option[String]] = {
+    val rnd = new scala.util.Random(31)
+    val edges = Seq("", " ", "a", "café", "日本語", "\u0000", "😀 emoji", "x" * 1000)
+    val random = (0 until 10000).map { i =>
+      val len = rnd.nextInt(40)
+      i % 3 match {
+        case 0 => rnd.alphanumeric.take(len).mkString
+        case 1 => Gen.asciiPrintableStr.pureApply(Gen.Parameters.default, Seed(9000L + i))
+        case _ => rnd.nextString(len) // arbitrary UTF-16, non-ASCII heavy
+      }
+    }
+    (edges ++ random).map(Some(_)) :+ None
+  }
+
+  test("md5_bits equals the md5 hex-substring-conv chain, inside whole-stage codegen") {
+    // an RDD scan (not a LocalTableScan of literals) keeps the Project codegen'd
+    val df = spark.sparkContext.parallelize(md5Strings, 4).toDF("k")
+      .selectExpr("k", "md5_bits(k) AS got", s"${md5Chain("k")} AS want")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.linesIterator.exists(l =>
+      l.trim.startsWith("*(") && l.contains("md5_bits")), plan)
+    val rows = df.as[(Option[String], Option[Long], Option[Long])].collect()
+    assert(rows.length === md5Strings.length)
+    rows.foreach { case (k, got, want) =>
+      assert(got === want, s"key=$k")
+      // the Scala kernel is the same function
+      assert(got === k.map(s => Md5Bits.bits(s.getBytes("UTF-8"))), s"key=$k")
+    }
+    assert(rows.count(_._2.isEmpty) === 1) // only the NULL key
+  }
+
+  test("md5_bits hashes binary input like md5 does") {
+    val rnd = new scala.util.Random(37)
+    val blobs = Seq(Array.emptyByteArray, Array[Byte](0), Array[Byte](-1, 0, 127, -128)) ++
+      (0 until 500).map(_ => Array.fill(rnd.nextInt(64))(rnd.nextInt(256).toByte))
+    val rows = spark.sparkContext.parallelize(blobs, 2).toDF("b")
+      .selectExpr("md5_bits(b)", md5Chain("b"))
+      .as[(Long, Long)].collect()
+    assert(rows.length === blobs.length)
+    rows.foreach { case (got, want) => assert(got === want) }
+  }
+
+  test("md5_bits equals the chain inside a transform lambda (interpreted path)") {
+    val arrays = md5Strings.grouped(50).map(_.map(_.orNull)).toSeq
+    val df = spark.sparkContext.parallelize(arrays, 4).toDF("ks")
+      .selectExpr("transform(ks, x -> md5_bits(x)) AS got",
+        s"transform(ks, x -> ${md5Chain("x")}) AS want")
+    val rows = df.as[(Seq[Option[Long]], Seq[Option[Long]])].collect()
+    assert(rows.map(_._1.length).sum === md5Strings.length)
+    rows.foreach { case (got, want) => assert(got === want) }
+  }
+
   test("zorder_bits interleaves bit-exactly and stays inside codegen") {
     ZorderBits.register(spark)
     // closed-form points: x fills even bit positions, y odd

@@ -1091,6 +1091,27 @@ class PlanAuditSpec extends SparkSpec {
     assert(offending.isEmpty, offending.mkString("\n"))
   }
 
+  test("the 60-bit md5 prefix is md5_bits everywhere but its one builtin referee") {
+    // Every md5 → 15-hex-char substring → conv chain under src/main goes
+    // through graft.functions.Md5Bits. The one sanctioned copy is
+    // Multimodal.payloadFingerprintsAgg: PayloadSimhashSpec compares the
+    // payload_simhash kernel against that builtin form.
+    import scala.jdk.CollectionConverters._
+    val chain = """conv\(\s*substr(ing)?\(\s*md5\(""".r
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = java.nio.file.Files.readString(p)
+        chain.findAllMatchIn(src).map { m =>
+          val owner = "\n  def (\\w+)".r.findAllMatchIn(src.take(m.start))
+            .toSeq.lastOption.map(_.group(1)).getOrElse("")
+          s"${p.getFileName}:$owner"
+        }
+      }.toSeq
+    assert(hits === Seq("Multimodal.scala:payloadFingerprintsAgg"), hits.mkString("\n"))
+  }
+
   test("q233: single-table residuals of the three-way OR are pushed to BOTH parquet scans") {
     val plan = planOf(Relational.q233DisjunctiveScan(spark, d))
     // lineitem side: the derived quantity-range disjunction reaches the scan
