@@ -1,15 +1,17 @@
 package graft.mr
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 
 /** Format-compat differentials against the reference's committed run
   * artifacts: our reduce phase over ITS intermediate shuffle files must
-  * reproduce ITS final output. */
+  * reproduce ITS final output (cancelled where the reference checkout is
+  * absent, `Reference.assumePresent`). */
 class CompatSpec extends SparkSpec {
-  private val refMain = "/root/reference/src/main"
+  private val refMain = Reference.main
 
   test("our reduce phase over the reference's committed intermediate files reproduces its golden output") {
     // The reference run left 80 NDJSON shuffle files mr-out-<m>-<r>.json
@@ -17,6 +19,7 @@ class CompatSpec extends SparkSpec {
     // group-scan, reduce — exactly PerformOp's reduce path
     // (src/mr/worker.go:161-216) — and diff against golden mr-out-<r>.
     (0 until 10).foreach { r =>
+      Reference.assumePresent(Reference.intermediates(r) :+ Reference.golden(r))
       val kvs = Compat.readIntermediate(spark, s"$refMain/mr-out-*-$r.json")
       val pairs = kvs.rdd.map(kv => (kv.Key, kv.Value)).repartition(1)
         .sortBy(identity)
@@ -44,12 +47,40 @@ class CompatSpec extends SparkSpec {
     assert(line.exists(l => l.startsWith("{\"Key\":\"eBook\",\"Value\":\"1\"")), line)
   }
 
+  /** A deterministic stand-in for a Gutenberg text, ~139 KB like
+    * pg-being_ernest.txt (FIXTURES.md §1), so both readers cross their
+    * 64 KiB read buffers: a leading UTF-8 BOM, CRLF line ends with some
+    * bare LF, multi-byte UTF-8, and no trailing newline. */
+  private def gutenbergLike(path: Path): Path = {
+    val words = Seq("The", "Importance", "of", "Being", "Earnest", "café",
+      "naïve", "日本語", "—", "Algernon", "Gwendolen", "“cucumber”", "sandwiches")
+    val rnd = new scala.util.Random(42)
+    val sb = new StringBuilder("\uFEFF")
+    var bytes = 0
+    var i = 0
+    while (bytes < 139 * 1024) {
+      val line = Seq.fill(4 + rnd.nextInt(10))(words(rnd.nextInt(words.length)))
+        .mkString(" ") + (if (i % 9 == 8) "\n" else "\r\n")
+      sb ++= line
+      bytes += line.getBytes(StandardCharsets.UTF_8).length
+      i += 1
+    }
+    sb ++= "END OF THE PROJECT GUTENBERG EBOOK"
+    Files.write(path, sb.toString.getBytes(StandardCharsets.UTF_8))
+  }
+
   test("whole-text DataFrame source equals wholeTextFiles records") {
-    val viaDF = Compat.wholeTextDF(spark, s"$refMain/pg-being_ernest.txt").collect()
-    val viaRDD = spark.sparkContext
-      .wholeTextFiles(s"$refMain/pg-being_ernest.txt").collect()
-    assert(viaDF.length === 1 && viaRDD.length === 1)
-    assert(Workloads.baseName(viaDF.head._1) === "pg-being_ernest.txt")
-    assert(viaDF.head._2 === viaRDD.head._2)
+    val own = gutenbergLike(
+      Files.createTempDirectory("mr-wholetext").resolve("pg-being_ernest.txt"))
+    // the file written above, then each reference book that exists
+    val books = Reference.corpus.filter(Reference.present)
+      .map(p => p -> Paths.get(p).getFileName.toString)
+    ((own.toString -> "pg-being_ernest.txt") +: books).foreach { case (path, name) =>
+      val viaDF = Compat.wholeTextDF(spark, path).collect()
+      val viaRDD = spark.sparkContext.wholeTextFiles(path).collect()
+      assert(viaDF.length === 1 && viaRDD.length === 1)
+      assert(Workloads.baseName(viaDF.head._1) === name)
+      assert(viaDF.head._2 === viaRDD.head._2)
+    }
   }
 }

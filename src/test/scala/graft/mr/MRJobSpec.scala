@@ -9,16 +9,18 @@ import graft.SparkSpec
   * golden run artifacts (reference: src/main/mr-out-0..9, produced by an
   * 8-map x 10-reduce wc job over the pg-*.txt corpus; comparison is
   * order-insensitive over concatenated output exactly like
-  * src/main/test-mr.sh:90-98). */
+  * src/main/test-mr.sh:90-98). The golden differentials are cancelled
+  * where the reference checkout is absent (`Reference.assumePresent`). */
 class MRJobSpec extends SparkSpec {
 
-  private val refMain = "/root/reference/src/main"
+  private val refMain = Reference.main
   private def goldenLines: Seq[String] =
     (0 until 10).flatMap { i =>
       Files.readAllLines(Paths.get(s"$refMain/mr-out-$i")).asScala
     }
 
   test("wc over the reference corpus matches the committed golden output (22,107 keys)") {
+    Reference.assumePresent(Reference.corpus ++ Reference.goldens)
     val got = MRJob.runToLines(spark, s"$refMain/pg-*.txt",
       Workloads.wcMap, Workloads.wcReduce, nReduce = 10)
     val want = goldenLines
@@ -32,6 +34,7 @@ class MRJobSpec extends SparkSpec {
     // Stronger than global equality: partition r of our job must hold
     // exactly the keys of the reference's mr-out-r, proving ihash parity
     // (reference: src/mr/worker.go:31-35,128-131).
+    Reference.assumePresent(Reference.corpus ++ Reference.goldens)
     val perPart = MRJob
       .onPairs(MRJob.mapFiles(spark, s"$refMain/pg-*.txt", Workloads.wcMap),
         Workloads.wcReduce, nReduce = 10)
@@ -51,6 +54,21 @@ class MRJobSpec extends SparkSpec {
       val h = MRJob.ihash(s)
       assert(h >= 0)
       assert(h === MRJob.ihash(s)) // deterministic
+    }
+  }
+
+  test("ihash equals published FNV-1a 32-bit vectors, masked to 31 bits") {
+    // Noll's FNV test suite / draft-eastlake-fnv, masked with & 0x7fffffff
+    // as the reference does (src/mr/worker.go:31-35).
+    val vectors = Seq(
+      ""       -> (0x811c9dc5, 18652613),
+      "a"      -> (0xe40c292c, 1678518572),
+      "foobar" -> (0xbf9cf968, 1067252072))
+    val part = new FnvPartitioner(10)
+    vectors.foreach { case (s, (fnv1a, masked)) =>
+      assert((fnv1a & 0x7fffffff) === masked, s)
+      assert(MRJob.ihash(s) === masked, s)
+      assert(part.getPartition(s) === MRJob.ihash(s) % 10, s)
     }
   }
 

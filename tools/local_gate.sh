@@ -3,7 +3,9 @@
 #
 #   bash tools/local_gate.sh [sfDir]
 #
-#   1. sbt test            — all ScalaTest suites
+#   1. sbt test            — all ScalaTest suites (the reference golden
+#                            differentials are cancelled without
+#                            /root/reference/src/main; a note says so)
 #   2. Verify + DuckDB     — full-registry oracle gate (tools/check_oracle.py,
 #                            incl. the dtype gate + pandas-mirror hash)
 #   3. plan drift          — fresh DumpPlans vs committed PLANS.md
@@ -22,6 +24,9 @@ SF=${1:-/root/testdata/sf0.01}
 
 echo "=== [1/4] sbt test ==="
 sbt -batch test
+# sbt exits 0 on cancelled tests, so say when the goldens did not run
+[ -d /root/reference/src/main ] || echo "note: /root/reference/src/main is absent;" \
+  "the three reference golden differentials (MRJobSpec x2, CompatSpec x1) were cancelled"
 
 echo "=== [2/4] oracle gate at $SF ==="
 rm -rf /tmp/gate_verify
