@@ -22,9 +22,15 @@ package graft
   * the MEDIAN: this VM shows ±2-3× transient contention, and one-shot
   * numbers have repeatedly mislead (r03's 28.4 s q50 artifact re-measured
   * at a 4.7 s median). The first rep also absorbs the query's codegen
-  * compilation, so the median reflects steady-state execution.
+  * compilation, so the median reflects steady-state execution. That
+  * holds only while the query's generated classes stay in Spark's
+  * codegen cache, so the classes compiled during reps 2..n are counted,
+  * and each query that compiled any is named in a `[bench]` stderr line.
   */
 object Bench {
+  private def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
@@ -45,7 +51,9 @@ object Bench {
     val results: Seq[(String, Either[String, Double])] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         try {
-          val times = (1 to reps).map { _ =>
+          var steadyFrom = 0L
+          val times = (1 to reps).map { rep =>
+            if (rep == 2) steadyFrom = codegenCompiles()
             // Each rep measured from a clean cache: operators that persist
             // intermediate data (LSH grams/signatures) must pay their own
             // cache-build cost, and earlier reps' cached blocks must not
@@ -60,6 +68,11 @@ object Bench {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             (System.nanoTime() - t0) / 1e9
           }.sorted
+          if (reps > 1) {
+            val recompiled = codegenCompiles() - steadyFrom
+            if (recompiled > 0) System.err.println(
+              s"[bench] $name compiled $recompiled codegen classes after its first rep")
+          }
           // true median (mean of the middle pair when reps is even)
           name -> Right(
             if (times.size % 2 == 1) times(times.size / 2)

@@ -227,16 +227,19 @@ object DumpPlans {
         "one tokenize into a checkpointed (source, word) grain feeding " +
           "three totals; WindowGroupLimit bounds the per-source rank"))
     // Expression ids (#38583) and plan ids accumulate across the session,
-    // so two dumps of the SAME plan differ textually and — worse — shift
-    // the truncation cutoffs below, which would make tools/plan_drift.py
-    // flag unrelated queries whenever an earlier query's plan grows.
-    // Normalize BEFORE truncating: regenerated PLANS.md then diffs only
-    // where a plan actually changed shape.
+    // so two dumps of the SAME plan differ textually. Normalize them away:
+    // regenerated PLANS.md then diffs only where a plan actually changed.
     def norm(s: String): String = s
       .replaceAll("#\\d+", "#x")
       .replaceAll("plan_id=\\d+", "plan_id=x")
       .replaceAll("cachedrdd-\\d+", "cachedrdd-x")
       .replaceAll("graft-gate/local-\\d+", "graft-gate/local-x")
+    // Long plans are cut by plan lines, never by characters: a cut by
+    // characters moves with the printed length of expressions, so
+    // shortening an expression's text alone would change the token
+    // signature tools/plan_drift.py pins.
+    def firstLines(s: String, n: Int): String =
+      s.linesIterator.take(n).mkString("\n")
     val sb = new StringBuilder
     sb.append("# PLANS — final physical plans of the headline queries\n\n")
     sb.append("Generated by `graft.DumpPlans` at sf0.001 (plan shapes are SF-invariant;\n")
@@ -246,7 +249,7 @@ object DumpPlans {
       val buf = new ByteArrayOutputStream()
       Console.withOut(new PrintStream(buf)) { df.explain("formatted") }
       sb.append(s"\n## $name\n\n_${note}_\n\n```\n")
-      sb.append(norm(buf.toString).take(6000))
+      sb.append(firstLines(norm(buf.toString), 160))
       sb.append("\n```\n")
     }
     // FULL COVERAGE (round-10 verdict task): every registered query not
@@ -266,7 +269,7 @@ object DumpPlans {
           val buf = new ByteArrayOutputStream()
           Console.withOut(new PrintStream(buf)) { df.explain("simple") }
           sb.append(s"\n## $name\n\n```\n")
-          sb.append(norm(buf.toString).take(4000))
+          sb.append(firstLines(norm(buf.toString), 60))
           sb.append("\n```\n")
         } catch { case e: Throwable =>
           sb.append(s"\n## $name\n\n_plan build failed: ${e.getMessage}_\n")

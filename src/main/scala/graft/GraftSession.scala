@@ -10,6 +10,10 @@ import org.apache.spark.sql.SparkSession
   *     dynamic broadcast conversion) — the main scale lever at 100 TB.
   *   - shuffle.partitions sized to the parallelism, not the 200 default.
   *   - UTC session timezone so results are oracle-comparable.
+  *   - A codegen class cache that holds the engine's working set, with
+  *     stage ids left out of generated class names, so a long-lived
+  *     session compiles each generated class once (DESIGN.md, "The
+  *     codegen class cache holds the working set").
   */
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -26,6 +30,15 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // Static confs, read once by CodeGenerator's JVM-wide cache. The
+      // default 100 entries is below the llm_ops rotation's ~109 classes
+      // and q211's 93, so every pass recompiled; 1000 bounds metaspace at
+      // under 30 MB (~29 KB a class). AQE numbers codegen stages in
+      // planning order, so with the id in the name one pipeline's class
+      // is `...Stage24` in one run and `...Stage17` in the next and
+      // misses any cache size.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // Older testdata generations shipped events.ts as TIMESTAMP(NANOS),
       // which Spark 4.x refuses to read without this flag (it then surfaces
       // as a raw long). Harmless for current timestamp[us] data; Tables.events
