@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
-import graft.{Slow, SparkSpec}
+import graft.{Slow, SparkSpec, TempDirs}
 
 /** Spark analogs of the reference's engine-property workloads
   * (SURVEY.md §2.2 Q3-Q8):
@@ -47,10 +47,10 @@ object Probes {
   }
 }
 
-class FaultToleranceSpec extends SparkSpec {
+class FaultToleranceSpec extends SparkSpec with TempDirs {
 
   private def corpus(): Path = {
-    val dir = Files.createTempDirectory("mr-fault")
+    val dir = tempDir("mr-fault")
     (0 until 8).foreach { i =>
       Files.writeString(dir.resolve(f"f$i%02d.txt"), s"contents of file $i " * (i + 1))
     }
@@ -114,7 +114,7 @@ class FaultToleranceSpec extends SparkSpec {
 
   test("early_exit: no partial output visible before job commit; _SUCCESS after (Q4)") {
     val dir = corpus()
-    val out = Files.createTempDirectory("mr-early-out").resolve("job")
+    val out = tempDir("mr-early-out").resolve("job")
     val slowReduce = Workloads.earlyExitReduce(Seq("f00", "f03"), delayMs = 3000)
 
     @volatile var done = false

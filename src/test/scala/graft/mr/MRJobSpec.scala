@@ -1,17 +1,23 @@
 package graft.mr
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
-import graft.SparkSpec
+import org.apache.spark.Success
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+
+import graft.{SparkSpec, TempDirs}
 
 /** Differential tests of the MR facade against the reference's committed
   * golden run artifacts (reference: src/main/mr-out-0..9, produced by an
   * 8-map x 10-reduce wc job over the pg-*.txt corpus; comparison is
   * order-insensitive over concatenated output exactly like
   * src/main/test-mr.sh:90-98). The golden differentials are cancelled
-  * where the reference checkout is absent (`Reference.assumePresent`). */
-class MRJobSpec extends SparkSpec {
+  * where the reference checkout is absent (`Reference.assumePresent`);
+  * the generated-corpus tests pin the same layout without it. */
+class MRJobSpec extends SparkSpec with TempDirs {
 
   private val refMain = Reference.main
   private def goldenLines: Seq[String] =
@@ -48,6 +54,92 @@ class MRJobSpec extends SparkSpec {
     }
   }
 
+  /** Eight seeded text files over a 400-word vocabulary with non-ASCII
+    * letters, digits and punctuation as separators; few enough words
+    * that no map task fills the grouping table. */
+  private def generatedCorpus(): Path = {
+    val dir = tempDir("mr-gen")
+    val rnd = new scala.util.Random(17)
+    val stems = Seq("alpha", "Beta", "café", "naïve", "straße", "日本", "x", "quux")
+    val vocab = (0 until 400).map(i => stems(i % stems.size) + ("abcdefghij" * 5).take(i / stems.size))
+    val seps = Seq(" ", "  ", ", ", ".\n", " 42 ", "\r\n", "—")
+    (0 until 8).foreach { f =>
+      val words = (0 until 1500 + 300 * f).map { _ =>
+        // squared uniform: a few hot words, a long tail
+        val u = rnd.nextDouble()
+        vocab((u * u * vocab.size).toInt) + seps(rnd.nextInt(seps.size))
+      }
+      Files.writeString(dir.resolve(f"doc$f%02d.txt"), words.mkString)
+    }
+    dir
+  }
+
+  private def sequentialWc(dir: Path): Map[String, String] =
+    Files.list(dir).iterator().asScala.toSeq
+      .flatMap(p => Workloads.tokenize(Files.readString(p)))
+      .groupBy(identity).map { case (w, ws) => w -> ws.size.toString }
+
+  test("part files hold each key at its ihash partition, in ascending order, with sequential wc counts") {
+    val dir = generatedCorpus()
+    val out = tempDir("mr-layout").resolve("job")
+    val n = 4
+    MRJob.run(spark, s"$dir/*.txt", Workloads.wcMap, Workloads.wcReduce, nReduce = n,
+      outDir = out.toString)
+    val parts = Files.list(out).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).toSeq.sorted
+    assert(parts === (0 until n).map(r => f"part-$r%05d"))
+    val got = parts.zipWithIndex.flatMap { case (name, r) =>
+      val kvs = Files.readAllLines(out.resolve(name)).asScala.toSeq.map { line =>
+        val sp = line.lastIndexOf(' ')
+        (line.substring(0, sp), line.substring(sp + 1))
+      }
+      val keys = kvs.map(_._1)
+      assert(keys.nonEmpty, name)
+      assert(keys.forall(k => MRJob.ihash(k) % n == r), name)
+      assert(keys.sliding(2).forall { case Seq(a, b) => a < b; case _ => true },
+        s"$name keys not strictly ascending")
+      kvs
+    }
+    assert(got.toMap === sequentialWc(dir))
+  }
+
+  test("the shuffle writes one record per distinct key per map task, not one per pair") {
+    val dir = generatedCorpus()
+    val glob = s"$dir/*.txt"
+    val perTask = MRJob.mapFiles(spark, glob, Workloads.wcMap)
+      .mapPartitions(it => Iterator(it.map(_._1).toSeq))
+      .collect()
+    assert(perTask.length > 1 && perTask.forall(_.size < MRJob.GroupBound))
+    val sc = spark.sparkContext
+    val group = "mrjob-shuffle-records"
+    val listener = new ShuffleRecords(group)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "wc shuffle record count")
+      try MRJob.run(spark, glob, Workloads.wcMap, Workloads.wcReduce, nReduce = 5,
+        outDir = tempDir("mr-pin").resolve("job").toString)
+      finally sc.clearJobGroup()
+      listener.awaitJobsEnded()
+    } finally sc.removeSparkListener(listener)
+    val pairs = perTask.map(_.size.toLong).sum
+    val distinctPerTask = perTask.map(_.distinct.size.toLong).sum
+    assert(distinctPerTask < pairs)
+    assert(listener.records.get === distinctPerTask)
+  }
+
+  test("groupChunks flushes every GroupBound values and keeps each key's values") {
+    assert(MRJob.groupChunks(Iterator.empty).isEmpty)
+    val in = (0 until 2 * MRJob.GroupBound + 5).map(i =>
+      if (i % 3 == 0) (s"k${i % 10}", i.toString) else ("hot", i.toString))
+    val chunks = MRJob.groupChunks(in.iterator).toSeq
+    assert(chunks.forall(_._2.nonEmpty))
+    assert(chunks.map(_._2.length).sum === in.size)
+    // three flushes: the hot key comes out once per flush
+    assert(chunks.count(_._1 == "hot") === 3)
+    val regrouped = chunks.groupBy(_._1).map { case (k, cs) => k -> cs.flatMap(_._2).sorted }
+    assert(regrouped === in.groupBy(_._1).map { case (k, kvs) => k -> kvs.map(_._2).sorted })
+  }
+
   test("ihash is non-negative and total over arbitrary strings") {
     val samples = Seq("", "a", "A", "xyzzy", "café", "日本語", "\u0000weird\n")
     samples.foreach { s =>
@@ -73,7 +165,7 @@ class MRJobSpec extends SparkSpec {
   }
 
   test("indexer matches reference semantics on a crafted corpus") {
-    val dir = Files.createTempDirectory("mr-indexer")
+    val dir = tempDir("mr-indexer")
     Files.writeString(dir.resolve("d1.txt"), "apple banana apple")
     Files.writeString(dir.resolve("d2.txt"), "banana cherry")
     val got = MRJob.runToLines(spark, s"$dir/*.txt",
@@ -134,5 +226,32 @@ class MRJobSpec extends SparkSpec {
     // the partial phase must belong to THIS aggregator, not just any
     // aggregate somewhere in the plan
     assert(plan.toLowerCase.contains("partial_wc_reduce"), plan.take(1500))
+  }
+}
+
+/** Sums the shuffle records written by successful tasks of one job group. */
+class ShuffleRecords(group: String) extends SparkListener {
+  val records = new AtomicLong(0)
+  private val jobs = ConcurrentHashMap.newKeySet[Int]()
+  private val ended = ConcurrentHashMap.newKeySet[Int]()
+  private val stages = ConcurrentHashMap.newKeySet[Int]()
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+      e.stageIds.foreach(stages.add)
+      jobs.add(e.jobId)
+    }
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    if (stages.contains(e.stageId) && e.reason == Success && e.taskMetrics != null)
+      records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    if (jobs.contains(e.jobId)) ended.add(e.jobId)
+
+  /** Listener events arrive asynchronously; wait for every job of the group. */
+  def awaitJobsEnded(timeoutMs: Long = 30000): Unit = {
+    val deadline = System.currentTimeMillis() + timeoutMs
+    while ((jobs.isEmpty || ended.size < jobs.size) && System.currentTimeMillis() < deadline)
+      Thread.sleep(20)
+    assert(!jobs.isEmpty && ended.size == jobs.size, s"jobs $jobs ended $ended")
   }
 }
