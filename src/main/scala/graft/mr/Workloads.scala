@@ -16,9 +16,36 @@ object Workloads {
 
   /** Tokenize on non-letters — Go's
     * `strings.FieldsFunc(s, r => !unicode.IsLetter(r))`
-    * (reference: src/mrapps/wc.go:23-26). Empty tokens dropped, case kept. */
-  def tokenize(contents: String): Iterator[String] =
-    contents.split("[^\\p{L}]+").iterator.filter(_.nonEmpty)
+    * (reference: src/mrapps/wc.go:23-26): a lazy scan over code points
+    * that yields each maximal run of letters, case kept. `isLetter`
+    * tests the five letter categories that `\p{L}` matches, so the
+    * tokens equal a `[^\p{L}]+` split with empty tokens dropped; lone
+    * surrogates and combining marks are separators. */
+  def tokenize(contents: String): Iterator[String] = new Iterator[String] {
+    private val n = contents.length
+    private var i = scan(0, letters = false)
+
+    /** The first index at or after `from` whose code point is not a
+      * letter (`letters`) or is one (`!letters`); `n` if there is none. */
+    private def scan(from: Int, letters: Boolean): Int = {
+      var j = from
+      var more = true
+      while (more && j < n) {
+        val c = contents.codePointAt(j)
+        if (Character.isLetter(c) == letters) j += Character.charCount(c) else more = false
+      }
+      j
+    }
+
+    override def hasNext: Boolean = i < n
+    override def next(): String = {
+      if (i >= n) Iterator.empty.next()
+      val end = scan(i, letters = true)
+      val word = contents.substring(i, end)
+      i = scan(end, letters = false)
+      word
+    }
+  }
 
   /** Q1 wc — map: one ("word","1") per occurrence (src/mrapps/wc.go:21-34);
     * reduce: occurrence count (wc.go:41-44). */

@@ -4,13 +4,13 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Format-compat differentials against the reference's committed run
   * artifacts: our reduce phase over ITS intermediate shuffle files must
   * reproduce ITS final output (cancelled where the reference checkout is
   * absent, `Reference.assumePresent`). */
-class CompatSpec extends SparkSpec {
+class CompatSpec extends SparkSpec with TempDirs {
   private val refMain = Reference.main
 
   test("our reduce phase over the reference's committed intermediate files reproduces its golden output") {
@@ -33,7 +33,7 @@ class CompatSpec extends SparkSpec {
   }
 
   test("intermediate NDJSON roundtrip preserves records byte-compatibly") {
-    val dir = Files.createTempDirectory("mr-compat").resolve("ndjson")
+    val dir = tempDir("mr-compat").resolve("ndjson")
     val pairs = spark.sparkContext.parallelize(
       Seq(("eBook", "1"), ("the", "2"), ("with \"quotes\"", "x"), ("", "empty")), 2)
     Compat.writeIntermediate(spark, pairs, dir.toString)
@@ -71,7 +71,7 @@ class CompatSpec extends SparkSpec {
 
   test("whole-text DataFrame source equals wholeTextFiles records") {
     val own = gutenbergLike(
-      Files.createTempDirectory("mr-wholetext").resolve("pg-being_ernest.txt"))
+      tempDir("mr-wholetext").resolve("pg-being_ernest.txt"))
     // the file written above, then each reference book that exists
     val books = Reference.corpus.filter(Reference.present)
       .map(p => p -> Paths.get(p).getFileName.toString)

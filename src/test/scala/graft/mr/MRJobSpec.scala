@@ -76,7 +76,7 @@ class MRJobSpec extends SparkSpec with TempDirs {
 
   private def sequentialWc(dir: Path): Map[String, String] =
     Files.list(dir).iterator().asScala.toSeq
-      .flatMap(p => Workloads.tokenize(Files.readString(p)))
+      .flatMap(p => TokenizeReferee.tokens(Files.readString(p)))
       .groupBy(identity).map { case (w, ws) => w -> ws.size.toString }
 
   test("part files hold each key at its ihash partition, in ascending order, with sequential wc counts") {
@@ -101,6 +101,11 @@ class MRJobSpec extends SparkSpec with TempDirs {
       kvs
     }
     assert(got.toMap === sequentialWc(dir))
+  }
+
+  test("mapFiles asks for a split per core: more than wholeTextFiles' default 2, at most one per file") {
+    val splits = MRJob.mapFiles(spark, s"${generatedCorpus()}/*.txt", Workloads.wcMap).getNumPartitions
+    assert(splits > 2 && splits <= 8, s"$splits splits")
   }
 
   test("the shuffle writes one record per distinct key per map task, not one per pair") {
@@ -131,13 +136,39 @@ class MRJobSpec extends SparkSpec with TempDirs {
     assert(MRJob.groupChunks(Iterator.empty).isEmpty)
     val in = (0 until 2 * MRJob.GroupBound + 5).map(i =>
       if (i % 3 == 0) (s"k${i % 10}", i.toString) else ("hot", i.toString))
-    val chunks = MRJob.groupChunks(in.iterator).toSeq
+    val chunks = MRJob.groupChunks(in.iterator).map { case (k, packed) =>
+      (k, MRJob.unpack(packed).toSeq)
+    }.toSeq
     assert(chunks.forall(_._2.nonEmpty))
     assert(chunks.map(_._2.length).sum === in.size)
     // three flushes: the hot key comes out once per flush
     assert(chunks.count(_._1 == "hot") === 3)
     val regrouped = chunks.groupBy(_._1).map { case (k, cs) => k -> cs.flatMap(_._2).sorted }
     assert(regrouped === in.groupBy(_._1).map { case (k, kvs) => k -> kvs.map(_._2).sorted })
+  }
+
+  /** Values a packed chunk must carry unchanged: NUL, lone surrogates,
+    * non-BMP text, the empty string, ASCII on both sides of Kryo's
+    * 64-char ASCII fast path, a 100k-char value and null. */
+  private val awkwardValues: Seq[String] = Seq("a\u0000b", "\u0000", "\uD800", "x\uDC00y",
+    "\uDC00\uD800", "\uD835\uDC00\uD83D\uDE00", "", "1", "é日本", "\r\n", "q" * 63, "q" * 64,
+    "café" * 25000, null)
+
+  test("packed chunks carry every value unchanged, in order, through groupChunks and onPairs") {
+    val chunks = MRJob.groupChunks(awkwardValues.iterator.map(("k", _))).toSeq
+    assert(chunks.map(_._1) === Seq("k"))
+    assert(MRJob.unpack(chunks.head._2).toSeq === awkwardValues)
+
+    val nonNull = awkwardValues.filter(_ != null)
+    val keyed = awkwardValues.zipWithIndex.map { case (v, i) => (s"k$i", v) }
+    val rdd = spark.sparkContext.parallelize(keyed ++ nonNull.map(("all", _)), 3)
+    val out = MRJob.onPairs(rdd, Workloads.sortJoinReduce, nReduce = 4).collect().toMap
+    assert(out("all") === nonNull.sorted.mkString(" "))
+    keyed.foreach { case (k, v) => if (v != null) assert(out(k) === v, k) }
+    val nulls = MRJob.onPairs(rdd, (_, vs) => vs.count(_ == null).toString, nReduce = 4)
+      .collect().toMap
+    val wantNulls = keyed.map { case (k, v) => k -> (if (v == null) "1" else "0") } :+ ("all" -> "0")
+    assert(nulls === wantNulls.toMap)
   }
 
   test("ihash is non-negative and total over arbitrary strings") {
