@@ -66,8 +66,6 @@ object GraftSession {
     graft.functions.PayloadSimhash.register(spark)
     graft.functions.ChunkStats.register(spark)
     graft.plans.GroupTopKExtension.install(spark)
-    graft.plans.ChainReorderExtension.install(spark)
-    graft.plans.ZonemapPruneExtension.install(spark)
   }
 
   /** NO SILENT CAPS: operators that bound their work (e.g. the LSH

@@ -63,11 +63,12 @@ object SketchPlanner {
     * Staleness contract — the same one Spark's catalog statistics and
     * every stats-cache in Delta/Iceberg carry: entries describe the
     * data as of the scan; a writer mutating files under an already-
-    * priced path must [[SketchCatalog.clear]] (or flip
-    * `spark.graft.planner.sketchCache` to false) or decisions price the
-    * old distribution. Estimates are advisory (plan shape only), so a
-    * stale entry can cost performance, never correctness. Sessions are
-    * weak keys: a stopped session's entries are collectable. */
+    * priced path must [[SketchCatalog.clear]] or decisions price the
+    * old distribution (the persisted `_sketch/` layer guards itself: its
+    * data-file stamp refuses stats for a rewritten table). Estimates
+    * are advisory (plan shape only), so a stale entry can cost
+    * performance, never correctness. Sessions are weak keys: a stopped
+    * session's entries are collectable. */
   object SketchCatalog {
     private val perSession = new java.util.WeakHashMap[
       SparkSession, java.util.concurrent.ConcurrentHashMap[AnyRef, Long]]()
@@ -374,14 +375,12 @@ object SketchPlanner {
       kab: String, kbc: String,
       bcastRows: Long = broadcastRowThreshold): String = {
     val s = a.sparkSession
-    val useCatalog = s.conf.getOption("spark.graft.planner.sketchCache")
-      .forall(_.toBoolean)
     def est(x: DataFrame, y: DataFrame, k: String): Long = {
       val ck = edgeKey(x, col(k), y, col(k))
-      (if (useCatalog) SketchCatalog.lookup(s, ck) else None).getOrElse {
+      SketchCatalog.lookup(s, ck).getOrElse {
         val v = estPair(x, col(k), y, col(k), fast = true)
           .collect()(0).getLong(0) // 1-row planner scalar (AQE shape)
-        if (useCatalog) SketchCatalog.store(s, ck, v)
+        SketchCatalog.store(s, ck, v)
         v
       }
     }
@@ -581,8 +580,6 @@ object SketchPlanner {
     require(tables.size >= 2 && edgeCols.size == tables.size - 1,
       s"chain needs n tables and n-1 keys, got ${tables.size}/${edgeCols.size}")
     val s = tables.head.sparkSession
-    val useCatalog = s.conf.getOption("spark.graft.planner.sketchCache")
-      .forall(_.toBoolean) // default ON — see SketchCatalog's contract
     // (id, catalog key, manifest loader, estimator frame) per statistic
     val wanted: Seq[(String, AnyRef, () => Option[Long], () => DataFrame)] =
       edgeCols.zipWithIndex.map { case ((lk, rk), i) =>
@@ -594,7 +591,7 @@ object SketchPlanner {
         (s"n$i", countKey(t), () => persistedCount(t), () =>
           t.agg(count(lit(1)).as("est")).select(lit(s"n$i").as("id"), col("est")))
       }
-    val stats = gatherStats(s, useCatalog, wanted)
+    val stats = gatherStats(s, wanted)
     val n = tables.indices.map(i => stats(s"n$i").toDouble)
     val sel = edgeCols.indices.map(i =>
       stats(s"e$i").toDouble / math.max(1.0, n(i) * n(i + 1)))
@@ -653,39 +650,25 @@ object SketchPlanner {
     * collect (the decideChain/decideStar budget). Manifest loads are
     * stored back into the session catalog so later decisions skip even
     * the file read. Shared by the chain and star deciders so both
-    * amortize identically.
-    *
-    * OPT-OUT (r16 advice): the manifest path honors the SAME
-    * `spark.graft.planner.sketchCache` flag as the session catalog —
-    * a user who turns cached stats off to force fresh pricing gets a
-    * real scan, never silently-possibly-stale on-disk numbers — plus a
-    * dedicated `spark.graft.planner.sketchManifest` flag (default on)
-    * to disable only the persisted layer while keeping the in-session
-    * catalog. */
-  private def gatherStats(s: SparkSession, useCatalog: Boolean,
+    * amortize identically. Stale numbers are kept out by the
+    * manifest's data-file stamp and by [[SketchCatalog.clear]]. */
+  private def gatherStats(s: SparkSession,
       wanted: Seq[(String, AnyRef, () => Option[Long], () => DataFrame)])
       : Map[String, Long] = {
-    val cached: Map[String, Long] =
-      if (!useCatalog) Map.empty
-      else wanted.flatMap { case (id, ck, _, _) =>
-        SketchCatalog.lookup(s, ck).map(id -> _)
-      }.toMap
-    val useManifest = useCatalog &&
-      s.conf.getOption("spark.graft.planner.sketchManifest").forall(_.toBoolean)
-    val manifested: Map[String, Long] =
-      if (!useManifest) Map.empty
-      else wanted.flatMap {
-        case (id, _, loader, _) if !cached.contains(id) =>
-          loader().map(id -> _)
-        case _ => None
-      }.toMap
+    val cached: Map[String, Long] = wanted.flatMap { case (id, ck, _, _) =>
+      SketchCatalog.lookup(s, ck).map(id -> _)
+    }.toMap
+    val manifested: Map[String, Long] = wanted.flatMap {
+      case (id, _, loader, _) if !cached.contains(id) => loader().map(id -> _)
+      case _ => None
+    }.toMap
     val missing = wanted.filterNot { case (id, _, _, _) =>
       cached.contains(id) || manifested.contains(id) }
     val fresh: Map[String, Long] =
       if (missing.isEmpty) Map.empty
       else missing.map(_._4()).reduce(_ unionByName _)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (useCatalog) wanted.foreach { case (id, ck, _, _) =>
+    wanted.foreach { case (id, ck, _, _) =>
       (manifested.get(id) orElse fresh.get(id)).foreach(
         SketchCatalog.store(s, ck, _))
     }
@@ -715,8 +698,6 @@ object SketchPlanner {
     require(dims.nonEmpty && edges.size == dims.size,
       s"star needs n dims and n edges, got ${dims.size}/${edges.size}")
     val s = fact.sparkSession
-    val useCatalog = s.conf.getOption("spark.graft.planner.sketchCache")
-      .forall(_.toBoolean)
     val wanted: Seq[(String, AnyRef, () => Option[Long], () => DataFrame)] =
       edges.zipWithIndex.map { case ((fk, dk), i) =>
         (s"e$i", edgeKey(fact, fk, dims(i), dk),
@@ -727,7 +708,7 @@ object SketchPlanner {
         (s"n$i", countKey(t), () => persistedCount(t), () =>
           t.agg(count(lit(1)).as("est")).select(lit(s"n$i").as("id"), col("est")))
       }
-    val stats = gatherStats(s, useCatalog, wanted)
+    val stats = gatherStats(s, wanted)
     edges.indices.sortBy(i => (stats(s"e$i"), i))
       .map(i => StarStep(i, bcastDim = stats(s"n$i") <= bcastRows))
   }
@@ -882,13 +863,12 @@ object SketchPlanner {
 
   /** The STAR REWRITE under the gate (round-15: rule-executed answers,
     * not just decisions): a plain literal-order star — lineitem fact
-    * joined by orders, supplier, part on its three distinct keys — is
-    * optimized with `spark.graft.chainReorder.enabled` on, so
-    * [[graft.plans.RewriteChainJoin]]'s star path picks the dim order
-    * and broadcast hints, and the EXECUTED answer must hash-match
-    * DuckDB's plain four-table join. The flag is scoped to optimization
-    * (frozen via ofRows, restored after) so no other gated query's
-    * planning sees it; a `require` pins that hints actually landed —
+    * joined by orders, supplier, part on its three distinct keys — has
+    * [[graft.plans.RewriteChainJoin]] applied to its optimized plan, so
+    * the rule's star path picks the dim order and broadcast hints, and
+    * the EXECUTED answer must hash-match DuckDB's plain four-table join.
+    * The rule rewrites this query's plan only (no other gated query's
+    * planning sees it); a `require` pins that hints actually landed —
     * an inert rule must fail the gate, not coast on Spark's default
     * plan. Pricing pays the bounded sketch scans once per session
     * (SketchCatalog). */
@@ -907,8 +887,8 @@ object SketchPlanner {
       .agg(count(lit(1)).as("n_rows"),
         sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast("decimal(18,4)")).cast("double").as("revenue"))
-    org.apache.spark.sql.GraftSqlBridge.optimizedWithFlag(star,
-        graft.plans.RewriteChainJoin.FLAG) { optimized =>
+    org.apache.spark.sql.GraftSqlBridge.optimizedWith(star,
+        graft.plans.RewriteChainJoin) { optimized =>
       require(hasJoinHint(optimized),
         "the star rewrite did not fire: no broadcast hints in the plan")
     }
@@ -937,9 +917,9 @@ object SketchPlanner {
     * the fact and the r15 star extractor conceded the whole tree.
     * r16's `assembleBranches` collapses the chain hanging off supplier
     * into one dim, prices the collapsed branch's retention (ASIA only
-    * — the selective side), and reorders. Flag scoped to THIS
-    * optimization; the `require` pins that hints landed (an inert rule
-    * fails the gate). Results hash-match DuckDB's plain 5-way join. */
+    * — the selective side), and reorders. The rule rewrites THIS
+    * query's plan only; the `require` pins that hints landed (an inert
+    * rule fails the gate). Results hash-match DuckDB's plain 5-way join. */
   def q262SnowflakeReorder(s: SparkSession, d: String): DataFrame = {
     val l = lineitem(s, d)
       .select(col("l_orderkey"), col("l_suppkey"),
@@ -958,8 +938,8 @@ object SketchPlanner {
       .agg(count(lit(1)).as("n_rows"),
         sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast("decimal(18,4)")).cast("double").as("revenue"))
-    org.apache.spark.sql.GraftSqlBridge.optimizedWithFlag(q,
-        graft.plans.RewriteChainJoin.FLAG) { optimized =>
+    org.apache.spark.sql.GraftSqlBridge.optimizedWith(q,
+        graft.plans.RewriteChainJoin) { optimized =>
       require(hasJoinHint(optimized),
         "the snowflake rewrite did not fire: no broadcast hints in the plan")
     }
@@ -1006,8 +986,8 @@ object SketchPlanner {
       .agg(count(lit(1)).as("n_rows"),
         sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast("decimal(18,4)")).cast("double").as("revenue"))
-    org.apache.spark.sql.GraftSqlBridge.optimizedWithFlag(q,
-        graft.plans.RewriteChainJoin.FLAG) { optimized =>
+    org.apache.spark.sql.GraftSqlBridge.optimizedWith(q,
+        graft.plans.RewriteChainJoin) { optimized =>
       val bushy = optimized.collect {
         case j: Join
             if j.left.collectFirst { case i: Join => i }.isDefined &&

@@ -694,8 +694,8 @@ object Storage {
 
   /** The pure survivor computation over ALREADY-READ manifests — what
     * the automatic rule calls through its per-apply manifest cache
-    * (r16 advice: fixedPoint iterations must not re-read manifest
-    * files from the filesystem for every Filter node). Semantics are
+    * (r16 advice: the rule must not re-read manifest files from the
+    * filesystem for every Filter node). Semantics are
     * [[survivingFilesMulti]]'s, three axes intersecting. */
   def survivorsFromManifests(
       dateMan: Option[Seq[FileZone]],
@@ -1848,14 +1848,14 @@ object Storage {
   /** The AUTOMATIC pruning rule under the gate (round-15: the task-4
     * engine-behavior close): the SAME clustered layout q216 probes, but
     * through a PLAIN `spark.read.parquet(dir).filter(...)` — no facade
-    * call — optimized with `spark.graft.zonemapPrune.enabled` on, so
-    * the manifest routing is the optimizer's work. The flag is scoped
-    * to OPTIMIZATION here (the plan is frozen via ofRows and the flag
-    * restored) so no other gated query's planning sees it; a `require`
-    * pins that the rewrite actually fired (pruned file index smaller
-    * than the layout) — a silently-inert rule must fail the gate, not
-    * pass it by answering through a full scan. The probe window differs
-    * from q216's so the two queries gate independent answers. */
+    * call — whose optimized plan goes through
+    * [[graft.plans.ZonemapPruneRule]], so the manifest routing is the
+    * rule's work. The rule rewrites this query's plan only (no other
+    * gated query's planning sees it); a `require` pins that the rewrite
+    * actually fired (pruned file index smaller than the layout) — a
+    * silently-inert rule must fail the gate, not pass it by answering
+    * through a full scan. The probe window differs from q216's so the
+    * two queries gate independent answers. */
   def q247AutoPrune(s: SparkSession, d: String): DataFrame = {
     val dir = q216Layout(s, d)
     val probe = s.read.parquet(dir)
@@ -1875,14 +1875,13 @@ object Storage {
       |  AND DATE '1996-09-30'
       |GROUP BY 1""".stripMargin
 
-  /** Shared q247-pattern harness: optimize `probe` with the automatic
-    * pruning rule scoped to THIS optimization
-    * (`GraftSqlBridge.optimizedWithFlag`), `require` the pruned file index
-    * actually shrank below `totalFiles` (an inert rule must FAIL the
-    * gate), return the frozen plan as a DataFrame. */
+  /** Shared q247-pattern harness: apply the automatic pruning rule to
+    * `probe`'s optimized plan (`GraftSqlBridge.optimizedWith`), `require`
+    * the pruned file index actually shrank below `totalFiles` (an inert
+    * rule must FAIL the gate), return the pruned plan as a DataFrame. */
   private def autoPruned(probe: DataFrame, totalFiles: Int): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.optimizedWithFlag(probe,
-        graft.plans.ZonemapPruneRule.FLAG) { optimized =>
+    org.apache.spark.sql.GraftSqlBridge.optimizedWith(probe,
+        graft.plans.ZonemapPruneRule) { optimized =>
       val scannedFiles = optimized.collect {
         case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
           lr.relation.asInstanceOf[

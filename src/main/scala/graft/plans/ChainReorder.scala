@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, HintInfo, Join, JoinHint, LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 
 import graft.operators.SketchPlanner
 import graft.operators.SketchPlanner.{ChainStep, StarStep}
@@ -13,24 +12,24 @@ import graft.operators.SketchPlanner.{ChainStep, StarStep}
 /** AUTOMATIC sketch-driven join-chain reorder — the round-13 verdict's
   * "engine-behavior" close of the planner arc: `SketchPlanner.planChain`
   * prices and builds the right join tree, but a user had to CALL it;
-  * this optimizer [[Rule]] (the [[RewriteWindowTopK]] registration
-  * pattern: `extraOptimizations`, strictly opt-in) detects a left-deep
-  * LINEAR equi-join chain over base relations in the logical plan,
-  * prices its edges from per-side CMS sketches, and rebuilds the tree
-  * in [[SketchPlanner.decideChain]]'s greedy order with broadcast hints
-  * — so an existing `a.join(b, "k1").join(c, "k2").join(d, "k3")` query
-  * gets the reorder for free.
+  * this [[Rule]] detects a left-deep LINEAR equi-join chain over base
+  * relations in an optimized logical plan, prices its edges from
+  * per-side CMS sketches, and rebuilds the tree in
+  * [[SketchPlanner.decideChain]]'s greedy order with broadcast hints —
+  * so an existing `a.join(b, "k1").join(c, "k2").join(d, "k3")` query
+  * gets the reorder without being rewritten by hand.
   *
-  * Opt-in and cost model: the rule fires only when
-  * `spark.graft.chainReorder.enabled` is true (default FALSE — no gated
-  * query's plan changes unless a session asks). When it fires, pricing
-  * EXECUTES bounded sketch jobs during optimization — deliberate, the
-  * same execute-inside-planning shape as AQE's runtime stats and
-  * dynamic partition pruning's subquery, costing one counting scan per
-  * (table, key) whose shuffle payload is the constant-size sketch; the
-  * session-level [[SketchPlanner.SketchCatalog]] makes repeat decisions
-  * over the same corpus free. A reentrancy guard keeps the rule from
-  * pricing its own sketch queries.
+  * Called, not installed: a query that wants the reorder applies the
+  * rule to its own optimized plan
+  * (`GraftSqlBridge.optimizedWith(df, RewriteChainJoin)`); the session
+  * optimizer never runs it, so no other query's plan changes. Pricing
+  * EXECUTES bounded sketch jobs — the same execute-inside-planning
+  * shape as AQE's runtime stats and dynamic partition pruning's
+  * subquery, costing one counting scan per (table, key) whose shuffle
+  * payload is the constant-size sketch; the session-level
+  * [[SketchPlanner.SketchCatalog]] makes repeat decisions over the same
+  * corpus free. Those sketch queries go through the session optimizer,
+  * which does not hold this rule, so they are never priced themselves.
   *
   * Conservative matching, in the RewriteWindowTopK tradition:
   *   - INNER joins only, single `EqualTo` between attributes, no
@@ -57,23 +56,12 @@ import graft.operators.SketchPlanner.{ChainStep, StarStep}
   * (ChainReorderSpec pins result equality and the rewritten plan's
   * canonical equality with `buildChain`'s).
   *
-  * Fixpoint: `extraOptimizations` is a fixedPoint batch, so the rule
-  * tags every join it has priced ([[RewriteChainJoin.PRICED]]) and
-  * skips tagged nodes — one pricing per chain per optimization, and a
-  * left-to-right decision with no hints returns the node unchanged.
+  * One pass: the rewrite is a single top-down walk that replaces the
+  * outermost chain whole and never descends into its replacement, so
+  * each chain is priced once per application, and a left-to-right
+  * decision with no hints returns the node unchanged.
   */
 object RewriteChainJoin extends Rule[LogicalPlan] {
-
-  val FLAG = "spark.graft.chainReorder.enabled"
-
-  /** Set on a Join this rule has already priced (or produced). */
-  private[plans] val PRICED = TreeNodeTag[Boolean]("graft.chain.priced")
-
-  /** True while the rule's own sketch queries are being planned on this
-    * thread — they must not be priced recursively. */
-  private val pricing = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = false
-  }
 
   /** tables(i) ⋈ tables(i+1) on conds(i) = (attr of table i, attr of
     * table i+1) — the decideChain convention extracted from a plan. */
@@ -83,9 +71,7 @@ object RewriteChainJoin extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val session = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).orNull
-    if (session == null || pricing.get() ||
-        !session.conf.get(FLAG, "false").toBoolean) plan
-    else rewrite(session, plan)
+    if (session == null) plan else rewrite(session, plan)
   }
 
   /** Top-down manual recursion: rewrite the OUTERMOST chain whole and do
@@ -100,54 +86,36 @@ object RewriteChainJoin extends Rule[LogicalPlan] {
     * exact output order with a Project. */
   private def rewrite(s: SparkSession, plan: LogicalPlan): LogicalPlan =
     plan match {
-      case p @ Project(pl, j: Join) if j.getTagValue(PRICED).isEmpty =>
-        extract(j) match {
-          case Some(ch) if ch.tables.size >= 3 =>
-            reorder(s, j, ch, AttributeSet(pl.flatMap(_.references)))
-              .map(Project(pl, _)).getOrElse(p)
-          case _ => extractStar(j) match {
-            case Some(st) =>
-              reorderStar(s, j, st, AttributeSet(pl.flatMap(_.references)))
-                .map(Project(pl, _)).getOrElse(p)
-            case None =>
-              j.setTagValue(PRICED, true)
-              p.mapChildren(rewrite(s, _))
-          }
+      case p @ Project(pl, j: Join) =>
+        reordered(s, j, AttributeSet(pl.flatMap(_.references))) match {
+          case Some(r) => r.map(Project(pl, _)).getOrElse(p)
+          case None => p.mapChildren(rewrite(s, _))
         }
-      case j: Join if j.getTagValue(PRICED).isEmpty =>
-        extract(j) match {
-          case Some(ch) if ch.tables.size >= 3 =>
-            reorder(s, j, ch, j.outputSet)
-              // restore the original attribute order for positional parents
-              .map(Project(j.output, _)).getOrElse(j)
-          case _ => extractStar(j) match {
-            case Some(st) =>
-              reorderStar(s, j, st, j.outputSet)
-                .map(Project(j.output, _)).getOrElse(j)
-            case None =>
-              j.setTagValue(PRICED, true) // not a chain now, not one later
-              j.mapChildren(rewrite(s, _))
-          }
+      case j: Join =>
+        reordered(s, j, j.outputSet) match {
+          // restore the original attribute order for positional parents
+          case Some(r) => r.map(Project(j.output, _)).getOrElse(j)
+          case None => j.mapChildren(rewrite(s, _))
         }
       case other => other.mapChildren(rewrite(s, _))
     }
 
+  /** None when `j` roots neither a chain of ≥ 3 tables nor a star;
+    * otherwise the rebuilt tree, or Some(None) when the decision IS the
+    * plan as written. */
+  private def reordered(s: SparkSession, j: Join,
+      needed: AttributeSet): Option[Option[LogicalPlan]] =
+    extract(j).filter(_.tables.size >= 3).map(reorder(s, _, needed))
+      .orElse(extractStar(j).map(reorderStar(s, _, needed)))
+
   /** Price and rebuild; None when the decision IS the existing plan. */
-  private def reorder(s: SparkSession, j: Join, ch: Chain,
+  private def reorder(s: SparkSession, ch: Chain,
       needed: AttributeSet): Option[LogicalPlan] = {
-    j.setTagValue(PRICED, true)
     val steps = price(s, ch)
     val leftToRightNoHints = ch.conds.indices.map(i =>
       ChainStep(i, bcastLeft = false, bcastRight = false))
     if (steps == leftToRightNoHints) None // the plan is already the decision
-    else {
-      val rebuilt = build(ch, steps, needed)
-      rebuilt.foreach {
-        case nj: Join => nj.setTagValue(PRICED, true)
-        case _ =>
-      }
-      Some(rebuilt)
-    }
+    else Some(build(ch, steps, needed))
   }
 
   /** Attribute-only Projects between spine joins (using-join key drops /
@@ -197,17 +165,13 @@ object RewriteChainJoin extends Rule[LogicalPlan] {
   }
 
   /** Price the chain's edges — decideChain over DataFrames wrapped from
-    * the extracted subtrees, reentrancy-guarded. */
-  private def price(s: SparkSession, ch: Chain): Seq[ChainStep] = {
-    pricing.set(true)
-    try {
-      val frames = ch.tables.map(t => GraftSqlBridge.ofRows(s, t))
-      val edgeCols = ch.conds.map { case (ca, ra) =>
+    * the extracted subtrees. */
+  private def price(s: SparkSession, ch: Chain): Seq[ChainStep] =
+    SketchPlanner.decideChainCols(
+      ch.tables.map(t => GraftSqlBridge.ofRows(s, t)),
+      ch.conds.map { case (ca, ra) =>
         (GraftSqlBridge.column(ca), GraftSqlBridge.column(ra))
-      }
-      SketchPlanner.decideChainCols(frames, edgeCols)
-    } finally pricing.set(false)
-  }
+      })
 
   // ───────────────────────── star shapes ─────────────────────────
 
@@ -293,32 +257,21 @@ object RewriteChainJoin extends Rule[LogicalPlan] {
 
   /** Price and rebuild a star; None when the decision is the literal
     * order with no broadcast hints — the plan as written. */
-  private def reorderStar(s: SparkSession, j: Join, st: Star,
+  private def reorderStar(s: SparkSession, st: Star,
       needed: AttributeSet): Option[LogicalPlan] = {
-    j.setTagValue(PRICED, true)
     val steps = priceStar(s, st)
     val literal = st.conds.indices.map(i => StarStep(i, bcastDim = false))
     if (steps == literal) None
-    else {
-      val rebuilt = buildStar(st, steps, needed)
-      rebuilt.foreach {
-        case nj: Join => nj.setTagValue(PRICED, true)
-        case _ =>
-      }
-      Some(rebuilt)
-    }
+    else Some(buildStar(st, steps, needed))
   }
 
-  private def priceStar(s: SparkSession, st: Star): Seq[StarStep] = {
-    pricing.set(true)
-    try SketchPlanner.decideStar(
+  private def priceStar(s: SparkSession, st: Star): Seq[StarStep] =
+    SketchPlanner.decideStar(
       GraftSqlBridge.ofRows(s, st.fact),
       st.dims.map(d => GraftSqlBridge.ofRows(s, d)),
       st.conds.map { case (fa, da) =>
         (GraftSqlBridge.column(fa), GraftSqlBridge.column(da))
       })
-    finally pricing.set(false)
-  }
 
   /** Fold the fact through the dims in decided order with the original
     * EqualTo conditions; broadcast hints land on the dim side. Every
@@ -391,16 +344,5 @@ object RewriteChainJoin extends Rule[LogicalPlan] {
       segs = segs.patch(j, Vector((l._1, r._2, node)), 2)
     }
     segs.head._3
-  }
-}
-
-object ChainReorderExtension {
-  /** Idempotently registers the rule (the GroupTopKExtension seam). The
-    * rule itself stays inert until `spark.graft.chainReorder.enabled`
-    * is set true on the session. */
-  def install(spark: SparkSession): Unit = synchronized {
-    val e = spark.experimental
-    if (!e.extraOptimizations.contains(RewriteChainJoin))
-      e.extraOptimizations = e.extraOptimizations :+ RewriteChainJoin
   }
 }

@@ -13,17 +13,21 @@ import graft.operators.Storage
 /** AUTOMATIC zone-map pruning — the round-14 verdict's task-4 close of
   * the storage arc: `Storage.prunedRead`/`strPrunedRead`/
   * `compoundPrunedRead` skip files a probe cannot touch, but a user had
-  * to CALL them. This optimizer [[Rule]] (the [[RewriteChainJoin]]
-  * registration pattern: `extraOptimizations`, strictly opt-in via
-  * `spark.graft.zonemapPrune.enabled`, default FALSE) detects a
-  * pushed-down Filter over a parquet relation whose directory carries a
-  * persisted `_zonemap/` (date axis), `_szonemap/` (string axis) or
+  * to CALL them. This [[Rule]] detects a pushed-down Filter over a
+  * parquet relation whose directory carries a persisted `_zonemap/`
+  * (date axis), `_szonemap/` (string axis) or
   * `_nzonemap/` (numeric axis, r16 verdict task 3) manifest with a
   * `_column` sidecar naming the clustered column, extracts the
   * qualifying predicate bounds, and swaps the relation's file index for
   * one listing ONLY the surviving files — so a plain
   * `spark.read.parquet(dir).filter(col("day") >= ...)` gets the q216
-  * skip for free.
+  * skip without a facade call.
+  *
+  * Called, not installed (the [[RewriteChainJoin]] pattern): a query
+  * applies the rule to its own optimized plan
+  * (`GraftSqlBridge.optimizedWith(df, ZonemapPruneRule)`, where the
+  * Filter already sits pushed down on the relation); the session
+  * optimizer never runs it, so no other query's scan changes.
   *
   * Contract carried over verbatim from the facade paths:
   *   - the Filter STAYS on top of the pruned relation — pruning is an
@@ -72,21 +76,18 @@ import graft.operators.Storage
   * plus the files actually opened; q216/q227/q245's gated facades are
   * unchanged).
   *
-  * Fixpoint: NO tree tag (r15's one-shot tag sat on the original
-  * LogicalRelation, which Catalyst shares by reference across Datasets
-  * derived from one base DataFrame — after the first query optimized,
-  * every later query on the same relation silently skipped pruning).
-  * Termination is by natural idempotency instead: a pruned relation's
-  * listed files are exactly the survivors, so a re-inspection finds
-  * nothing further to skip (`finalFiles.size < listed.size` fails) and
-  * returns the plan unchanged. Manifest reads are MEMOIZED per
-  * `apply()` invocation (r16 advice): one small-file read per axis per
-  * DIRECTORY per optimizer pass, however many Filter nodes or
-  * fixedPoint iterations inspect it — on a remote FS the old
-  * per-node re-read made plan latency scale with iterations × filters. */
+  * NO tree tag (r15's one-shot tag sat on the original LogicalRelation,
+  * which Catalyst shares by reference across Datasets derived from one
+  * base DataFrame — after the first query optimized, every later query
+  * on the same relation silently skipped pruning). The rule is
+  * idempotent instead: a pruned relation's listed files are exactly the
+  * survivors, so a re-application finds nothing further to skip
+  * (`finalFiles.size < listed.size` fails) and returns the plan
+  * unchanged. Manifest reads are MEMOIZED per `apply()` invocation (r16
+  * advice): one small-file read per axis per DIRECTORY, however many
+  * Filter nodes inspect it — on a remote FS a per-node re-read makes
+  * plan latency scale with the number of filters. */
 object ZonemapPruneRule extends Rule[LogicalPlan] {
-
-  val FLAG = "spark.graft.zonemapPrune.enabled"
 
   /** Everything the rule needs to know about one layout directory,
     * read ONCE per optimizer pass: the per-axis `_column` sidecars,
@@ -134,10 +135,9 @@ object ZonemapPruneRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val session = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).orNull
-    if (session == null || !session.conf.get(FLAG, "false").toBoolean) plan
+    if (session == null) plan
     else {
-      // per-APPLY manifest memo: every Filter node (and every fixedPoint
-      // re-entry of this transform within one apply) shares the reads
+      // per-APPLY manifest memo: every Filter node shares the reads
       val axesOf = scala.collection.mutable.Map.empty[String, DirAxes]
       plan.transformDown {
         case f @ Filter(cond, lr: LogicalRelation)
@@ -458,15 +458,5 @@ object ZonemapPruneRule extends Rule[LogicalPlan] {
     }
     val per = cs.flatMap(ivs(_))
     if (per.isEmpty) None else Some(per.reduce(intersect))
-  }
-}
-
-object ZonemapPruneExtension {
-  /** Idempotently registers the rule (the GroupTopKExtension seam). The
-    * rule stays inert until `spark.graft.zonemapPrune.enabled` is true. */
-  def install(spark: SparkSession): Unit = synchronized {
-    val e = spark.experimental
-    if (!e.extraOptimizations.contains(ZonemapPruneRule))
-      e.extraOptimizations = e.extraOptimizations :+ ZonemapPruneRule
   }
 }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** The one `private[sql]` seam the graft engine needs: build a DataFrame
   * from a hand-constructed [[LogicalPlan]] (for the custom whole-operator
@@ -13,20 +14,14 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Optimize `df` with the conf-gated rule behind `flag` switched on for
-    * this one optimization (flag set, plan frozen, flag restored), run
-    * `check` on the frozen plan — a `require` that the rule fired, so an
-    * inert rule fails the query — and return that plan as a DataFrame. */
-  def optimizedWithFlag(df: DataFrame, flag: String)(
+  /** Apply `rule` once to `df`'s optimized plan, run `check` on the
+    * result — a `require` that the rule fired, so an inert rule fails
+    * the query — and return that plan as a DataFrame. */
+  def optimizedWith(df: DataFrame, rule: Rule[LogicalPlan])(
       check: LogicalPlan => Unit): DataFrame = {
-    val s = df.sparkSession
-    val prior = s.conf.getOption(flag)
-    s.conf.set(flag, "true")
-    val optimized =
-      try df.queryExecution.optimizedPlan
-      finally prior.fold(s.conf.unset(flag))(s.conf.set(flag, _))
+    val optimized = rule(df.queryExecution.optimizedPlan)
     check(optimized)
-    ofRows(s, optimized)
+    ofRows(df.sparkSession, optimized)
   }
 
   /** Wrap a resolved catalyst [[Expression]] as a user-facing [[Column]]

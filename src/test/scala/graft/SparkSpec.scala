@@ -18,8 +18,8 @@ object SharedSpark {
     // The kernels and plan extensions of every GraftSession.getOrCreate
     // session, installed here (not lazily inside whichever suite first
     // needs them) so plan pins assert the plans users actually get,
-    // independent of suite order. ChainReorder and ZonemapPrune stay
-    // conf-gated (default off).
+    // independent of suite order. The chain-reorder and zone-map rules
+    // are not installed; the queries that want them apply them.
     GraftSession.install(s)
     s
   }

@@ -1112,6 +1112,24 @@ class PlanAuditSpec extends SparkSpec {
     assert(hits === Seq("Multimodal.scala:payloadFingerprintsAgg"), hits.mkString("\n"))
   }
 
+  test("spark.graft.dedup.cache is the one spark.graft.* conf key under src/main") {
+    // The chain-reorder and zone-map rules are applied by the queries
+    // that want them and the sketch catalog is always on, so the dedup
+    // persist knob is the only key left. A new key is added here on
+    // purpose or not at all.
+    import scala.jdk.CollectionConverters._
+    val key = """"(spark\.graft\.[\w.]*)""".r
+    val keys = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        key.findAllMatchIn(java.nio.file.Files.readString(p))
+          .map(m => s"${p.getFileName}: ${m.group(1)}")
+      }.toSeq
+    assert(keys.nonEmpty && keys.forall(_.endsWith(": spark.graft.dedup.cache")),
+      keys.mkString("\n"))
+  }
+
   test("q233: single-table residuals of the three-way OR are pushed to BOTH parquet scans") {
     val plan = planOf(Relational.q233DisjunctiveScan(spark, d))
     // lineitem side: the derived quantity-range disjunction reaches the scan

@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
-class SketchPlannerSpec extends SparkSpec {
+class SketchPlannerSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   // A(k1), B(k1,k2), C(k2): the planner prices A⋈B vs B⋈C and must join
@@ -389,23 +389,22 @@ class SketchPlannerSpec extends SparkSpec {
     assert(jobCount === afterChain, "...and the second chain call is fully warm")
   }
 
-  test("sketch catalog: spark.graft.planner.sketchCache=false re-prices every call") {
+  test("sketch catalog: SketchCatalog.clear() re-prices the next call") {
     // max job ID, not .length: the status tracker RETAINS a bounded
     // number of jobs (spark.ui.retainedJobs), so in a long suite run
     // the count can DECREASE as old jobs evict mid-test; IDs are
     // monotonic, so the max is eviction-proof
     def jobCount = spark.sparkContext.statusTracker
       .getJobIdsForGroup(null).foldLeft(-1)(math.max)
-    spark.conf.set("spark.graft.planner.sketchCache", "false")
-    try {
-      val (tables, keys) = chainFixture
-      val c0 = jobCount
-      SketchPlanner.decideChain(tables, keys)
-      val c1 = jobCount
-      assert(c1 > c0)
-      SketchPlanner.decideChain(tables, keys)
-      assert(jobCount > c1, "with the catalog off, the second call must re-scan")
-    } finally spark.conf.unset("spark.graft.planner.sketchCache")
+    val (tables, keys) = chainFixture
+    val steps = SketchPlanner.decideChain(tables, keys) // warm the catalog
+    val c0 = jobCount
+    SketchPlanner.decideChain(tables, keys)
+    assert(jobCount === c0, "a warm catalog prices with zero jobs")
+    SketchPlanner.SketchCatalog.clear()
+    assert(SketchPlanner.SketchCatalog.size(spark) === 0)
+    assert(SketchPlanner.decideChain(tables, keys) === steps)
+    assert(jobCount > c0, "after clear() the next call must re-scan")
   }
 
   test("chain decision prices the ACTUAL filtered frame, not any catalog: a filter flips the order") {
@@ -434,10 +433,9 @@ class SketchPlannerSpec extends SparkSpec {
   }
 
   test("persisted sketch manifest: a COLD session prices chain and star with ZERO jobs, decisions identical to scan-derived") {
-    import java.nio.file.Files
     // three parquet tables: a fact and two dims of very different
     // selectivity, so the decisions are non-trivial
-    val base = Files.createTempDirectory("graft-sketchman").toString
+    val base = tempDir("graft-sketchman").toString
     spark.range(20000).select(col("id").as("fk1"),
       pmod(col("id"), lit(50)).as("fk2"))
       .write.parquet(s"$base/fact")
@@ -486,8 +484,7 @@ class SketchPlannerSpec extends SparkSpec {
   }
 
   test("persisted sketch append: slice-merge equals a from-scratch rebuild (CMS linearity)") {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft-sketchappend").toString
+    val base = tempDir("graft-sketchappend").toString
     spark.range(10000).select(col("id").as("k"),
       pmod(col("id"), lit(97)).as("j"))
       .write.parquet(s"$base/t")
@@ -518,8 +515,7 @@ class SketchPlannerSpec extends SparkSpec {
   }
 
   test("PARTITIONED lake tables price cold with zero jobs too; the recursive stamp detects a partition rewrite (r17)") {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft-sketchpart").toString
+    val base = tempDir("graft-sketchpart").toString
     // a partitioned fact (the Delta/Iceberg layering) + a flat dim
     spark.range(12000).select(pmod(col("id"), lit(4)).cast("string").as("tenant"),
       pmod(col("id"), lit(500)).as("k"), col("id").as("v"))
@@ -566,8 +562,7 @@ class SketchPlannerSpec extends SparkSpec {
   }
 
   test("stale-stamp guard: an out-of-band rewrite invalidates persisted sketches; decisions reprice from scan (r16 task 6)") {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft-sketchstale").toString
+    val base = tempDir("graft-sketchstale").toString
     val conf = spark.sessionState.newHadoopConf()
     val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
     def jobCount = spark.sparkContext.statusTracker
@@ -616,8 +611,7 @@ class SketchPlannerSpec extends SparkSpec {
   }
 
   test("write() clears stale cms sidecars: a narrower re-sketch serves no old-column counters (r16 advice)") {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft-sketchnarrow").toString
+    val base = tempDir("graft-sketchnarrow").toString
     spark.range(5000).select(col("id").as("k"), pmod(col("id"), lit(7)).as("j"))
       .write.parquet(s"$base/t")
     SketchPlanner.SketchManifest.write(spark, s"$base/t", Seq("k", "j"))
@@ -629,9 +623,8 @@ class SketchPlannerSpec extends SparkSpec {
     assert(SketchPlanner.SketchManifest.readCms(spark, s"$base/t", "k").isDefined)
   }
 
-  test("disabling spark.graft.planner.sketchCache (or .sketchManifest) bypasses the persisted manifest (r16 advice)") {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft-sketchoptout").toString
+  test("persisted sketch manifest: a fresh default session prices a chain from it with zero jobs") {
+    val base = tempDir("graft-sketchoptout").toString
     spark.range(6000).select(pmod(col("id"), lit(300)).as("k"),
       col("id").as("v")).write.parquet(s"$base/t")
     spark.range(300).select(col("id").as("k"), lit(1L).as("w"))
@@ -640,33 +633,18 @@ class SketchPlannerSpec extends SparkSpec {
       SketchPlanner.SketchManifest.write(spark, s"$base/$d", Seq("k"))
     def jobCount = spark.sparkContext.statusTracker
       .getJobIdsForGroup(null).foldLeft(-1)(math.max)
-    def decideUnder(flag: String): Unit = {
-      val s = spark.newSession()
-      s.conf.set(flag, "false")
-      val b = jobCount
-      SketchPlanner.decideChain(
-        Seq(s.read.parquet(s"$base/t"), s.read.parquet(s"$base/u")), Seq("k"))
-      assert(jobCount > b,
-        s"$flag=false must force fresh pricing jobs, not silent manifest reads")
-    }
-    // the cache opt-out covers the persisted layer too...
-    decideUnder("spark.graft.planner.sketchCache")
-    // ...and the dedicated flag disables only the persisted layer
-    decideUnder("spark.graft.planner.sketchManifest")
-    // control: default flags price from the manifest with zero jobs
-    // (frames built BEFORE the baseline — parquet schema inference may
-    // run a listing job of its own, which is not the decider's cost)
+    // frames built BEFORE the baseline — parquet schema inference may
+    // run a listing job of its own, which is not the decider's cost
     val s0 = spark.newSession()
     val t0 = s0.read.parquet(s"$base/t")
     val u0 = s0.read.parquet(s"$base/u")
     val b0 = jobCount
     SketchPlanner.decideChain(Seq(t0, u0), Seq("k"))
-    assert(jobCount === b0, "default flags must keep the zero-job cold path")
+    assert(jobCount === b0, "a default session must keep the zero-job cold path")
   }
 
   test("persisted sketch stats SURVIVE optimizeCompact: row-preserving rewrite restamps, serving identical counters") {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft-sketchcompact").toString
+    val base = tempDir("graft-sketchcompact").toString
     val dir = s"$base/t"
     // fragmented history with a sketched join key riding along
     val rows = spark.range(8000).select(col("id"),

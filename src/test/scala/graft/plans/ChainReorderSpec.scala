@@ -7,13 +7,11 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.SketchPlanner
 
-/** The automatic sketch-driven chain reorder: opt-in inertness, the
-  * canonical-equality pin against buildChain (the round-13 verdict's
-  * "done" bar), end-to-end result invariance, and the conservative
-  * non-matches (star shapes, hinted joins). */
+/** The automatic sketch-driven chain reorder: a default session never
+  * runs it, the canonical-equality pin against buildChain (the
+  * round-13 verdict's "done" bar), end-to-end result invariance, and
+  * the conservative non-matches (star shapes, hinted joins). */
 class ChainReorderSpec extends SparkSpec {
-
-  ChainReorderExtension.install(spark)
 
   /** SketchPlannerSpec's decisive 4-table chain: e0 cheap 1:1, e1
     * explosive (40 hot keys × 50 each side), e2 a 100-row dim. Greedy:
@@ -33,26 +31,27 @@ class ChainReorderSpec extends SparkSpec {
       acc.join(t, k)
     }
 
-  private def withFlag[T](body: => T): T = {
-    spark.conf.set(RewriteChainJoin.FLAG, "true")
-    try body finally spark.conf.unset(RewriteChainJoin.FLAG)
-  }
+  /** `df` with the rule applied once to its optimized plan. */
+  private def reordered(df: DataFrame): DataFrame =
+    GraftSqlBridge.optimizedWith(df, RewriteChainJoin)(_ => ())
 
   private def multiset(df: DataFrame, cols: Seq[String]): Map[Seq[Any], Int] =
     df.select(cols.map(col): _*).collect().map(_.toSeq)
       .groupBy(identity).view.mapValues(_.length).toMap
 
-  test("flag off (default): the rule is inert — same plan instance back") {
+  test("a default session is left alone: only RewriteWindowTopK is installed, the chain plans without join hints") {
+    assert(spark.experimental.extraOptimizations === Seq(RewriteWindowTopK))
     val (tables, keys) = chainFixture
     val opt = leftToRight(tables, keys).queryExecution.optimizedPlan
-    assert(RewriteChainJoin(opt) eq opt)
+    assert(!opt.exists { case j: Join => j.hint != JoinHint.NONE; case _ => false },
+      s"a default session must not reorder or hint the chain:\n$opt")
   }
 
   test("rule-rewritten plan canonicalizes equal to buildChain's on the 4-table fixture") {
     val (tables, keys) = chainFixture
     val chainDf = leftToRight(tables, keys)
     val opt = chainDf.queryExecution.optimizedPlan
-    val rewritten = withFlag { RewriteChainJoin(opt) }
+    val rewritten = RewriteChainJoin(opt)
     assert(rewritten.canonicalized !== opt.canonicalized,
       "the fixture's best order is not left-to-right; the rule must rewrite")
     val steps = SketchPlanner.decideChain(tables, keys)
@@ -74,15 +73,13 @@ class ChainReorderSpec extends SparkSpec {
     val (tables, keys) = chainFixture
     val cols = Seq("k0", "k1", "k2", "v0", "v1", "v2", "v3")
     val off = multiset(leftToRight(tables, keys), cols)
-    withFlag {
-      val on = leftToRight(tables, keys)
-      assert(multiset(on, cols) === off)
-      val hinted = on.queryExecution.optimizedPlan.collect {
-        case j: Join if j.hint != JoinHint.NONE => j
-      }
-      assert(hinted.nonEmpty, "decideChain's broadcast hints must reach the plan:\n" +
-        on.queryExecution.optimizedPlan)
+    val on = reordered(leftToRight(tables, keys))
+    assert(multiset(on, cols) === off)
+    val hinted = on.queryExecution.optimizedPlan.collect {
+      case j: Join if j.hint != JoinHint.NONE => j
     }
+    assert(hinted.nonEmpty, "decideChain's broadcast hints must reach the plan:\n" +
+      on.queryExecution.optimizedPlan)
   }
 
   test("star shape: most-selective dim joins first, broadcast hints land, results unchanged") {
@@ -96,18 +93,18 @@ class ChainReorderSpec extends SparkSpec {
       .join(dSel, col("a") === col("sa"))
     val cols = star.columns.toSeq
     val off = multiset(star, cols)
-    withFlag {
-      val on = star
-      assert(multiset(on, cols) === off)
-      val joins = on.queryExecution.optimizedPlan.collect { case j: Join => j }
-      assert(joins.size === 2)
-      // the INNERMOST join (last collected) must take the selective dim
-      // — the rule reversed the written order
-      assert(joins.last.right.output.map(_.name).contains("dselv"),
-        s"selective dim must join first:\n${on.queryExecution.optimizedPlan}")
-      assert(joins.forall(_.hint != JoinHint.NONE),
-        "both 100-/10-row dims are under the broadcast budget")
-    }
+    assert(multiset(reordered(star), cols) === off)
+    // the rule's own output: re-optimizing it lifts the literal dselv
+    // column above the joins
+    val rw = RewriteChainJoin(star.queryExecution.optimizedPlan)
+    val joins = rw.collect { case j: Join => j }
+    assert(joins.size === 2)
+    // the INNERMOST join (last collected) must take the selective dim
+    // — the rule reversed the written order
+    assert(joins.last.right.output.map(_.name).contains("dselv"),
+      s"selective dim must join first:\n$rw")
+    assert(joins.forall(_.hint != JoinHint.NONE),
+      "both 100-/10-row dims are under the broadcast budget")
   }
 
   test("q48-shaped TPC-H star (lineitem fact, three dims on distinct fact keys): rule == manual buildStar") {
@@ -126,7 +123,7 @@ class ChainReorderSpec extends SparkSpec {
     val cols = star.columns.toSeq
     val off = multiset(star, cols)
     val opt = star.queryExecution.optimizedPlan
-    val rewritten = withFlag { RewriteChainJoin(opt) }
+    val rewritten = RewriteChainJoin(opt)
     val edges = Seq((l("l_orderkey"), o("o_orderkey")),
       (l("l_suppkey"), su("s_suppkey")), (l("l_partkey"), p("p_partkey")))
     val steps = SketchPlanner.decideStar(l, Seq(o, su, p), edges)
@@ -139,8 +136,8 @@ class ChainReorderSpec extends SparkSpec {
       manual.queryExecution.optimizedPlan.canonicalized,
       s"\nrule:\n$rewritten\nmanual:\n${manual.queryExecution.optimizedPlan}")
     assert(multiset(GraftSqlBridge.ofRows(spark, rewritten), cols) === off)
-    // end-to-end under the flag: same answer
-    withFlag { assert(multiset(star, cols) === off) }
+    // end-to-end through the rule: same answer
+    assert(multiset(reordered(star), cols) === off)
   }
 
   test("snowflake branch collapses into its dim: results unchanged, branch stays intact") {
@@ -157,13 +154,13 @@ class ChainReorderSpec extends SparkSpec {
     val cols = q.columns.toSeq
     val off = multiset(q, cols)
     val opt = q.queryExecution.optimizedPlan
-    val rw = withFlag { RewriteChainJoin(opt) }
+    val rw = RewriteChainJoin(opt)
     // d1 keeps 100/1000 of the fact, d2 keeps all of it: the selective
     // collapsed branch must join first — the rewrite fires
     assert(rw.canonicalized !== opt.canonicalized, s"rewrite did not fire:\n$opt")
     // the snow⋈d1 join must sit INSIDE the branch (below its fact join),
     // never interleaved with the other branch's fact join
-    withFlag { assert(multiset(q, cols) === off) }
+    assert(multiset(reordered(q), cols) === off)
   }
 
   test("q5-shaped 5-table snowflake (lineitem fact, orders dim, supplier->nation->region branch): rule == manual collapsed star") {
@@ -187,7 +184,7 @@ class ChainReorderSpec extends SparkSpec {
     val cols = q.columns.toSeq
     val off = multiset(q, cols)
     val opt = q.queryExecution.optimizedPlan
-    val rewritten = withFlag { RewriteChainJoin(opt) }
+    val rewritten = RewriteChainJoin(opt)
     // manual referee: collapse the branch by hand, then star-decide
     val branch = su.join(n, su("s_nationkey") === n("n_nationkey"))
       .join(re, n("n_regionkey") === re("r_regionkey"))
@@ -200,7 +197,7 @@ class ChainReorderSpec extends SparkSpec {
       manual.queryExecution.optimizedPlan.canonicalized,
       s"\nrule:\n$rewritten\nmanual:\n${manual.queryExecution.optimizedPlan}")
     assert(multiset(GraftSqlBridge.ofRows(spark, rewritten), cols) === off)
-    withFlag { assert(multiset(q, cols) === off) }
+    assert(multiset(reordered(q), cols) === off)
   }
 
   test("randomized snowflake soak: 8 seeded random trees — flag-on results always equal flag-off") {
@@ -235,9 +232,8 @@ class ChainReorderSpec extends SparkSpec {
       def q = ord.foldLeft(fact: DataFrame)(join1)
       val cols = q.columns.toSeq
       val off = multiset(q, cols)
-      withFlag {
-        assert(multiset(q, cols) === off, s"tree $t order $ord changed results")
-      }
+      assert(multiset(reordered(q), cols) === off,
+        s"tree $t order $ord changed results")
     }
   }
 
@@ -246,7 +242,7 @@ class ChainReorderSpec extends SparkSpec {
     val hintedChain = tables.head.join(broadcast(tables(1)), keys.head)
       .join(tables(2), keys(1)).join(tables(3), keys(2))
     val opt = hintedChain.queryExecution.optimizedPlan
-    val rw = withFlag { RewriteChainJoin(opt) }
+    val rw = RewriteChainJoin(opt)
     assert(rw.canonicalized === opt.canonicalized)
   }
 
@@ -269,24 +265,20 @@ class ChainReorderSpec extends SparkSpec {
     // Project anchor (the common shape: a selection above the chain)
     val sel = Seq("c_nationkey", "o_totalprice", "l_quantity", "p_size")
     val off = multiset(chain.select(sel.map(col): _*), sel)
-    withFlag {
-      val on = chain.select(sel.map(col): _*)
-      assert(multiset(on, sel) === off)
-      val hinted = on.queryExecution.optimizedPlan.collect {
-        case j: Join if j.hint != JoinHint.NONE => j
-      }
-      assert(hinted.nonEmpty, "the sf0.001 chain has broadcast-able sides; " +
-        "the rewrite must fire:\n" + on.queryExecution.optimizedPlan)
+    val on = reordered(chain.select(sel.map(col): _*))
+    assert(multiset(on, sel) === off)
+    val hinted = on.queryExecution.optimizedPlan.collect {
+      case j: Join if j.hint != JoinHint.NONE => j
     }
+    assert(hinted.nonEmpty, "the sf0.001 chain has broadcast-able sides; " +
+      "the rewrite must fire:\n" + on.queryExecution.optimizedPlan)
     // bare-Join anchor (no projection above): exact output order restored
     val offBare = chain.collect().map(_.toSeq)
       .groupBy(identity).view.mapValues(_.length).toMap
-    withFlag {
-      val onBare = chain
-      assert(onBare.columns.toSeq === chain.columns.toSeq)
-      assert(onBare.collect().map(_.toSeq)
-        .groupBy(identity).view.mapValues(_.length).toMap === offBare)
-    }
+    val onBare = reordered(chain)
+    assert(onBare.columns.toSeq === chain.columns.toSeq)
+    assert(onBare.collect().map(_.toSeq)
+      .groupBy(identity).view.mapValues(_.length).toMap === offBare)
   }
 
   test("bushy lemma: the segment-greedy chain decider emits a JOIN-OF-JOINS when the middle edge is explosive (r16 task 7)") {
@@ -319,13 +311,11 @@ class ChainReorderSpec extends SparkSpec {
     val cols = Seq("v0", "v1", "v2", "v3")
     def q = leftToRight(tables, keys)
     val off = multiset(q, cols)
-    withFlag {
-      val rw = RewriteChainJoin(q.queryExecution.optimizedPlan)
-      val rtop = rw.collectFirst { case j: Join => j }.get
-      assert(hasJoin(rtop.left) && hasJoin(rtop.right),
-        s"rule must rebuild the bushy shape, got\n$rw")
-      assert(multiset(q, cols) === off, "bushy rewrite changed results")
-    }
+    val rw = RewriteChainJoin(q.queryExecution.optimizedPlan)
+    val rtop = rw.collectFirst { case j: Join => j }.get
+    assert(hasJoin(rtop.left) && hasJoin(rtop.right),
+      s"rule must rebuild the bushy shape, got\n$rw")
+    assert(multiset(reordered(q), cols) === off, "bushy rewrite changed results")
     // the lemma's teeth: EVERY left-deep (one-table-at-a-time) order
     // over this chain materializes a contiguous 3-table segment before
     // the last join, and both such segments ({t0,t1,t2}, {t1,t2,t3})
@@ -386,17 +376,15 @@ class ChainReorderSpec extends SparkSpec {
     def q = fact.join(dimO, "ok").join(supp, "sk").join(nat, "nk").join(reg, "rk")
     val cols = Seq("fv", "ov")
     val off = multiset(q, cols)
-    withFlag {
-      val rw = RewriteChainJoin(q.queryExecution.optimizedPlan)
-      // bushy: some join's RIGHT child is itself a joined subtree (the
-      // collapsed supplier→nation→region branch) — the literal
-      // left-deep spine has join-free right children everywhere
-      val bushy = rw.collect {
-        case j: Join if j.right.collectFirst { case i: Join => i }.isDefined => j
-      }
-      assert(bushy.nonEmpty, s"expected a collapsed-branch join, got\n$rw")
-      assert(multiset(q, cols) === off, "snowflake rewrite changed results")
+    val rw = RewriteChainJoin(q.queryExecution.optimizedPlan)
+    // bushy: some join's RIGHT child is itself a joined subtree (the
+    // collapsed supplier→nation→region branch) — the literal
+    // left-deep spine has join-free right children everywhere
+    val bushy = rw.collect {
+      case j: Join if j.right.collectFirst { case i: Join => i }.isDefined => j
     }
+    assert(bushy.nonEmpty, s"expected a collapsed-branch join, got\n$rw")
+    assert(multiset(reordered(q), cols) === off, "snowflake rewrite changed results")
     // intermediates: collapsing s⋈n⋈r costs dim-grain rows (≤100 each),
     // then ONE fact join; threading costs fact-grain rows (~5000) at
     // EVERY link. (reg keeps rk=0 → 5 of 25 nations → 20 suppliers →
@@ -409,17 +397,15 @@ class ChainReorderSpec extends SparkSpec {
       s"branch-first intermediates $branchInter vs threaded $threadInter")
   }
 
-  test("gated queries are output-invariant under the flag") {
+  test("gated queries are output-invariant under the rule") {
     val d = sf("sf0.001")
     for (name <- Seq("q05_local_supplier", "q03_top_revenue",
         "q48_market_share")) {
       val q = graft.SparkEntry.queries(name)
       val off = q(spark, d).collect().map(_.toSeq)
         .groupBy(identity).view.mapValues(_.length).toMap
-      val on = withFlag {
-        q(spark, d).collect().map(_.toSeq)
-          .groupBy(identity).view.mapValues(_.length).toMap
-      }
+      val on = reordered(q(spark, d)).collect().map(_.toSeq)
+        .groupBy(identity).view.mapValues(_.length).toMap
       assert(on === off, name)
     }
   }

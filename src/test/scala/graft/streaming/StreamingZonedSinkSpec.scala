@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
-
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.operators.{SketchPlanner, Storage}
 
 /** The streaming zoned sink: every micro-batch is one parquet commit +
@@ -14,13 +13,13 @@ import graft.operators.{SketchPlanner, Storage}
   * complete, merged zones == footer rebuild, merged sketch == rebuild,
   * a replayed batch id is a no-op, and a probe through the automatic
   * rule prunes mid-ingestion without changing the answer. */
-class StreamingZonedSinkSpec extends SparkSpec {
+class StreamingZonedSinkSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("zoned streaming sink: per-batch zone + sketch commits equal rebuilds; replays drop; probes prune") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-zsink").toString + "/t"
-    val ck = Files.createTempDirectory("graft-zsink-ck").toString
+    val dir = tempDir("graft-zsink").toString + "/t"
+    val ck = tempDir("graft-zsink-ck").toString
     val mem = MemoryStream[(Long, Double)]
     val q = ZonedSink.start(mem.toDF().toDF("k", "price"),
       "price", 4, dir, ck, sketchCols = Seq("k"))
@@ -68,19 +67,18 @@ class StreamingZonedSinkSpec extends SparkSpec {
       .filter(col("price") >= 300.0 && col("price") <= 500.0)
     val off = probe.agg(count_distinct(col("k")), sum(col("price")))
       .collect()(0)
-    spark.conf.set(graft.plans.ZonemapPruneRule.FLAG, "true")
-    try {
-      assert(probe.agg(count_distinct(col("k")), sum(col("price")))
-        .collect()(0) === off)
-      val planFiles = probe.queryExecution.optimizedPlan.collect {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.inputFiles.length
-      }.sum
-      val total = spark.read.parquet(dir).inputFiles.length
-      assert(planFiles > 0 && planFiles < total,
-        s"probe should prune the streamed layout: $planFiles of $total")
-    } finally spark.conf.unset(graft.plans.ZonemapPruneRule.FLAG)
+    val pruned = GraftSqlBridge.optimizedWith(probe,
+      graft.plans.ZonemapPruneRule)(_ => ())
+    assert(pruned.agg(count_distinct(col("k")), sum(col("price")))
+      .collect()(0) === off)
+    val planFiles = pruned.queryExecution.optimizedPlan.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation.asInstanceOf[
+          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+          .location.inputFiles.length
+    }.sum
+    val total = spark.read.parquet(dir).inputFiles.length
+    assert(planFiles > 0 && planFiles < total,
+      s"probe should prune the streamed layout: $planFiles of $total")
   }
 }
