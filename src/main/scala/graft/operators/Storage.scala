@@ -2,9 +2,16 @@ package graft.operators
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.Md5Bits.{md5Bits, md5Bucket}
 
 /** Source/sink breadth under the driver gate (not just under specs):
@@ -513,75 +520,245 @@ object Storage {
       |SELECT layout, n_files, n_skipped, rows_scanned, rows_selected
       |FROM roll""".stripMargin
 
-  /** One file's zone map: [lo, hi] days-since-epoch of its date column,
-    * folded across the file's row groups from the parquet FOOTER. */
-  case class FileZone(path: String, lo: Int, hi: Int)
+  // ─────────────────────────── zone maps ───────────────────────────
+  //
+  // One [lo, hi] pair per file per column, whatever the column's type:
+  // what differs by type lives in [[ZoneCodec]] (date, string,
+  // numeric), and every operation below is one generic implementation
+  // over it. Two stores share the commit-file format: the single-column
+  // AXES (one directory per codec, `ZoneCodec.dirName`, whose `_column`
+  // sidecar names the clustered column) and the multi-column
+  // `_colzones/<col>/` store (a `_type` sidecar names the codec, and
+  // per-file null counts ride along). Each public write entry picks its
+  // codec from the column's Spark type.
 
   /** Write `df` as `nFiles` parquet files globally range-clustered and
-    * internally sorted on `dateCol` — the layout whose per-file min/max
-    * stats make date predicates skippable (what q213's census priced;
+    * internally sorted on `c` — the layout whose per-file min/max stats
+    * make probes on `c` skippable (what q213's census priced;
     * [[prunedRead]] is the read path that cashes it in) — then build
-    * the zone-map manifest from the fresh footers and PERSIST it next
-    * to the data (`_zonemap/zones-00000.json`). Stats are collected at WRITE time
-    * and read back in O(1) at plan time, the Delta/Iceberg split:
-    * measured locally, re-reading 64 footers per query cost more than
-    * the full scan it saved at sf0.1 (the first cut in BASELINE.md
-    * §"Round-13: zone-map pruned read A/B"), while
-    * the persisted manifest makes the plan cost one small file. */
-  def zonemapClusteredWrite(df: DataFrame, dateCol: String, nFiles: Int,
+    * the zone manifest from the fresh footers and PERSIST it next to
+    * the data, as `zones-00000.json` in the axis directory of `c`'s
+    * codec. Stats are collected at WRITE time and read back in O(1) at
+    * plan time, the Delta/Iceberg split: measured locally, re-reading 64
+    * footers per query cost more than the full scan it saved at sf0.1
+    * (the first cut in BASELINE.md §"Round-13: zone-map pruned read
+    * A/B"), while the persisted manifest makes the plan cost one small
+    * file. */
+  def zonemapClusteredWrite(df: DataFrame, c: String, nFiles: Int,
       path: String): Unit = {
-    df.repartitionByRange(nFiles, col(dateCol))
-      .sortWithinPartitions(col(dateCol))
-      .write.mode("overwrite").parquet(path)
-    val s = df.sparkSession
-    writeManifest(s, path, zonemapManifest(s, path, dateCol))
-    writeAxisColumn(s, manifestDir(path), dateCol)
+    clusteredWriter(df, nFiles, c).mode("overwrite").parquet(path)
+    commitAxis(df.sparkSession, path, c, codecOf(df.schema, c))
   }
 
   /** APPEND a new batch of `nFiles` clustered files to an existing
-    * layout and COMMIT only the new files' zones: each append writes its
-    * own `zones-<k>.json` under `_zonemap/` from only ITS OWN files'
-    * footers (prior commits are untouched — not even re-read for the
-    * known-set, beyond the listing), the discipline that keeps manifest
-    * maintenance O(new files) while the table grows to millions:
-    * exactly how a Delta/Iceberg append commit adds file stats without
-    * restating the table. [[readManifest]] merges commits sorted by
-    * data-file path, so the merged view is identical to a from-scratch
-    * rebuild (StorageSpec pins that equality, and q219 gates a probe
-    * spanning both commits). */
-  def zonemapAppend(df: DataFrame, dateCol: String, nFiles: Int,
+    * layout and COMMIT only the new files' zones: the append writes its
+    * own `zones-<k>.json` from only ITS OWN files' footers (prior
+    * commits are untouched), the discipline that keeps manifest
+    * maintenance O(new files) while the table grows — how a
+    * Delta/Iceberg append commit adds file stats without restating the
+    * table. [[readManifest]] merges commits sorted by data-file path, so
+    * the merged view is identical to a from-scratch rebuild (StorageSpec
+    * pins that equality; q219 and q268 gate probes spanning both
+    * commits). */
+  def zonemapAppend(df: DataFrame, c: String, nFiles: Int,
       path: String): Unit = {
     val s = df.sparkSession
-    val prior = readManifest(s, path).getOrElse(Seq.empty)
-    df.repartitionByRange(nFiles, col(dateCol))
-      .sortWithinPartitions(col(dateCol))
-      .write.mode("append").parquet(path)
-    val fresh = footerZones(s, path, dateCol, prior.map(_.path).toSet)
-    writeManifest(s, path, fresh.sortBy(_.path))
-    writeAxisColumn(s, manifestDir(path), dateCol)
+    val codec = codecOf(df.schema, c)
+    val prior = readManifest(s, path, codec).getOrElse(Seq.empty).map(_.path)
+    clusteredWriter(df, nFiles, c).mode("append").parquet(path)
+    commitAxis(s, path, c, codec, prior.toSet)
   }
 
-  /** The manifest lives as a DIRECTORY of per-commit JSON-lines files
-    * (`_zonemap/zones-00000.json`, `zones-00001.json`, …) — the
-    * `_delta_log` shape: the underscore prefix on the DIRECTORY hides
-    * the whole manifest from data scans of the layout, while the
-    * normally-named commit files inside stay readable by every Spark
-    * reader (an underscore-prefixed FILE would be invisible to
-    * [[manifestDf]]'s distributed read too — both Spark SQL's listing
-    * and Hadoop's input filter treat it as hidden). */
-  private def manifestDir(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "_zonemap")
+  /** ATTACH a zone manifest on `c` to an EXISTING layout — the post-hoc
+    * stats step of Delta's OPTIMIZE ZORDER: any write path (z-order, a
+    * foreign writer) whose files happen to be clustered on a column can
+    * cash that in, and the automatic rule serves probes from then on.
+    * One footer walk, zero data pages. Axes of different codecs attach
+    * independently over ONE layout and a multi-axis probe prunes on the
+    * survivor INTERSECTION (q269 gates the z-order 2-D case). */
+  def attachZonemap(s: SparkSession, dir: String, c: String): Unit =
+    commitAxis(s, dir, c, codecOf(s.read.parquet(dir).schema, c))
+
+  /** COMPOUND clustered write — ONE physical layout carrying BOTH axis
+    * manifests: files range-clustered on (strCol, dateCol) get tight
+    * string zones AND, within each string range, tight date zones, so
+    * the common two-axis probe (tenant + time window) prunes on the
+    * INTERSECTION of both survivor sets. */
+  def compoundZonemapWrite(df: DataFrame, strCol: String, dateCol: String,
+      nFiles: Int, path: String): Unit = {
+    clusteredWriter(df, nFiles, strCol, dateCol).mode("overwrite").parquet(path)
+    Seq(dateCol, strCol).foreach(c =>
+      commitAxis(df.sparkSession, path, c, codecOf(df.schema, c)))
+  }
+
+  /** PARTITION-DIR + ZONE-MAP layered write (r16 verdict task 4): data
+    * lands under `partCol=value/` directories (Spark's own partition
+    * pruning handles that axis) AND, within each partition, files are
+    * range-clustered on `dateCol` with per-file zones persisted in ONE
+    * root-level axis manifest holding partition-relative paths — the
+    * Delta/Iceberg layering where directory pruning and file-stat
+    * skipping compose. */
+  def partitionedZonemapClusteredWrite(df: DataFrame, partCol: String,
+      dateCol: String, nFiles: Int, path: String): Unit = {
+    clusteredWriter(df, nFiles, partCol, dateCol)
+      .partitionBy(partCol).mode("overwrite").parquet(path)
+    commitAxis(df.sparkSession, path, dateCol, codecOf(df.schema, dateCol))
+  }
+
+  /** A persisted axis manifest — every commit merged, sorted by
+    * data-file path (= the from-scratch rebuild's order), absolute
+    * paths restored against `dir`. None when the layout has no axis
+    * directory for `codec`. */
+  def readManifest[V](s: SparkSession, dir: String,
+      codec: ZoneCodec[V]): Option[Seq[FileZone[V]]] =
+    readZones(s, dir, axisDir(dir, codec), codec)
+
+  /** `c`'s zones rebuilt from the parquet FOOTERS only — O(files)
+    * metadata I/O, zero data pages; the referee a persisted manifest
+    * must equal. */
+  def zonemapManifest[V](s: SparkSession, dir: String, c: String,
+      codec: ZoneCodec[V]): Seq[FileZone[V]] =
+    footerZones(s, dir, c, codec)
+
+  /** Every zoned column a layout carries, as the automatic pruning rule
+    * reads it once per directory: each advertised axis (a `_column`
+    * sidecar plus its persisted manifest) first, then the `_colzones/`
+    * store. Persisted files only — never a footer walk at plan time. */
+  def zoneStore(s: SparkSession, dir: String): ColumnZones = {
+    val store = readColumnZones(s, dir)
+    store.copy(cols = ZoneCodec.all.flatMap(axisZones(s, dir, _)) ++ store.cols)
+  }
+
+  private def axisZones[V](s: SparkSession, dir: String,
+      codec: ZoneCodec[V]): Option[ZonedColumn[V]] =
+    for {
+      c <- readSidecar(s, axisDir(dir, codec), "_column")
+      zones <- readManifest(s, dir, codec)
+    } yield ZonedColumn(c, codec, zones)
+
+  private def codecOf(schema: StructType, c: String): ZoneCodec[_] =
+    ZoneCodec.of(schema(c).dataType, c)
+
+  /** A manifest lives as a DIRECTORY of per-commit JSON-lines files
+    * (`zones-00000.json`, `zones-00001.json`, …) — the `_delta_log`
+    * shape: the underscore prefix on the DIRECTORY hides the whole
+    * manifest from data scans of the layout, while the normally-named
+    * commit files inside stay readable by every Spark reader (an
+    * underscore-prefixed FILE would be invisible to [[manifestDf]]'s
+    * distributed read too). */
+  private def axisDir(dir: String, codec: ZoneCodec[_]) =
+    new Path(dir, codec.dirName)
+
+  private def clusteredWriter(df: DataFrame, nFiles: Int,
+      cols: String*): DataFrameWriter[Row] = {
+    val cs = cols.map(col)
+    df.repartitionByRange(nFiles, cs: _*).sortWithinPartitions(cs: _*).write
+  }
+
+  /** Commit `c`'s footer zones (files not in `known`) to its codec's
+    * axis and name `c` in the `_column` sidecar — what lets the
+    * automatic rule route a plain `read.filter(...)` through the
+    * manifest without being told which column the layout is clustered
+    * on. */
+  private def commitAxis[V](s: SparkSession, dir: String, c: String,
+      codec: ZoneCodec[V], known: Set[String] = Set.empty): Unit = {
+    val md = axisDir(dir, codec)
+    commitZones(s, dir, md, c, codec, known)
+    writeSidecar(s, md, "_column", c)
+  }
+
+  private def commitZones[V](s: SparkSession, dir: String, md: Path,
+      c: String, codec: ZoneCodec[V], known: Set[String] = Set.empty): Unit =
+    writeCommit(s, dir, md, "zones",
+      footerZones(s, dir, c, codec, known).map(z => z.path -> codec.encode(z)))
+
+  private def commitNulls(s: SparkSession, dir: String, md: Path, c: String,
+      known: Set[String] = Set.empty): Unit =
+    writeCommit(s, dir, md, "nulls", footerNullStats(s, dir, c, known).map(z =>
+      z.path -> s""""nulls":${z.nulls.getOrElse(-1L)},"rows":${z.rows}"""))
+
+  /** Persist one COMMIT as the next `<family>-<k>.json` under `md`: one
+    * `{"file":"<path relative to dir>",<fields>}` line per entry, only
+    * the entries passed in, never a restatement of prior commits.
+    * Relative names keep the layout valid if the directory moves. Each
+    * statistic family (`zones`, `nulls`) numbers its own commits. */
+  private def writeCommit(s: SparkSession, dir: String, md: Path,
+      family: String, entries: Seq[(String, String)]): Unit = {
+    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
+    fs.mkdirs(md)
+    val k = fs.listStatus(md).count(_.getPath.getName.startsWith(family + "-"))
+    val out = fs.create(new Path(md, f"$family%s-$k%05d.json"), true)
+    try out.write(entries.map { case (p, fields) =>
+      s"""{"file":"${relativize(fs, new Path(dir), new Path(p))}",$fields}"""
+    }.mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** Every `<family>-*.json` commit under `md` merged and sorted by
+    * data-file path, each line's fields parsed by `parse`; None when
+    * `md` does not exist. A line `parse` rejects fails loudly. */
+  private def readCommits[T](s: SparkSession, dir: String, md: Path,
+      family: String)(parse: (String, String) => Option[T]): Option[Seq[T]] = {
+    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
+    if (!fs.exists(md)) return None
+    val line = """\{"file":"([^"]+)",(.*)\}""".r
+    val parsed = fs.listStatus(md).toSeq
+      .filter(_.getPath.getName.startsWith(family + "-"))
+      .sortBy(_.getPath.getName)
+      .flatMap(f => readText(fs, f.getPath).linesIterator.filter(_.nonEmpty).map { l =>
+        (l match {
+          case line(name, fields) =>
+            val p = fs.makeQualified(new Path(dir, name)).toString
+            parse(p, fields).map(p -> _)
+          case _ => None
+        }).getOrElse(throw new IllegalStateException(s"bad manifest line in $md: $l"))
+      })
+    Some(parsed.sortBy(_._1).map(_._2))
+  }
+
+  private def readZones[V](s: SparkSession, dir: String, md: Path,
+      codec: ZoneCodec[V]): Option[Seq[FileZone[V]]] =
+    readCommits(s, dir, md, "zones")((p, fields) =>
+      codec.decode(fields).map { case (lo, hi) => FileZone(p, lo, hi) })
+
+  private val nullFields = """"nulls":(-?\d+),"rows":(\d+)""".r
+
+  private def readNullStats(s: SparkSession, dir: String,
+      md: Path): Option[Seq[NullStat]] =
+    readCommits(s, dir, md, "nulls")((p, fields) => fields match {
+      case nullFields(n, r) => Some(NullStat(p, Some(n.toLong).filter(_ >= 0), r.toLong))
+      case _ => None
+    }).filter(_.nonEmpty)
+
+  private def writeSidecar(s: SparkSession, md: Path, name: String,
+      text: String): Unit = {
+    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
+    fs.mkdirs(md)
+    val out = fs.create(new Path(md, name), true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def readSidecar(s: SparkSession, md: Path,
+      name: String): Option[String] = {
+    val f = new Path(md, name)
+    val fs = f.getFileSystem(s.sessionState.newHadoopConf())
+    if (fs.exists(f)) Some(readText(fs, f).trim) else None
+  }
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
 
   /** Every data file under `root`, RECURSIVELY (r16 verdict task 4:
     * partition-dir + zone-map is exactly the Delta/Iceberg layering a
     * real lake uses — `lang=en/part-…parquet` files carry zones worth
     * skipping too). Hidden (`_…`/`.…`) directories and files are
     * excluded, matching Spark's own listing filter, so the manifest
-    * directories never list themselves. Flat layouts degrade to the
-    * old single-level listing exactly. */
-  private[operators] def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    * directories never list themselves. */
+  private[operators] def listDataFiles(fs: FileSystem,
+      root: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { st =>
         val n = st.getPath.getName
         if (n.startsWith("_") || n.startsWith(".")) Seq.empty
@@ -596,374 +773,149 @@ object Storage {
     * `lang=en/part-0.parquet` under a partitioned layout) — what the
     * manifests persist, so a layout stays valid if the directory moves
     * and partition subpaths round-trip through `new Path(dir, rel)`. */
-  private[operators] def relativize(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      file: org.apache.hadoop.fs.Path): String = {
+  private[operators] def relativize(fs: FileSystem, root: Path,
+      file: Path): String = {
     val r = fs.makeQualified(root).toUri.getPath
     val f = fs.makeQualified(file).toUri.getPath
     if (f.startsWith(r + "/")) f.drop(r.length + 1) else file.getName
   }
 
-  /** Persist one manifest COMMIT as the next `zones-<k>.json` under
-    * `_zonemap/` — only the zones passed in, never a restatement of
-    * prior commits. Relative file names: the layout stays valid if the
-    * directory moves. */
-  private def writeManifest(s: SparkSession, dir: String,
-      man: Seq[FileZone]): Unit =
-    writeDateZonesTo(s, dir, manifestDir(dir), man)
-
-  private def writeDateZonesTo(s: SparkSession, dir: String,
-      md: org.apache.hadoop.fs.Path, man: Seq[FileZone]): Unit = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val out = fs.create(nextCommitFile(fs, md), true)
-    try out.write(man.map(z =>
-      s"""{"file":"${relativize(fs, root, new org.apache.hadoop.fs.Path(z.path))}","lo":${z.lo},"hi":${z.hi}}""")
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Persist the clustering column's NAME as `_column` inside a
-    * manifest directory — what lets the automatic pruning rule
-    * (graft.plans.ZonemapPruneRule) route a plain `read.filter(...)`
-    * through the manifest without being told which column the layout
-    * is clustered on. A sidecar, not a manifest-format change: legacy
-    * readers list only `zones-*.json` and never see it; a layout
-    * without it simply stays manual-pruning-only. */
-  private def writeAxisColumn(s: SparkSession,
-      md: org.apache.hadoop.fs.Path, colName: String): Unit = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    fs.mkdirs(md)
-    val out = fs.create(new org.apache.hadoop.fs.Path(md, "_column"), true)
-    try out.write(colName.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readAxisColumn(s: SparkSession,
-      md: org.apache.hadoop.fs.Path): Option[String] = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    val f = new org.apache.hadoop.fs.Path(md, "_column")
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
-  }
-
-  /** The date-axis clustering column a layout advertises, if any. */
-  def zonemapColumn(s: SparkSession, dir: String): Option[String] =
-    readAxisColumn(s, manifestDir(dir))
-
-  /** The string-axis clustering column a layout advertises, if any. */
-  def strZonemapColumn(s: SparkSession, dir: String): Option[String] =
-    readAxisColumn(s, strManifestDir(dir))
-
-  /** Survivor paths for the automatic pruning rule: PERSISTED manifests
-    * only (the rule must never silently pay O(files) footer reads at
-    * plan time — manifest-less layouts stay unpruned), union-of-file-
-    * sets semantics identical to [[compoundPrunedRead]] (a file missing
-    * from one manifest is unskippable on that axis). Returns
-    * (survivors sorted, total) or None when no requested axis has a
-    * persisted manifest. */
-  def survivingFiles(s: SparkSession, dir: String,
-      dateBounds: Option[(Int, Int)], strEq: Option[String])
-      : Option[(Seq[String], Int)] =
-    survivingFilesMulti(s, dir, dateBounds.map(Seq(_)),
-      strEq.map(v => Seq((Option(v), Option(v)))))
-
-  /** [[survivingFiles]] generalized to a UNION of closed intervals per
-    * axis (round-15 verdict task 4) — the desugared shape of IN-lists
-    * (point intervals), string ranges, and same-column OR disjunctions.
-    * A file survives an axis when ANY interval overlaps its zone; a
-    * file absent from a manifest is unskippable on that axis; both
-    * axes intersect — all as before. String interval ends are Option
-    * (None = unbounded) and compare through [[utf8Lt]]. An EMPTY
-    * interval union (an unsatisfiable predicate) skips every
-    * manifested file — the re-applied filter returns nothing either
-    * way. */
-  def survivingFilesMulti(s: SparkSession, dir: String,
-      dateIvs: Option[Seq[(Int, Int)]],
-      strIvs: Option[Seq[(Option[String], Option[String])]],
-      numIvs: Option[Seq[(Option[BigDecimal], Option[BigDecimal])]] = None)
-      : Option[(Seq[String], Int)] =
-    survivorsFromManifests(
-      dateIvs.flatMap(_ => readManifest(s, dir)),
-      strIvs.flatMap(_ => readStrManifest(s, dir)),
-      numIvs.flatMap(_ => readNumManifest(s, dir)),
-      dateIvs, strIvs, numIvs)
-
-  /** The pure survivor computation over ALREADY-READ manifests — what
-    * the automatic rule calls through its per-apply manifest cache
-    * (r16 advice: the rule must not re-read manifest files from the
-    * filesystem for every Filter node). Semantics are
-    * [[survivingFilesMulti]]'s, three axes intersecting. */
-  def survivorsFromManifests(
-      dateMan: Option[Seq[FileZone]],
-      strMan: Option[Seq[StrFileZone]],
-      numMan: Option[Seq[NumFileZone]],
-      dateIvs: Option[Seq[(Int, Int)]],
-      strIvs: Option[Seq[(Option[String], Option[String])]],
-      numIvs: Option[Seq[(Option[BigDecimal], Option[BigDecimal])]])
-      : Option[(Seq[String], Int)] =
-    survivorsFromColumnSets(
-      (for (m <- dateMan; i <- dateIvs) yield (m, i)).toSeq,
-      (for (m <- strMan; i <- strIvs) yield (m, i)).toSeq,
-      (for (m <- numMan; i <- numIvs) yield (m, i)).toSeq)
-
-  /** utf8-ordered interval intersection support for the rule's
-    * conjunct folding: lo = max of lower ends, hi = min of upper ends,
-    * None = unbounded on that side; None result when empty. */
-  def strIntervalIntersect(
-      a: (Option[String], Option[String]),
-      b: (Option[String], Option[String]))
-      : Option[(Option[String], Option[String])] = {
-    val lo = (a._1, b._1) match {
-      case (Some(x), Some(y)) => Some(utf8Max(x, y))
-      case (x, y) => x.orElse(y)
-    }
-    val hi = (a._2, b._2) match {
-      case (Some(x), Some(y)) => Some(utf8Min(x, y))
-      case (x, y) => x.orElse(y)
-    }
-    (lo, hi) match {
-      case (Some(l), Some(h)) if utf8Lt(h, l) => None
-      case _ => Some((lo, hi))
-    }
-  }
-
-  /** Read a persisted manifest — every commit file merged, sorted by
-    * data-file path (= the from-scratch rebuild's order); absolute
-    * paths restored against `dir`. None when the layout has no
-    * `_zonemap/` directory. */
-  def readManifest(s: SparkSession, dir: String): Option[Seq[FileZone]] =
-    readDateZonesFrom(s, dir, manifestDir(dir))
-
-  private def readDateZonesFrom(s: SparkSession, dir: String,
-      md: org.apache.hadoop.fs.Path): Option[Seq[FileZone]] = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(md)) None
-    else {
-      val re = """\{"file":"([^"]+)","lo":(-?\d+),"hi":(-?\d+)\}""".r
-      val zones = fs.listStatus(md).toSeq
-        .filter(_.getPath.getName.startsWith("zones-"))
-        .sortBy(_.getPath.getName)
-        .flatMap { f =>
-          val in = fs.open(f.getPath)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          text.linesIterator.filter(_.nonEmpty).map {
-            case re(name, lo, hi) =>
-              FileZone(
-                fs.makeQualified(new org.apache.hadoop.fs.Path(dir, name)).toString,
-                lo.toInt, hi.toInt)
-            case bad => throw new IllegalStateException(s"bad manifest line: $bad")
-          }.toSeq
-        }
-      Some(zones.sortBy(_.path))
-    }
-  }
-
-  /** Build the layout's zone-map manifest by reading parquet FOOTERS
-    * only — O(files) metadata I/O, zero data pages — exactly the stats
-    * Delta/Iceberg persist at write time and read at plan time. A file
-    * whose footer lacks stats for `dateCol` (never the case for our own
-    * writes) gets an infinite zone: unskippable, never incorrect. */
-  def zonemapManifest(s: SparkSession, dir: String, dateCol: String): Seq[FileZone] =
-    footerZones(s, dir, dateCol, Set.empty)
-
-  /** Footer-derived zones for every data file in `dir` NOT in `known` —
-    * the incremental half of manifest maintenance: an append commit
-    * reads only ITS OWN files' footers. */
-  private def footerZones(s: SparkSession, dir: String, dateCol: String,
-      known: Set[String]): Seq[FileZone] = {
-    import scala.jdk.CollectionConverters._
+  /** `f(path, row groups)` over the footer of every data file in `dir`
+    * NOT in `known`, in relative-path order — O(files) metadata I/O,
+    * zero data pages. An append reads only ITS OWN files' footers.
+    * Paths are FULLY QUALIFIED (scheme + authority kept): listStatus
+    * yields file:/... while Path(dir, name) doesn't, so both go through
+    * fs.makeQualified — persisted and footer-built manifests compare
+    * equal, and on hdfs:// or s3a:// layouts the survivor paths handed
+    * to spark.read.parquet still carry their filesystem. */
+  private def footerWalk[T](s: SparkSession, dir: String, known: Set[String])(
+      f: (String, Seq[BlockMetaData]) => T): Seq[T] = {
     val conf = s.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
+    val root = new Path(dir)
     val fs = root.getFileSystem(conf)
     listDataFiles(fs, root)
-      .filterNot(f => known.contains(fs.makeQualified(f.getPath).toString))
-      .sortBy(f => relativize(fs, root, f.getPath))
-      .map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-        try {
-          val zones = rd.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == dateCol).flatMap { c =>
-              val st = c.getStatistics
-              if (st == null || !st.hasNonNullValue) None
-              else Some((st.genericGetMin.asInstanceOf[Number].intValue(),
-                st.genericGetMax.asInstanceOf[Number].intValue()))
-            }
-          }
-          // FULLY-QUALIFIED URIs everywhere (scheme + authority kept):
-          // listStatus yields file:/... while Path(dir, name) doesn't,
-          // so both are normalized through fs.makeQualified — persisted
-          // and footer-built manifests compare equal, and on hdfs://
-          // or s3a:// layouts the survivor paths handed to
-          // spark.read.parquet still carry their filesystem
-          val qual = fs.makeQualified(f.getPath).toString
-          // any row group without a usable stat makes the whole FILE
-          // unbounded — folding only the defined groups would narrow
-          // the zone below rows the file actually holds
-          if (zones.isEmpty || zones.size < rd.getFooter.getBlocks.size)
-            FileZone(qual, Int.MinValue, Int.MaxValue)
-          else FileZone(qual, zones.map(_._1).min, zones.map(_._2).max)
-        } finally rd.close()
+      .filterNot(st => known.contains(fs.makeQualified(st.getPath).toString))
+      .sortBy(st => relativize(fs, root, st.getPath))
+      .map { st =>
+        val rd = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+        try f(fs.makeQualified(st.getPath).toString, rd.getFooter.getBlocks.asScala.toSeq)
+        finally rd.close()
       }
   }
 
-  // ─────────────────────── string zone maps ───────────────────────
+  private def chunkOf(b: BlockMetaData, c: String) =
+    b.getColumns.asScala.find(_.getPath.toDotString == c)
 
-  /** One file's STRING zone: [lo, hi] of a string column folded across
-    * the file's row groups. The date zones above cover the time axis;
-    * real 100 TB tables also prune on low-cardinality STRING columns
-    * (source, lang, tenant) without paying physical partitioning —
-    * cluster on the column at write time and persist per-file min/max.
-    * `None` bounds mean the footer carried no stats for the column:
-    * the file is unskippable, never incorrectly skipped. */
-  case class StrFileZone(path: String, lo: Option[String], hi: Option[String])
-
-  private def strManifestDir(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "_szonemap")
-
-  // manifest values are base64-encoded: arbitrary UTF-8 min/max
-  // (quotes, newlines, backslashes) can never corrupt the JSON-lines
-  // commit format, and decode is exact byte round-trip
-  private def b64e(v: String): String =
-    java.util.Base64.getEncoder.encodeToString(v.getBytes("UTF-8"))
-  private def b64d(v: String): String =
-    new String(java.util.Base64.getDecoder.decode(v), "UTF-8")
-
-  /** Unsigned UTF-8 byte comparison — the ONE string order every layer
-    * of this path already uses: parquet BINARY footer stats, Spark's
-    * UTF8String.compareTo (so repartitionByRange boundaries), and
-    * DuckDB's VARCHAR collation. Java's String.compareTo orders by
-    * UTF-16 code units instead, which DIVERGES for supplementary
-    * characters vs U+E000–U+FFFF (e.g. "￿" < "😀" in UTF-8 bytes
-    * but > in UTF-16 units): folding or intersecting zones under the
-    * Java order can declare an interval empty and silently skip a file
-    * that contains the probed value. All zone folds and [lo, hi]
-    * intersections below therefore go through this comparator. */
-  private def utf8Lt(a: String, b: String): Boolean = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
+  /** Footer zones of `c`, folded across row groups under the codec's
+    * order. Any row group without a usable stat makes the whole FILE
+    * unbounded — folding only the defined groups would narrow the zone
+    * below rows the file actually holds. */
+  private def footerZones[V](s: SparkSession, dir: String, c: String,
+      codec: ZoneCodec[V], known: Set[String] = Set.empty): Seq[FileZone[V]] =
+    footerWalk(s, dir, known) { (path, blocks) =>
+      val zones = blocks.flatMap(chunkOf(_, c).flatMap(codec.chunkStat))
+      if (zones.isEmpty || zones.size < blocks.size) FileZone[V](path, None, None)
+      else FileZone(path, Some(zones.map(_._1).reduce(codec.min)),
+        Some(zones.map(_._2).reduce(codec.max)))
     }
-    x.length < y.length
-  }
-  private def utf8Min(a: String, b: String): String = if (utf8Lt(b, a)) b else a
-  private def utf8Max(a: String, b: String): String = if (utf8Lt(a, b)) b else a
 
-  /** Write `df` as `nFiles` parquet files range-clustered and sorted on
-    * `strCol`, then persist the string zone manifest
-    * (`_szonemap/zones-00000.json`) from the fresh footers — the
-    * [[zonemapClusteredWrite]] discipline for a categorical axis. */
-  def strZonemapClusteredWrite(df: DataFrame, strCol: String, nFiles: Int,
-      path: String): Unit = {
-    df.repartitionByRange(nFiles, col(strCol))
-      .sortWithinPartitions(col(strCol))
-      .write.mode("overwrite").parquet(path)
-    val s = df.sparkSession
-    writeStrManifest(s, path, strFooterZones(s, path, strCol))
-    writeAxisColumn(s, strManifestDir(path), strCol)
-  }
-
-  /** Next commit file under a manifest directory — `zones-00000.json`,
-    * `zones-00001.json`, … (the `_delta_log` numbering all three axes
-    * share; every reader merges all commits sorted by data-file path).
-    * Each statistic FAMILY (`zones`, `nulls`) numbers its own commits,
-    * so the families can commit at different cadences in one dir. */
-  private def nextCommitFile(fs: org.apache.hadoop.fs.FileSystem,
-      md: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
-    nextCommitFileWith(fs, md, "zones")
-
-  private def nextCommitFileWith(fs: org.apache.hadoop.fs.FileSystem,
-      md: org.apache.hadoop.fs.Path, prefix: String): org.apache.hadoop.fs.Path = {
-    fs.mkdirs(md)
-    val k = fs.listStatus(md).count(_.getPath.getName.startsWith(prefix + "-"))
-    new org.apache.hadoop.fs.Path(md, f"$prefix%s-$k%05d.json")
+  /** The one survivor check: a file survives when every constrained
+    * column's [[ZoneSet]] and every null-axis want (`true` = IS NULL)
+    * accepts it. A file a manifest does not list is unskippable on that
+    * column, so survivors are drawn from the UNION of every listed
+    * file. An EMPTY interval union (an unsatisfiable predicate) skips
+    * every listed file — the re-applied filter returns nothing either
+    * way. Returns (survivors sorted, total), None when nothing
+    * constrains. */
+  def survivorsFromColumnSets(sets: Seq[ZoneSet[_]],
+      nullSets: Seq[(Seq[NullStat], Boolean)] = Seq.empty)
+      : Option[(Seq[String], Int)] = {
+    // null axis: IS NULL skips no-null files; a needed NON-null
+    // (explicit IS NOT NULL, or any value constraint) skips all-null
+    // files; unknown counts always survive
+    val nullAccepts = nullSets.map { case (stats, wantNull) =>
+      val by = stats.map(z => z.path -> z).toMap
+      (p: String) => by.get(p).forall(z =>
+        if (wantNull) z.nulls.forall(_ > 0) else z.nulls.forall(_ < z.rows))
+    }
+    val accepts = sets.map(z => z.accepts _) ++ nullAccepts
+    if (accepts.isEmpty) None
+    else {
+      val all = (sets.flatMap(_.zones.map(_.path)) ++
+        nullSets.flatMap(_._1.map(_.path))).distinct.sorted
+      Some((all.filter(p => accepts.forall(_(p))), all.size))
+    }
   }
 
-  private def writeStrManifest(s: SparkSession, path: String,
-      man: Seq[StrFileZone]): Unit =
-    writeStrZonesTo(s, path, strManifestDir(path), man)
+  /** `c`'s zones from the persisted manifest, or from the footers for a
+    * layout written without one. */
+  private def zonesOf[V](s: SparkSession, dir: String, c: String,
+      codec: ZoneCodec[V]): Seq[FileZone[V]] =
+    readManifest(s, dir, codec).getOrElse(footerZones(s, dir, c, codec))
 
-  private def writeStrZonesTo(s: SparkSession, path: String,
-      md: org.apache.hadoop.fs.Path, man: Seq[StrFileZone]): Unit = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    val root = new org.apache.hadoop.fs.Path(path)
-    val out = fs.create(nextCommitFile(fs, md), true)
-    try out.write(man.map { z =>
-      val name = relativize(fs, root, new org.apache.hadoop.fs.Path(z.path))
-      (z.lo, z.hi) match {
-        case (Some(lo), Some(hi)) =>
-          s"""{"file":"$name","lo64":"${b64e(lo)}","hi64":"${b64e(hi)}"}"""
-        case _ => s"""{"file":"$name","unbounded":true}"""
-      }
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
+  private def dateWindow(s: SparkSession, dir: String, c: String,
+      lo: String, hi: String): ZoneSet[Int] = {
+    def day(d: String) = Option(java.time.LocalDate.parse(d).toEpochDay.toInt)
+    ZoneSet(ZoneCodec.Date, zonesOf(s, dir, c, ZoneCodec.Date), Seq((day(lo), day(hi))))
   }
 
-  /** COMPOUND clustered write — ONE physical layout carrying BOTH zone
-    * manifests: files range-clustered on (strCol, dateCol) get tight
-    * string zones AND, within each string range, tight date zones, so
-    * the common two-axis probe (tenant + time window) prunes on the
-    * INTERSECTION of both survivor sets — the multi-column data-skipping
-    * shape Delta/Iceberg stats give every column, built here from the
-    * same footers in one metadata pass. */
-  def compoundZonemapWrite(df: DataFrame, strCol: String, dateCol: String,
-      nFiles: Int, path: String): Unit = {
-    df.repartitionByRange(nFiles, col(strCol), col(dateCol))
-      .sortWithinPartitions(col(strCol), col(dateCol))
-      .write.mode("overwrite").parquet(path)
-    val s = df.sparkSession
-    writeManifest(s, path, zonemapManifest(s, path, dateCol))
-    writeAxisColumn(s, manifestDir(path), dateCol)
-    writeStrManifest(s, path, strFooterZones(s, path, strCol))
-    writeAxisColumn(s, strManifestDir(path), strCol)
+  private def strPoint(s: SparkSession, dir: String, c: String,
+      v: String): ZoneSet[String] =
+    ZoneSet(ZoneCodec.Str, zonesOf(s, dir, c, ZoneCodec.Str), Seq((Option(v), Option(v))))
+
+  private def dateBetween(c: String, lo: String, hi: String) =
+    col(c).between(lit(lo).cast("date"), lit(hi).cast("date"))
+
+  /** The frame over `survivors` only (an empty scan of `dir` when none
+    * survive): skipped files are absent from its file index, so no plan
+    * over it can open them. */
+  private def readSurvivors(s: SparkSession, dir: String,
+      survivors: Seq[String]): DataFrame =
+    if (survivors.isEmpty) s.read.parquet(dir).where(lit(false))
+    else s.read.parquet(survivors: _*)
+
+  /** Survivors of `sets` read and filtered by `cond` — the predicate is
+    * re-applied, since pruning is an optimization, never a filter.
+    * Returns (frame, total files, skipped files). */
+  private def prunedBy(s: SparkSession, dir: String, sets: ZoneSet[_]*)(
+      cond: Column): (DataFrame, Int, Int) = {
+    val (survivors, total) = survivorsFromColumnSets(sets).get
+    (readSurvivors(s, dir, survivors).filter(cond), total, total - survivors.size)
   }
+
+  /** ZONE-MAP PRUNED READ — answer a date-range probe over a
+    * date-clustered layout reading ONLY the files whose zone intersects
+    * [lo, hi] (StorageSpec pins that via the scan's numFiles/filesSize
+    * metrics and inputFiles). Results equal a full scan by construction
+    * (gated: q216 vs the plain-filter oracle). Plan cost is ONE small
+    * manifest file when the layout persisted one, falling back to
+    * per-file footer reads for foreign layouts; execution touches only
+    * surviving files. */
+  def prunedRead(s: SparkSession, dir: String, dateCol: String,
+      lo: String, hi: String): (DataFrame, Int, Int) =
+    prunedBy(s, dir, dateWindow(s, dir, dateCol, lo, hi))(dateBetween(dateCol, lo, hi))
+
+  /** STRING-ZONE PRUNED READ — answer an equality probe on the
+    * clustering column reading only files whose [lo, hi] zone contains
+    * the value (the partition-prune effect without physical partition
+    * directories). Gated: q241 vs the plain-filter oracle. */
+  def strPrunedRead(s: SparkSession, dir: String, strCol: String,
+      value: String): (DataFrame, Int, Int) =
+    prunedBy(s, dir, strPoint(s, dir, strCol, value))(col(strCol) === value)
 
   /** Two-axis pruned read over a [[compoundZonemapWrite]] layout: a
     * file is opened only if its STRING zone contains `value` AND its
-    * date zone intersects [lo, hi] — survivor sets intersect by path.
-    * Both predicates re-apply on the survivors (pruning is an
-    * optimization, never a filter). Returns (frame, total, skipped).
-    *
-    * The two manifests are persisted independently, so a file present
-    * in one but missing from the other (a crash between the two write
-    * calls, or an append that updated only one) must be UNSKIPPABLE on
-    * the missing axis, never silently dropped: survivors come from the
-    * UNION of both file sets, with an absent zone read as unbounded,
-    * and `total` counts the union. */
+    * date zone intersects [lo, hi]. The two manifests are persisted
+    * independently, so a file present in one but missing from the
+    * other (a crash between the two commits) is UNSKIPPABLE on the
+    * missing axis, never silently dropped, and `total` counts the
+    * union. */
   def compoundPrunedRead(s: SparkSession, dir: String, strCol: String,
       value: String, dateCol: String, lo: String, hi: String)
-      : (DataFrame, Int, Int) = {
-    val loD = java.time.LocalDate.parse(lo).toEpochDay.toInt
-    val hiD = java.time.LocalDate.parse(hi).toEpochDay.toInt
-    val dateMan = readManifest(s, dir)
-      .getOrElse(zonemapManifest(s, dir, dateCol))
-    val strMan = readStrManifest(s, dir)
-      .getOrElse(strFooterZones(s, dir, strCol))
-    val dateByPath = dateMan.map(z => z.path -> z).toMap
-    val strByPath = strMan.map(z => z.path -> z).toMap
-    val allPaths = (dateByPath.keySet ++ strByPath.keySet).toSeq.sorted
-    val survivors = allPaths.filter { p =>
-      val dateOk = dateByPath.get(p).forall(z => !(z.hi < loD || z.lo > hiD))
-      val strOk = strByPath.get(p).forall(z =>
-        !(z.hi.exists(utf8Lt(_, value)) || z.lo.exists(utf8Lt(value, _))))
-      dateOk && strOk
-    }
-    val base =
-      if (survivors.isEmpty) s.read.parquet(dir).where(lit(false))
-      else s.read.parquet(survivors: _*)
-    (base.filter(col(strCol) === value &&
-        col(dateCol).between(lit(lo).cast("date"), lit(hi).cast("date"))),
-      allPaths.size, allPaths.size - survivors.size)
-  }
+      : (DataFrame, Int, Int) =
+    prunedBy(s, dir, strPoint(s, dir, strCol, value),
+      dateWindow(s, dir, dateCol, lo, hi))(
+      col(strCol) === value && dateBetween(dateCol, lo, hi))
 
   /** [[compoundPrunedRead]] under the gate: events clustered on
     * (event_type, day) into 20 files, probed for one type in a 6-day
@@ -971,9 +923,7 @@ object Storage {
     * DuckDB's plain filter over the raw table. */
   def q245CompoundPrune(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(s, "q245_events_compound", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(strManifestDir(dir)))
+    if (missing(s, dir, ZoneCodec.Str.dirName))
       compoundZonemapWrite(
         events(s, d).select(col("event_type"),
           to_date(col("ts")).as("ev_date"), col("value")),
@@ -993,118 +943,23 @@ object Storage {
       |  AND CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-15'
       |GROUP BY 1""".stripMargin
 
-  /** Read a persisted string zone manifest; None when the layout has no
-    * `_szonemap/` directory. */
-  def readStrManifest(s: SparkSession, dir: String): Option[Seq[StrFileZone]] =
-    readStrZonesFrom(s, dir, strManifestDir(dir))
-
-  private def readStrZonesFrom(s: SparkSession, dir: String,
-      md: org.apache.hadoop.fs.Path): Option[Seq[StrFileZone]] = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(md)) None
-    else {
-      val bounded =
-        """\{"file":"([^"]+)","lo64":"([A-Za-z0-9+/=]*)","hi64":"([A-Za-z0-9+/=]*)"\}""".r
-      val unbounded = """\{"file":"([^"]+)","unbounded":true\}""".r
-      val zones = fs.listStatus(md).toSeq
-        .filter(_.getPath.getName.startsWith("zones-"))
-        .sortBy(_.getPath.getName)
-        .flatMap { f =>
-          val in = fs.open(f.getPath)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          text.linesIterator.filter(_.nonEmpty).map {
-            case bounded(name, lo, hi) =>
-              StrFileZone(fs.makeQualified(
-                new org.apache.hadoop.fs.Path(dir, name)).toString,
-                Some(b64d(lo)), Some(b64d(hi)))
-            case unbounded(name) =>
-              StrFileZone(fs.makeQualified(
-                new org.apache.hadoop.fs.Path(dir, name)).toString,
-                None, None)
-            case bad => throw new IllegalStateException(
-              s"bad string manifest line: $bad")
-          }.toSeq
-        }
-      Some(zones.sortBy(_.path))
-    }
-  }
-
-  /** Footer-derived STRING zones for every data file in `dir` —
-    * parquet BINARY(UTF8) statistics decode to exact strings, and
-    * unsigned-lexicographic parquet ordering equals Spark's UTF8String
-    * binary comparison, so [lo, hi] intersection is sound. */
-  private def strFooterZones(s: SparkSession, dir: String,
-      strCol: String, known: Set[String] = Set.empty): Seq[StrFileZone] = {
-    import scala.jdk.CollectionConverters._
-    val conf = s.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    listDataFiles(fs, root)
-      .filterNot(f => known.contains(fs.makeQualified(f.getPath).toString))
-      .sortBy(f => relativize(fs, root, f.getPath))
-      .map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-        try {
-          val zones = rd.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == strCol).flatMap { c =>
-              val st = c.getStatistics
-              if (st == null || !st.hasNonNullValue) None
-              else Some((
-                st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-                  .toStringUsingUTF8,
-                st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                  .toStringUsingUTF8))
-            }
-          }
-          val qual = fs.makeQualified(f.getPath).toString
-          // fold row-group bounds under the UTF-8 byte order the stats
-          // were computed in — Seq.min would fold under UTF-16 units;
-          // any group without usable stats makes the whole file
-          // unbounded (see footerZones)
-          if (zones.isEmpty || zones.size < rd.getFooter.getBlocks.size)
-            StrFileZone(qual, None, None)
-          else StrFileZone(qual, Some(zones.map(_._1).reduce(utf8Min)),
-            Some(zones.map(_._2).reduce(utf8Max)))
-        } finally rd.close()
-      }
-  }
-
-  /** STRING-ZONE PRUNED READ — answer an equality probe on the
-    * clustering column reading only files whose [lo, hi] zone contains
-    * the value (the partition-prune effect without physical partition
-    * directories). The predicate is re-applied on survivors — pruning
-    * is an optimization, never a filter — so results equal a full scan
-    * by construction (gated: q241 vs the plain-filter oracle;
-    * StorageSpec pins files actually skipped via inputFiles). Returns
-    * (frame, total files, skipped files). */
-  def strPrunedRead(s: SparkSession, dir: String, strCol: String,
-      value: String): (DataFrame, Int, Int) = {
-    val man = readStrManifest(s, dir)
-      .getOrElse(strFooterZones(s, dir, strCol))
-    val survivors = man.filterNot(z =>
-      z.hi.exists(utf8Lt(_, value)) || z.lo.exists(utf8Lt(value, _)))
-    val base =
-      if (survivors.isEmpty) s.read.parquet(dir).where(lit(false))
-      else s.read.parquet(survivors.map(_.path): _*)
-    (base.filter(col(strCol) === value), man.size, man.size - survivors.size)
+  /** Build (once per session) and return the 16-file source-clustered
+    * documents layout q241/q261 probe. */
+  private def q241Layout(s: SparkSession, d: String): String = {
+    val dir = scratch(s, "q241_docs_by_source", d)
+    if (missing(s, dir, ZoneCodec.Str.dirName))
+      zonemapClusteredWrite(
+        documents(s, d).select(col("source"), col("lang"), col("n_chars")),
+        "source", 16, dir)
+    dir
   }
 
   /** [[strPrunedRead]] under the gate: documents range-clustered on
     * `source` into 16 files, probed for one source — the categorical
-    * sibling of q216's date window. The layout build is cached per
-    * (session, sf) like every layout query; the probe aggregate must
-    * hash-match DuckDB's plain filter over the raw table. */
+    * sibling of q216's date window. The probe aggregate must hash-match
+    * DuckDB's plain filter over the raw table. */
   def q241StringPrune(s: SparkSession, d: String): DataFrame = {
-    val dir = scratch(s, "q241_docs_by_source", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(strManifestDir(dir)))
-      strZonemapClusteredWrite(
-        documents(s, d).select(col("source"), col("lang"), col("n_chars")),
-        "source", 16, dir)
-    val (probe, _, _) = strPrunedRead(s, dir, "source", "src12")
+    val (probe, _, _) = strPrunedRead(s, q241Layout(s, d), "source", "src12")
     probe.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("sum_chars"))
@@ -1116,216 +971,32 @@ object Storage {
       |FROM documents WHERE source = 'src12'
       |GROUP BY 1""".stripMargin
 
-  // ─────────────────────── numeric zone maps ───────────────────────
-
-  /** One file's NUMERIC zone: [lo, hi] of a numeric column folded
-    * across the file's row groups (r16 verdict task 3 — numeric range
-    * probes like `o_totalprice BETWEEN a AND b` are the most common
-    * real probe shape after dates). Bounds are EXACT decimal values
-    * ([[BigDecimal]]): integral stats convert losslessly, and
-    * float/double stats go through the shortest-round-trip decimal
-    * string, which PRESERVES the IEEE ordering of distinct doubles —
-    * so interval/zone comparisons can never invert across the codec.
-    * `None` bounds mean the footer carried no usable stats (absent
-    * column, or NaN-poisoned float/double min/max — parquet-mr folds
-    * NaN into Math.min/max, so a NaN-bearing file surfaces as NaN
-    * stats): the file is unskippable, never incorrectly skipped. */
-  case class NumFileZone(path: String,
-      lo: Option[BigDecimal], hi: Option[BigDecimal])
-
-  private def numManifestDir(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "_nzonemap")
-
-  /** The numeric-axis clustering column a layout advertises, if any. */
-  def numZonemapColumn(s: SparkSession, dir: String): Option[String] =
-    readAxisColumn(s, numManifestDir(dir))
-
-  /** Write `df` as `nFiles` parquet files range-clustered and sorted on
-    * numeric `numCol`, then persist the numeric zone manifest
-    * (`_nzonemap/zones-00000.json`) from the fresh footers — the
-    * [[zonemapClusteredWrite]] discipline for a measure axis. */
-  def numZonemapClusteredWrite(df: DataFrame, numCol: String, nFiles: Int,
-      path: String): Unit = {
-    df.repartitionByRange(nFiles, col(numCol))
-      .sortWithinPartitions(col(numCol))
-      .write.mode("overwrite").parquet(path)
-    val s = df.sparkSession
-    writeNumManifest(s, path, numFooterZones(s, path, numCol))
-    writeAxisColumn(s, numManifestDir(path), numCol)
-  }
-
-  private def writeNumManifest(s: SparkSession, path: String,
-      man: Seq[NumFileZone]): Unit =
-    writeNumZonesTo(s, path, numManifestDir(path), man)
-
-  private def writeNumZonesTo(s: SparkSession, path: String,
-      md: org.apache.hadoop.fs.Path, man: Seq[NumFileZone]): Unit = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    val root = new org.apache.hadoop.fs.Path(path)
-    val out = fs.create(nextCommitFile(fs, md), true)
-    try out.write(man.map { z =>
-      val name = relativize(fs, root, new org.apache.hadoop.fs.Path(z.path))
-      (z.lo, z.hi) match {
-        // toPlainString: no scientific notation in the manifest, and
-        // BigDecimal(str) round-trips it exactly
-        case (Some(lo), Some(hi)) =>
-          s"""{"file":"$name","lo":"${lo.underlying.toPlainString}","hi":"${hi.underlying.toPlainString}"}"""
-        case _ => s"""{"file":"$name","unbounded":true}"""
-      }
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Read a persisted numeric zone manifest; None when the layout has
-    * no `_nzonemap/` directory. */
-  def readNumManifest(s: SparkSession, dir: String): Option[Seq[NumFileZone]] =
-    readNumZonesFrom(s, dir, numManifestDir(dir))
-
-  private def readNumZonesFrom(s: SparkSession, dir: String,
-      md: org.apache.hadoop.fs.Path): Option[Seq[NumFileZone]] = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(md)) None
-    else {
-      val bounded =
-        """\{"file":"([^"]+)","lo":"(-?[0-9.]+)","hi":"(-?[0-9.]+)"\}""".r
-      val unbounded = """\{"file":"([^"]+)","unbounded":true\}""".r
-      val zones = fs.listStatus(md).toSeq
-        .filter(_.getPath.getName.startsWith("zones-"))
-        .sortBy(_.getPath.getName)
-        .flatMap { f =>
-          val in = fs.open(f.getPath)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          text.linesIterator.filter(_.nonEmpty).map {
-            case bounded(name, lo, hi) =>
-              NumFileZone(fs.makeQualified(
-                new org.apache.hadoop.fs.Path(dir, name)).toString,
-                Some(BigDecimal(lo)), Some(BigDecimal(hi)))
-            case unbounded(name) =>
-              NumFileZone(fs.makeQualified(
-                new org.apache.hadoop.fs.Path(dir, name)).toString,
-                None, None)
-            case bad => throw new IllegalStateException(
-              s"bad numeric manifest line: $bad")
-          }.toSeq
-        }
-      Some(zones.sortBy(_.path))
-    }
-  }
-
-  /** Footer min/max of a numeric column chunk as exact decimals.
-    * INT32/INT64 convert losslessly (an int-backed DECIMAL logical type
-    * re-applies its scale); FLOAT/DOUBLE go through the shortest
-    * round-trip string; NaN or binary-backed stats yield None —
-    * unskippable, never wrong. */
-  private def numChunkStat(
-      c: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)
-      : Option[(BigDecimal, BigDecimal)] = {
-    val st = c.getStatistics
-    if (st == null || !st.hasNonNullValue) return None
-    val ann = c.getPrimitiveType.getLogicalTypeAnnotation
-    def conv(v: Any): Option[BigDecimal] = (v, ann) match {
-      case (n: Number,
-          dec: org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
-        n match {
-          case i: java.lang.Integer => Some(BigDecimal(BigInt(i.longValue), dec.getScale))
-          case l: java.lang.Long => Some(BigDecimal(BigInt(l.longValue), dec.getScale))
-          case _ => None // binary-backed decimal: conservative
-        }
-      case (d: java.lang.Double, _) =>
-        if (d.isNaN) None else Some(BigDecimal(d.toString))
-      case (f: java.lang.Float, _) =>
-        if (f.isNaN) None else Some(BigDecimal(f.toString))
-      case (i: java.lang.Integer, _) => Some(BigDecimal(i.intValue))
-      case (l: java.lang.Long, _) => Some(BigDecimal(l.longValue))
-      case _ => None
-    }
-    for (lo <- conv(st.genericGetMin); hi <- conv(st.genericGetMax))
-      yield (lo, hi)
-  }
-
-  /** Footer-derived NUMERIC zones for every data file in `dir`. */
-  private def numFooterZones(s: SparkSession, dir: String,
-      numCol: String, known: Set[String] = Set.empty): Seq[NumFileZone] = {
-    import scala.jdk.CollectionConverters._
-    val conf = s.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    listDataFiles(fs, root)
-      .filterNot(f => known.contains(fs.makeQualified(f.getPath).toString))
-      .sortBy(f => relativize(fs, root, f.getPath))
-      .map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-        try {
-          val zones = rd.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == numCol)
-              .flatMap(numChunkStat)
-          }
-          val qual = fs.makeQualified(f.getPath).toString
-          // a single NaN-poisoned (None) row group must make the whole
-          // FILE unbounded — folding only the defined groups would
-          // narrow the zone below rows the file actually holds
-          if (zones.isEmpty ||
-              zones.size < rd.getFooter.getBlocks.size)
-            NumFileZone(qual, None, None)
-          else NumFileZone(qual, Some(zones.map(_._1).min),
-            Some(zones.map(_._2).max))
-        } finally rd.close()
-      }
-  }
-
-  /** ATTACH a date-axis zone manifest to an EXISTING layout — the
-    * post-hoc stats step of Delta's OPTIMIZE ZORDER: any write path
-    * (z-order, a foreign writer) whose files happen to be clustered on
-    * a column can cash that in by persisting footer-derived zones +
-    * the `_column` sidecar, and the automatic rule serves probes from
-    * then on. One footer walk, zero data pages. Composable: attach the
-    * date, numeric and string axes independently over ONE layout and a
-    * multi-axis probe prunes on the survivor INTERSECTION (q269 gates
-    * the z-order 2-D case). */
-  def attachDateZonemap(s: SparkSession, dir: String, dateCol: String): Unit = {
-    writeManifest(s, dir, zonemapManifest(s, dir, dateCol))
-    writeAxisColumn(s, manifestDir(dir), dateCol)
-  }
-
-  /** [[attachDateZonemap]] on the numeric axis. */
-  def attachNumZonemap(s: SparkSession, dir: String, numCol: String): Unit = {
-    writeNumManifest(s, dir, numFooterZones(s, dir, numCol))
-    writeAxisColumn(s, numManifestDir(dir), numCol)
-  }
-
-  /** [[attachDateZonemap]] on the string axis. */
-  def attachStrZonemap(s: SparkSession, dir: String, strCol: String): Unit = {
-    writeStrManifest(s, dir, strFooterZones(s, dir, strCol))
-    writeAxisColumn(s, strManifestDir(dir), strCol)
+  /** Whether `dir` lacks the entry `name` — the once-per-session check
+    * every gated layout build makes. */
+  private def missing(s: SparkSession, dir: String, name: String): Boolean = {
+    val p = new Path(dir, name)
+    !p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
   }
 
   // ───────────── general multi-column zone store (_colzones) ─────────────
 
   /** Per-COLUMN zone manifests — the Delta "stats for every column"
-    * shape, closing the one-column-per-axis limitation of the three
-    * legacy manifest dirs: each column gets its own
-    * `_colzones/<col>/zones-<k>.json` plus a `_type` sidecar naming
-    * the codec (`date` | `str` | `num`), so ONE layout can carry zones
-    * for ANY number of columns — two numeric z-order keys, a tenant
-    * string AND a day, whatever the workload probes. The automatic
-    * rule intersects EVERY constrained column's survivor set. The
-    * legacy single-column axes keep working unchanged and intersect
-    * with these. */
-  case class ColumnZones(
-      dateCols: Seq[(String, Seq[FileZone])],
-      strCols: Seq[(String, Seq[StrFileZone])],
-      numCols: Seq[(String, Seq[NumFileZone])],
+    * shape: each column gets its own `_colzones/<col>/zones-<k>.json`
+    * plus a `_type` sidecar naming its codec, so ONE layout can carry
+    * zones for ANY number of columns — two numeric z-order keys, a
+    * tenant string AND a day, whatever the workload probes — together
+    * with per-file null counts (`nullCols`). The automatic rule
+    * intersects EVERY constrained column's survivor set, single-column
+    * axes included ([[zoneStore]]). */
+  case class ColumnZones(cols: Seq[ZonedColumn[_]],
       nullCols: Seq[(String, Seq[NullStat])] = Seq.empty) {
-    def isEmpty: Boolean =
-      dateCols.isEmpty && strCols.isEmpty && numCols.isEmpty &&
-        nullCols.isEmpty
+    def isEmpty: Boolean = cols.isEmpty && nullCols.isEmpty
     def allPaths: Seq[String] =
-      dateCols.flatMap(_._2.map(_.path)) ++
-        strCols.flatMap(_._2.map(_.path)) ++
-        numCols.flatMap(_._2.map(_.path)) ++
-        nullCols.flatMap(_._2.map(_.path))
+      cols.flatMap(_.zones.map(_.path)) ++ nullCols.flatMap(_._2.map(_.path))
+    /** (column, zones) of every column `codec` serves. */
+    def of[V](codec: ZoneCodec[V]): Seq[(String, Seq[FileZone[V]])] =
+      cols.filter(_.codec == codec)
+        .map(zc => zc.name -> zc.zones.asInstanceOf[Seq[FileZone[V]]])
   }
 
   /** Per-file NULL statistics for one column — the Delta `nullCount`
@@ -1341,289 +1012,84 @@ object Storage {
   case class NullStat(path: String, nulls: Option[Long], rows: Long)
 
   private def footerNullStats(s: SparkSession, dir: String,
-      colName: String, known: Set[String] = Set.empty): Seq[NullStat] = {
-    import scala.jdk.CollectionConverters._
-    val conf = s.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    listDataFiles(fs, root)
-      .filterNot(f => known.contains(fs.makeQualified(f.getPath).toString))
-      .sortBy(f => relativize(fs, root, f.getPath))
-      .map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-        try {
-          val blocks = rd.getFooter.getBlocks.asScala.toSeq
-          val rows = blocks.map(_.getRowCount).sum
-          val counts = blocks.map { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == colName)
-              .flatMap { c =>
-                val st = c.getStatistics
-                if (st == null || !st.isNumNullsSet) None
-                else Some(st.getNumNulls)
-              }
-          }
-          val qual = fs.makeQualified(f.getPath).toString
-          // one group without a null count makes the FILE unknown —
-          // the zone-fold discipline on the null axis
-          if (counts.exists(_.isEmpty)) NullStat(qual, None, rows)
-          else NullStat(qual, Some(counts.flatten.sum), rows)
-        } finally rd.close()
-      }
-  }
-
-  private def writeNullStatsTo(s: SparkSession, path: String,
-      md: org.apache.hadoop.fs.Path, stats: Seq[NullStat]): Unit = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    val root = new org.apache.hadoop.fs.Path(path)
-    val out = fs.create(nextCommitFileWith(fs, md, "nulls"), true)
-    try out.write(stats.map { z =>
-      val name = relativize(fs, root, new org.apache.hadoop.fs.Path(z.path))
-      s"""{"file":"$name","nulls":${z.nulls.getOrElse(-1L)},"rows":${z.rows}}"""
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readNullStatsFrom(s: SparkSession, dir: String,
-      md: org.apache.hadoop.fs.Path): Option[Seq[NullStat]] = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(md)) None
-    else {
-      val re = """\{"file":"([^"]+)","nulls":(-?\d+),"rows":(\d+)\}""".r
-      val stats = fs.listStatus(md).toSeq
-        .filter(_.getPath.getName.startsWith("nulls-"))
-        .sortBy(_.getPath.getName)
-        .flatMap { f =>
-          val in = fs.open(f.getPath)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          text.linesIterator.filter(_.nonEmpty).map {
-            case re(name, n, r) =>
-              NullStat(
-                fs.makeQualified(new org.apache.hadoop.fs.Path(dir, name)).toString,
-                if (n.toLong < 0) None else Some(n.toLong), r.toLong)
-          }
-        }
-      if (stats.isEmpty) None else Some(stats.sortBy(_.path))
+      c: String, known: Set[String] = Set.empty): Seq[NullStat] =
+    footerWalk(s, dir, known) { (path, blocks) =>
+      val rows = blocks.map(_.getRowCount).sum
+      val counts = blocks.map(chunkOf(_, c).flatMap { ch =>
+        val st = ch.getStatistics
+        if (st == null || !st.isNumNullsSet) None else Some(st.getNumNulls)
+      })
+      // one group without a null count makes the FILE unknown — the
+      // zone-fold discipline on the null axis
+      if (counts.exists(_.isEmpty)) NullStat(path, None, rows)
+      else NullStat(path, Some(counts.flatten.sum), rows)
     }
-  }
 
-  private def colzonesRoot(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "_colzones")
-  private def colzoneDir(dir: String, c: String) =
-    new org.apache.hadoop.fs.Path(colzonesRoot(dir), c)
+  private def colzonesRoot(dir: String) = new Path(dir, "_colzones")
+  private def colzoneDir(dir: String, c: String) = new Path(colzonesRoot(dir), c)
 
-  private def writeTypeSidecar(s: SparkSession,
-      md: org.apache.hadoop.fs.Path, t: String): Unit = {
-    val fs = md.getFileSystem(s.sessionState.newHadoopConf())
-    fs.mkdirs(md)
-    val out = fs.create(new org.apache.hadoop.fs.Path(md, "_type"), true)
-    try out.write(t.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Persist footer-derived zones for every listed column under
-    * `_colzones/`, dispatching the codec on the column's Spark type
-    * (date → epoch-day ints, string → base64 UTF-8 bounds, numeric →
-    * exact decimals). One footer walk per column, zero data pages —
-    * the post-write ANALYZE step. Unsupported types are rejected
-    * loudly rather than silently unzoned. */
+  /** Persist footer-derived zones and null counts for every listed
+    * column under `_colzones/`, the codec picked from the column's
+    * Spark type. One footer walk per statistic, zero data pages — the
+    * post-write ANALYZE step. Unsupported types are rejected loudly
+    * rather than silently unzoned. */
   def attachColumnZones(s: SparkSession, dir: String,
       cols: Seq[String]): Unit = {
     val schema = s.read.parquet(dir).schema
     cols.foreach { c =>
       val md = colzoneDir(dir, c)
-      schema(c).dataType match {
-        case org.apache.spark.sql.types.DateType =>
-          writeDateZonesTo(s, dir, md, footerZones(s, dir, c, Set.empty))
-          writeTypeSidecar(s, md, "date")
-        case org.apache.spark.sql.types.StringType =>
-          writeStrZonesTo(s, dir, md, strFooterZones(s, dir, c))
-          writeTypeSidecar(s, md, "str")
-        case _: org.apache.spark.sql.types.NumericType =>
-          writeNumZonesTo(s, dir, md, numFooterZones(s, dir, c))
-          writeTypeSidecar(s, md, "num")
-        case other => throw new IllegalArgumentException(
-          s"no zone codec for column '$c' of type $other")
-      }
-      // every codec gets the null axis too (same footer walk family):
-      // zones describe the non-null values, nulls-<k>.json the rest
-      writeNullStatsTo(s, dir, md, footerNullStats(s, dir, c))
+      val codec = codecOf(schema, c)
+      commitZones(s, dir, md, c, codec)
+      writeSidecar(s, md, "_type", codec.typeName)
+      commitNulls(s, dir, md, c)
     }
   }
 
-  private def readTypeSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      md: org.apache.hadoop.fs.Path): Option[String] = {
-    val tf = new org.apache.hadoop.fs.Path(md, "_type")
-    if (!fs.exists(tf)) None
-    else {
-      val in = fs.open(tf)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
-  }
-
-  /** Every column's persisted zones under `_colzones/`, grouped by
-    * codec — empty when the store is absent. Driver file IO only. */
+  /** Every column's persisted zones and null counts under `_colzones/`
+    * — empty when the store is absent. Driver file IO only. */
   def readColumnZones(s: SparkSession, dir: String): ColumnZones = {
     val root = colzonesRoot(dir)
     val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return ColumnZones(Seq.empty, Seq.empty, Seq.empty)
-    val subdirs = fs.listStatus(root).toSeq.filter(_.isDirectory)
+    if (!fs.exists(root)) return ColumnZones(Seq.empty)
+    val typed = fs.listStatus(root).toSeq.filter(_.isDirectory)
       .sortBy(_.getPath.getName)
-    val dates = Seq.newBuilder[(String, Seq[FileZone])]
-    val strs = Seq.newBuilder[(String, Seq[StrFileZone])]
-    val nums = Seq.newBuilder[(String, Seq[NumFileZone])]
-    val nulls = Seq.newBuilder[(String, Seq[NullStat])]
-    subdirs.foreach { sd =>
-      val c = sd.getPath.getName
-      readTypeSidecar(fs, sd.getPath).foreach { t =>
-        t match {
-          case "date" => readDateZonesFrom(s, dir, sd.getPath)
-            .foreach(z => dates += (c -> z))
-          case "str" => readStrZonesFrom(s, dir, sd.getPath)
-            .foreach(z => strs += (c -> z))
-          case "num" => readNumZonesFrom(s, dir, sd.getPath)
-            .foreach(z => nums += (c -> z))
-          case _ => () // unknown codec: skip, never mis-read
-        }
-        readNullStatsFrom(s, dir, sd.getPath)
-          .foreach(z => nulls += (c -> z))
-      }
-    }
-    ColumnZones(dates.result(), strs.result(), nums.result(), nulls.result())
+      .flatMap(sd => readSidecar(s, sd.getPath, "_type").map(sd.getPath -> _))
+    ColumnZones(
+      // an unknown codec is skipped, never mis-read
+      typed.flatMap { case (md, t) =>
+        ZoneCodec.named(t).flatMap(storedColumn(s, dir, md, _)) },
+      typed.flatMap { case (md, _) =>
+        readNullStats(s, dir, md).map(md.getName -> _) })
   }
 
+  private def storedColumn[V](s: SparkSession, dir: String, md: Path,
+      codec: ZoneCodec[V]): Option[ZonedColumn[V]] =
+    readZones(s, dir, md, codec).map(ZonedColumn(md.getName, codec, _))
+
   /** APPEND a clustered batch to a `_colzones/` layout and COMMIT, for
-    * EVERY column the store carries, a zone file covering only the NEW
-    * data files — the [[numZonemapAppend]] discipline generalized to
-    * the multi-column store. The column set and each column's codec
-    * come from the store itself (`_type` sidecars), so callers never
-    * restate the schema; per-column manifest maintenance stays
-    * O(new files) footer reads (the commit numbering means readers
-    * merge commits path-sorted, identical to a from-scratch
-    * [[attachColumnZones]] rebuild — StorageSpec pins the equality,
-    * q271 gates a probe spanning both commits through the automatic
-    * rule). The batch is range-clustered on `clusterCol`; other
-    * columns' zones in the new files are whatever the data gives them
-    * (wide zones prune nothing but never lie). */
+    * EVERY column the store carries, a zone file and a null-count file
+    * covering only the NEW data files — the [[zonemapAppend]]
+    * discipline on the multi-column store. The column set and each
+    * column's codec come from the store itself (`_type` sidecars), so
+    * callers never restate the schema; readers merge commits
+    * path-sorted, identical to a from-scratch [[attachColumnZones]]
+    * rebuild (StorageSpec pins the equality, q271 gates a probe
+    * spanning both commits through the automatic rule). The batch is
+    * range-clustered on `clusterCol`; other columns' zones in the new
+    * files are whatever the data gives them (wide zones prune nothing
+    * but never lie). */
   def colzonesAppend(df: DataFrame, clusterCol: String, nFiles: Int,
       path: String): Unit = {
     val s = df.sparkSession
     val prior = readColumnZones(s, path)
     require(!prior.isEmpty,
       s"no _colzones store under $path to append to — attachColumnZones first")
-    df.repartitionByRange(nFiles, col(clusterCol))
-      .sortWithinPartitions(col(clusterCol))
-      .write.mode("append").parquet(path)
-    prior.dateCols.foreach { case (c, zones) =>
-      writeDateZonesTo(s, path, colzoneDir(path, c),
-        footerZones(s, path, c, zones.map(_.path).toSet))
-    }
-    prior.strCols.foreach { case (c, zones) =>
-      writeStrZonesTo(s, path, colzoneDir(path, c),
-        strFooterZones(s, path, c, zones.map(_.path).toSet))
-    }
-    prior.numCols.foreach { case (c, zones) =>
-      writeNumZonesTo(s, path, colzoneDir(path, c),
-        numFooterZones(s, path, c, zones.map(_.path).toSet))
-    }
+    clusteredWriter(df, nFiles, clusterCol).mode("append").parquet(path)
+    prior.cols.foreach(zc => commitZones(s, path, colzoneDir(path, zc.name),
+      zc.name, zc.codec, zc.zones.map(_.path).toSet))
     prior.nullCols.foreach { case (c, stats) =>
-      writeNullStatsTo(s, path, colzoneDir(path, c),
-        footerNullStats(s, path, c, stats.map(_.path).toSet))
+      commitNulls(s, path, colzoneDir(path, c), c, stats.map(_.path).toSet)
     }
-  }
-
-  /** [[survivorsFromManifests]] generalized to ANY number of
-    * constrained columns per codec: each (manifest, interval-union)
-    * pair must accept a file (absent-from-manifest = unskippable on
-    * that column), all pairs INTERSECT. None when nothing constrains. */
-  def survivorsFromColumnSets(
-      dateSets: Seq[(Seq[FileZone], Seq[(Int, Int)])],
-      strSets: Seq[(Seq[StrFileZone], Seq[(Option[String], Option[String])])],
-      numSets: Seq[(Seq[NumFileZone], Seq[(Option[BigDecimal], Option[BigDecimal])])],
-      nullSets: Seq[(Seq[NullStat], Boolean)] = Seq.empty)
-      : Option[(Seq[String], Int)] = {
-    if (dateSets.isEmpty && strSets.isEmpty && numSets.isEmpty &&
-      nullSets.isEmpty) return None
-    val allPaths = (dateSets.flatMap(_._1.map(_.path)) ++
-      strSets.flatMap(_._1.map(_.path)) ++
-      numSets.flatMap(_._1.map(_.path)) ++
-      nullSets.flatMap(_._1.map(_.path))).distinct.sorted
-    val dateBy = dateSets.map { case (man, ivs) =>
-      (man.map(z => z.path -> z).toMap, ivs) }
-    val strBy = strSets.map { case (man, ivs) =>
-      (man.map(z => z.path -> z).toMap, ivs) }
-    val numBy = numSets.map { case (man, ivs) =>
-      (man.map(z => z.path -> z).toMap, ivs) }
-    val nullBy = nullSets.map { case (man, wantNull) =>
-      (man.map(z => z.path -> z).toMap, wantNull) }
-    val survivors = allPaths.filter { p =>
-      dateBy.forall { case (by, ivs) =>
-        by.get(p).forall(z => ivs.exists { case (lo, hi) =>
-          !(z.hi < lo || z.lo > hi) })
-      } &&
-      // null axis: IS NULL skips no-null files; a needed NON-null
-      // (explicit IS NOT NULL, or any value constraint) skips all-null
-      // files; unknown counts always survive
-      nullBy.forall { case (by, wantNull) =>
-        by.get(p).forall(z =>
-          if (wantNull) z.nulls.forall(_ > 0)
-          else z.nulls.forall(_ < z.rows))
-      } &&
-      strBy.forall { case (by, ivs) =>
-        by.get(p).forall(z => ivs.exists { case (lo, hi) =>
-          !(hi.exists(h => z.lo.exists(zl => utf8Lt(h, zl))) ||
-            lo.exists(l => z.hi.exists(zh => utf8Lt(zh, l)))) })
-      } &&
-      numBy.forall { case (by, ivs) =>
-        by.get(p).forall(z => ivs.exists { case (lo, hi) =>
-          !(hi.exists(h => z.lo.exists(zl => h < zl)) ||
-            lo.exists(l => z.hi.exists(zh => zh < l))) })
-      }
-    }
-    Some((survivors, allPaths.size))
-  }
-
-  /** Footer-walk rebuild of a numeric manifest — the referee
-    * [[zonemapManifest]] is for the date axis (O(files) metadata IO,
-    * zero data pages). */
-  def numZonemapManifest(s: SparkSession, dir: String,
-      numCol: String): Seq[NumFileZone] = numFooterZones(s, dir, numCol)
-
-  /** Footer-walk rebuild of a string manifest. */
-  def strZonemapManifest(s: SparkSession, dir: String,
-      strCol: String): Seq[StrFileZone] = strFooterZones(s, dir, strCol)
-
-  /** APPEND a clustered batch to a numeric layout and COMMIT only the
-    * new files' zones (the [[zonemapAppend]] discipline on the numeric
-    * axis): the append writes its own `zones-<k>.json` from only ITS
-    * OWN files' footers — manifest maintenance stays O(new files) —
-    * and [[readNumManifest]] merges commits sorted by path, identical
-    * to a from-scratch rebuild (StorageSpec pins the equality; q268
-    * gates a probe spanning both commits through the automatic rule). */
-  def numZonemapAppend(df: DataFrame, numCol: String, nFiles: Int,
-      path: String): Unit = {
-    val s = df.sparkSession
-    val prior = readNumManifest(s, path).getOrElse(Seq.empty)
-    df.repartitionByRange(nFiles, col(numCol))
-      .sortWithinPartitions(col(numCol))
-      .write.mode("append").parquet(path)
-    writeNumManifest(s, path,
-      numFooterZones(s, path, numCol, prior.map(_.path).toSet))
-    writeAxisColumn(s, numManifestDir(path), numCol)
-  }
-
-  /** [[numZonemapAppend]]'s sibling on the string axis. */
-  def strZonemapAppend(df: DataFrame, strCol: String, nFiles: Int,
-      path: String): Unit = {
-    val s = df.sparkSession
-    val prior = readStrManifest(s, path).getOrElse(Seq.empty)
-    df.repartitionByRange(nFiles, col(strCol))
-      .sortWithinPartitions(col(strCol))
-      .write.mode("append").parquet(path)
-    writeStrManifest(s, path,
-      strFooterZones(s, path, strCol, prior.map(_.path).toSet))
-    writeAxisColumn(s, strManifestDir(path), strCol)
   }
 
   /** Executed OPTIMIZE (the compaction the q144 planner only PLANS,
@@ -1631,11 +1097,9 @@ object Storage {
     * unpartitioned zone-mapped layout — typically fragmented by many
     * append commits — into `nFiles` range-clustered files and
     * RE-DERIVE every piece of layout metadata from the new footers:
-    * the legacy axis manifests keep their columns
-    * (`_zonemap`/`_szonemap`/`_nzonemap` via the attach* rebuilds),
-    * the `_colzones/` store keeps its column set and codecs, and
-    * persisted `_sketch/` statistics SURVIVE via
-    * [[SketchPlanner.SketchManifest.restampAfterRowPreservingRewrite]]
+    * every axis keeps its column, the `_colzones/` store keeps its
+    * column set and codecs, and persisted `_sketch/` statistics SURVIVE
+    * via [[SketchPlanner.SketchManifest.restampAfterRowPreservingRewrite]]
     * — compaction changes no row, so count and CMS cells stay exactly
     * correct and only the staleness stamp is refreshed (zero jobs;
     * cold zero-job planner pricing keeps working across maintenance
@@ -1654,17 +1118,15 @@ object Storage {
     * the same stance as SURVEY §0's consensus boundary. */
   def optimizeCompact(s: SparkSession, dir: String, clusterCol: String,
       nFiles: Int): Unit = {
-    val conf = s.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
+    val root = new Path(dir)
+    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
     require(!fs.listStatus(root).exists(st => st.isDirectory &&
         !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith(".")),
       s"optimizeCompact compacts unpartitioned layouts; $dir has partition dirs")
     // the metadata to re-derive, read BEFORE touching the layout
-    val dateAxis = readAxisColumn(s, manifestDir(dir))
-    val strAxis = readAxisColumn(s, strManifestDir(dir))
-    val numAxis = readAxisColumn(s, numManifestDir(dir))
+    val axes = ZoneCodec.all.flatMap(codec =>
+      readSidecar(s, axisDir(dir, codec), "_column").map(codec -> _))
     val czRoot = colzonesRoot(dir)
     val czCols: Seq[String] =
       if (fs.exists(czRoot))
@@ -1673,88 +1135,30 @@ object Storage {
       else Seq.empty
     // stage the clustered rewrite beside the layout; the job reads the
     // old files in full before anything is deleted
-    val staging = new org.apache.hadoop.fs.Path(
-      root.getParent, root.getName + ".compact-staging")
+    val staging = new Path(root.getParent, root.getName + ".compact-staging")
     fs.delete(staging, true)
-    s.read.parquet(dir)
-      .repartitionByRange(nFiles, col(clusterCol))
-      .sortWithinPartitions(col(clusterCol))
-      .write.mode("overwrite").parquet(staging.toString)
+    clusteredWriter(s.read.parquet(dir), nFiles, clusterCol)
+      .mode("overwrite").parquet(staging.toString)
     // swap: old data files + zone metadata out, staged files in
     // (`_sketch/` stays — its stats describe rows, not files)
     listDataFiles(fs, root).foreach(f => fs.delete(f.getPath, false))
-    Seq(manifestDir(dir), strManifestDir(dir), numManifestDir(dir), czRoot)
-      .foreach(p => fs.delete(p, true))
+    (ZoneCodec.all.map(axisDir(dir, _)) :+ czRoot).foreach(p => fs.delete(p, true))
     listDataFiles(fs, staging).foreach { f =>
-      fs.rename(f.getPath,
-        new org.apache.hadoop.fs.Path(root, f.getPath.getName))
+      fs.rename(f.getPath, new Path(root, f.getPath.getName))
     }
     fs.delete(staging, true)
     // re-derive every manifest the layout carried from the new footers
-    dateAxis.foreach(c => attachDateZonemap(s, dir, c))
-    strAxis.foreach(c => attachStrZonemap(s, dir, c))
-    numAxis.foreach(c => attachNumZonemap(s, dir, c))
+    axes.foreach { case (codec, c) => commitAxis(s, dir, c, codec) }
     if (czCols.nonEmpty) attachColumnZones(s, dir, czCols)
     // row-preserving ⇒ persisted sketch stats are still exact: restamp
     SketchPlanner.SketchManifest.restampAfterRowPreservingRewrite(s, dir)
   }
 
-  /** Decimal-ordered interval intersection for the rule's conjunct
-    * folding — the [[strIntervalIntersect]] shape on the numeric axis. */
-  def numIntervalIntersect(
-      a: (Option[BigDecimal], Option[BigDecimal]),
-      b: (Option[BigDecimal], Option[BigDecimal]))
-      : Option[(Option[BigDecimal], Option[BigDecimal])] = {
-    val lo = (a._1, b._1) match {
-      case (Some(x), Some(y)) => Some(x.max(y))
-      case (x, y) => x.orElse(y)
-    }
-    val hi = (a._2, b._2) match {
-      case (Some(x), Some(y)) => Some(x.min(y))
-      case (x, y) => x.orElse(y)
-    }
-    (lo, hi) match {
-      case (Some(l), Some(h)) if h < l => None
-      case _ => Some((lo, hi))
-    }
-  }
-
-  /** ZONE-MAP PRUNED READ — answer a date-range probe over a
-    * [[zonemapClusteredWrite]] layout reading ONLY the files whose zone
-    * intersects [lo, hi]: skipped files are absent from the returned
-    * frame's file index, so they are never opened (StorageSpec pins
-    * that via the scan's numFiles/filesSize metrics and inputFiles).
-    * The predicate is re-applied on the survivors — pruning is an
-    * optimization, never a filter — so results equal a full scan by
-    * construction (gated: q216 vs the plain-filter oracle). Returns
-    * (frame, total files, skipped files).
-    *
-    * Scale shape: plan cost is ONE small manifest file when the layout
-    * was written by [[zonemapClusteredWrite]] (stats persisted at write
-    * time — the Delta/Iceberg planning shape; at 100 TB the manifest
-    * would be a table of its own), falling back to per-file footer
-    * reads for foreign layouts; execution touches only surviving files,
-    * so a quarter-long probe on a years-long clustered table reads ~the
-    * quarter. */
-  def prunedRead(s: SparkSession, dir: String, dateCol: String,
-      lo: String, hi: String): (DataFrame, Int, Int) = {
-    val loD = java.time.LocalDate.parse(lo).toEpochDay.toInt
-    val hiD = java.time.LocalDate.parse(hi).toEpochDay.toInt
-    val man = readManifest(s, dir)
-      .getOrElse(zonemapManifest(s, dir, dateCol))
-    val survivors = man.filterNot(z => z.hi < loD || z.lo > hiD)
-    val base =
-      if (survivors.isEmpty) s.read.parquet(dir).where(lit(false))
-      else s.read.parquet(survivors.map(_.path): _*)
-    (base.filter(col(dateCol).between(lit(lo).cast("date"), lit(hi).cast("date"))),
-      man.size, man.size - survivors.size)
-  }
-
   /** MANIFEST-AS-DATAFRAME pruned read — [[prunedRead]]'s 100 TB form
     * (round-13 verdict task 4): [[prunedRead]] materializes the WHOLE
-    * manifest driver-side (`Seq[FileZone]`), right at 64 files but O(all
-    * files) at a million-file table. Here the zone predicate is
-    * evaluated DISTRIBUTED over the manifest read as a DataFrame, and
+    * manifest driver-side, right at 64 files but O(all files) at a
+    * million-file table. Here the zone predicate is evaluated
+    * DISTRIBUTED over the date axis manifest read as a DataFrame, and
     * the driver materializes only (a) one 1-row (total, skipped)
     * aggregate and (b) the SURVIVOR paths — O(files actually read),
     * which the reader needs on the driver anyway to plan the scan (the
@@ -1774,69 +1178,55 @@ object Storage {
     val stats = man.agg(count(lit(1)).as("total"),
       coalesce(sum(when(dead, 1L).otherwise(0L)), lit(0L)).as("skipped"))
       .collect()(0) // 1-row planner scalar (the AQE-stats shape)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
+    val fs = new Path(dir).getFileSystem(s.sessionState.newHadoopConf())
     val survivors = man.filter(!dead).select(col("file"))
       .collect() // O(surviving files) — the scan's own plan-time listing
-      .map(r => fs.makeQualified(
-        new org.apache.hadoop.fs.Path(dir, r.getString(0))).toString)
-    val base =
-      if (survivors.isEmpty) s.read.parquet(dir).where(lit(false))
-      else s.read.parquet(survivors.toSeq: _*)
-    (base.filter(col(dateCol).between(lit(lo).cast("date"), lit(hi).cast("date"))),
+      .map(r => fs.makeQualified(new Path(dir, r.getString(0))).toString)
+    (readSurvivors(s, dir, survivors.toSeq).filter(dateBetween(dateCol, lo, hi)),
       stats.getLong(0), stats.getLong(1))
   }
 
-  /** The `_zonemap/` commit files as a DataFrame — the
-    * manifest-is-a-table stance (see [[manifestDir]] for why the
+  /** The date axis's commit files as a DataFrame — the
+    * manifest-is-a-table stance (see [[axisDir]] for why the
     * directory, not the files, carries the underscore). */
   def manifestDf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // glob INTO the children: Hadoop's hidden-file filter applies to the
     // final glob matches (zones-*.json — visible names), not to the
-    // underscore ancestor, so this reads what a bare `_zonemap` path
+    // underscore ancestor, so this reads what a bare axis-dir path
     // would filter out
     s.createDataset(s.sparkContext.textFile(
-        new org.apache.hadoop.fs.Path(manifestDir(dir), "zones-*.json").toString))
-      .select(from_json(col("value"), org.apache.spark.sql.types.StructType
+        new Path(axisDir(dir, ZoneCodec.Date), "zones-*.json").toString))
+      .select(from_json(col("value"), StructType
         .fromDDL("file STRING, lo INT, hi INT")).as("z"))
       .select(col("z.file").as("file"), col("z.lo").as("lo"), col("z.hi").as("hi"))
       .filter(col("file").isNotNull)
   }
 
-  /** The q213 census CASHED IN as a real read path under the gate: land
-    * lineitem's (ship_date, l_quantity) as a 64-file date-clustered
-    * layout (built once per session — the q70 amortization stance: a
-    * layout is written once and serves every later query), then answer
-    * the 1997-Q1 probe through [[prunedRead]] and aggregate per month.
-    * The oracle is the SAME aggregate as a plain filter over the source
-    * table — if pruning ever dropped or duplicated a file, the
-    * row/hash gate fails. File-skipping itself is pinned in StorageSpec
-    * (scan metrics: only surviving files opened) and quantified in
-    * BASELINE.md §"Round-13: zone-map pruned read A/B"; it cannot be
-    * oracled here because the
-    * range partitioner's sampled file boundaries are not replicable in
-    * SQL. Quantity accumulates in DECIMAL (the q70 convention). */
-  /** Build (once per session) and return the 64-file ship_date-clustered
-    * lineitem layout q216/q227 probe. */
+  /** Build (once per session — the q70 amortization stance: a layout
+    * is written once and serves every later query) and return the
+    * 64-file ship_date-clustered lineitem layout q216/q227/q247/q260
+    * probe. */
   private def q216Layout(s: SparkSession, d: String): String = {
     val dir = scratch(s, "q216_li_shipclustered", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
+    if (missing(s, dir, "_SUCCESS"))
       zonemapClusteredWrite(
         lineitem(s, d).select(to_date(col("l_shipdate")).as("ship_date"),
           col("l_quantity")),
         "ship_date", 64, dir)
-    // Backfill the `_column` sidecar on an otherwise-valid CACHED layout
-    // written before the sidecar existed (r15 advice): without it
-    // zonemapColumn returns None, the automatic rule never fires, and
-    // q247's require fails permanently until the scratch dir is wiped.
-    else if (zonemapColumn(s, dir).isEmpty)
-      writeAxisColumn(s, manifestDir(dir), "ship_date")
     dir
   }
 
+  /** The q213 census CASHED IN as a real read path under the gate: the
+    * 1997-Q1 probe over the q216 layout through [[prunedRead]],
+    * aggregated per month. The oracle is the SAME aggregate as a plain
+    * filter over the source table — if pruning ever dropped or
+    * duplicated a file, the row/hash gate fails. File-skipping itself
+    * is pinned in StorageSpec (scan metrics: only surviving files
+    * opened) and quantified in BASELINE.md §"Round-13: zone-map pruned
+    * read A/B"; it cannot be oracled here because the range
+    * partitioner's sampled file boundaries are not replicable in SQL.
+    * Quantity accumulates in DECIMAL (the q70 convention). */
   def q216PrunedRead(s: SparkSession, d: String): DataFrame = {
     val (probe, _, _) = prunedRead(s, q216Layout(s, d), "ship_date",
       "1997-01-01", "1997-03-31")
@@ -1924,16 +1314,7 @@ object Storage {
     * widened extraction finally consumes them for ranges, not just
     * equality. */
   def q261AutoPruneStrRange(s: SparkSession, d: String): DataFrame = {
-    val dir = scratch(s, "q241_docs_by_source", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(strManifestDir(dir)))
-      strZonemapClusteredWrite(
-        documents(s, d).select(col("source"), col("lang"), col("n_chars")),
-        "source", 16, dir)
-    else if (strZonemapColumn(s, dir).isEmpty) // legacy cached layout
-      writeAxisColumn(s, strManifestDir(dir), "source")
-    val probe = s.read.parquet(dir)
+    val probe = s.read.parquet(q241Layout(s, d))
       .filter(col("source") >= "src12" && col("source") <= "src14")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -1964,9 +1345,7 @@ object Storage {
     * oracle. Year grouping keys the output across the commit boundary. */
   def q219AppendPrune(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(s, "q219_li_appended", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(manifestDir(dir))) {
+    if (missing(s, dir, ZoneCodec.Date.dirName)) {
       val li = lineitem(s, d).select(
         to_date(col("l_shipdate")).as("ship_date"), col("l_quantity"))
       zonemapClusteredWrite(
@@ -2013,25 +1392,6 @@ object Storage {
       |  AND DATE '1997-06-30'
       |GROUP BY 1""".stripMargin
 
-  /** PARTITION-DIR + ZONE-MAP layered write (r16 verdict task 4): data
-    * lands under `partCol=value/` directories (Spark's own partition
-    * pruning handles that axis) AND, within each partition, files are
-    * range-clustered on `dateCol` with per-file zones persisted in ONE
-    * root-level `_zonemap/` manifest holding partition-relative paths —
-    * the Delta/Iceberg layering where directory pruning and file-stat
-    * skipping compose. The range partitioning on (partCol, dateCol)
-    * makes each output task hold a contiguous (partition, date) slice,
-    * so within a partition directory the per-file date zones are tight. */
-  def partitionedZonemapClusteredWrite(df: DataFrame, partCol: String,
-      dateCol: String, nFiles: Int, path: String): Unit = {
-    df.repartitionByRange(nFiles, col(partCol), col(dateCol))
-      .sortWithinPartitions(col(partCol), col(dateCol))
-      .write.partitionBy(partCol).mode("overwrite").parquet(path)
-    val s = df.sparkSession
-    writeManifest(s, path, zonemapManifest(s, path, dateCol))
-    writeAxisColumn(s, manifestDir(path), dateCol)
-  }
-
   /** NUMERIC-RANGE automatic pruning under the gate (r16 verdict
     * task 3): orders range-clustered on `o_totalprice` into 32 files,
     * probed with a BETWEEN on the clustered measure through a plain
@@ -2040,10 +1400,8 @@ object Storage {
     * serve. The q247 `require` pattern pins that the rewrite fired. */
   def q265AutoPruneNumRange(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(s, "q265_orders_by_price", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(numManifestDir(dir)))
-      numZonemapClusteredWrite(
+    if (missing(s, dir, ZoneCodec.Num.dirName))
+      zonemapClusteredWrite(
         orders(s, d).select(col("o_totalprice"), col("o_orderpriority")),
         "o_totalprice", 32, dir)
     val probe = s.read.parquet(dir)
@@ -2074,9 +1432,7 @@ object Storage {
     * half via the executed scan's file count. */
   def q266PartitionedPrune(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(s, "q266_events_part_zoned", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(manifestDir(dir)))
+    if (missing(s, dir, ZoneCodec.Date.dirName))
       partitionedZonemapClusteredWrite(
         events(s, d).select(col("event_type"),
           to_date(col("ts")).as("ev_date"), col("value")),
@@ -2101,7 +1457,7 @@ object Storage {
       |GROUP BY 1""".stripMargin
 
   /** NUMERIC APPEND COMMIT under the gate (q219's shape on the numeric
-    * axis): the base write lands orders under 250k, [[numZonemapAppend]]
+    * axis): the base write lands orders under 250k, [[zonemapAppend]]
     * adds the rest reading only its own footers, and the probe window
     * (200k..300k) deliberately SPANS both commits — rows from base
     * files, appended files, and the merged-manifest skip decision all
@@ -2109,13 +1465,11 @@ object Storage {
     * the AUTOMATIC rule (plain read.filter, require pins the shrink). */
   def q268NumAppendPrune(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(s, "q268_orders_appended", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(numManifestDir(dir))) {
+    if (missing(s, dir, ZoneCodec.Num.dirName)) {
       val o = orders(s, d).select(col("o_totalprice"), col("o_orderpriority"))
-      numZonemapClusteredWrite(
+      zonemapClusteredWrite(
         o.filter(col("o_totalprice") < 250000.0), "o_totalprice", 16, dir)
-      numZonemapAppend(
+      zonemapAppend(
         o.filter(col("o_totalprice") >= 250000.0), "o_totalprice", 16, dir)
     }
     val probe = s.read.parquet(dir)
@@ -2139,7 +1493,7 @@ object Storage {
     * `OPTIMIZE ZORDER BY (a, b)` + stats-skipping composition, built
     * from this engine's own pieces): events Morton-clustered on
     * (day index, value cents) — so every file covers a 2-D block —
-    * then [[attachDateZonemap]] + [[attachNumZonemap]] persist
+    * then [[attachZonemap]] (date, then numeric) persists
     * footer zones for the ORIGINAL `ev_date` and `value` columns, and
     * a plain `read.filter(date window AND value window)` through the
     * automatic rule prunes on the INTERSECTION of both survivor sets.
@@ -2150,17 +1504,15 @@ object Storage {
     * 2-predicate filter over the raw table. */
   def q269ZorderAutoPrune(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(s, "q269_events_zorder", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(numManifestDir(dir))) {
+    if (missing(s, dir, ZoneCodec.Num.dirName)) {
       val df = events(s, d).select(
         to_date(col("ts")).as("ev_date"), col("value"),
         datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
           .cast("long").as("dayi"),
         round(col("value") * 100).cast("long").as("centi"))
       zorderWrite(df, "dayi", "centi", 1024, 32, dir)
-      attachDateZonemap(s, dir, "ev_date")
-      attachNumZonemap(s, dir, "value")
+      attachZonemap(s, dir, "ev_date")
+      attachZonemap(s, dir, "value")
     }
     val probe = s.read.parquet(dir)
       .filter(col("ev_date").between(lit("2024-01-20").cast("date"),
@@ -2182,8 +1534,8 @@ object Storage {
 
   /** MULTI-COLUMN ZONE STORE under the gate (`_colzones/` — the Delta
     * stats-for-every-column shape): lineitem z-ordered on its TWO
-    * join keys, both NUMERIC — the case the single-column-per-axis
-    * legacy manifests cannot hold — with per-column zones attached via
+    * join keys, both NUMERIC — the case the one-column-per-codec axes
+    * cannot hold — with per-column zones attached via
     * [[attachColumnZones]]; a 2-D range probe through a plain
     * read.filter prunes on the intersection of BOTH columns' survivor
     * sets (q79's Morton layout finally cashed in by the automatic
@@ -2191,9 +1543,7 @@ object Storage {
     * rows AND prunes at every SF (key ranges grow with SF). */
   def q270ColzonesPrune(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(s, "q270_li_zorder_keys", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(colzonesRoot(dir))) {
+    if (missing(s, dir, "_colzones")) {
       zorderWrite(lineitem(s, d).select(col("l_partkey"), col("l_suppkey"),
           col("l_returnflag"), col("l_extendedprice")),
         "l_partkey", "l_suppkey", 1024, 64, dir)
@@ -2217,7 +1567,7 @@ object Storage {
       |GROUP BY 1""".stripMargin
 
   /** MULTI-COLUMN STORE APPEND under the gate: a `_colzones/` layout
-    * (NO legacy axis dirs, so any pruning can only come from the
+    * (NO single-column axis dirs, so any pruning can only come from the
     * store) built as clustered-write + [[colzonesAppend]] — the append
     * committed O(new files) zone files for BOTH stored columns — then
     * one range probe SPANNING the commit boundary prunes through the
@@ -2225,15 +1575,11 @@ object Storage {
     * plain filter over the raw table; the `require` pins the shrink. */
   def q271ColzonesAppend(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(s, "q271_orders_cz_append", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(colzonesRoot(dir))) {
+    if (missing(s, dir, "_colzones")) {
       val o = orders(s, d).select(col("o_totalprice"), col("o_custkey"),
         col("o_orderpriority"))
-      o.filter(col("o_totalprice") < 250000.0)
-        .repartitionByRange(16, col("o_totalprice"))
-        .sortWithinPartitions(col("o_totalprice"))
-        .write.mode("overwrite").parquet(dir)
+      clusteredWriter(o.filter(col("o_totalprice") < 250000.0), 16,
+        "o_totalprice").mode("overwrite").parquet(dir)
       attachColumnZones(s, dir, Seq("o_totalprice", "o_custkey"))
       colzonesAppend(o.filter(col("o_totalprice") >= 250000.0),
         "o_totalprice", 16, dir)
@@ -2268,19 +1614,19 @@ object Storage {
     * layout and metadata, never rows. */
   def q272OptimizeCompact(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(s, "q272_li_compacted", d)
-    val root = new org.apache.hadoop.fs.Path(dir)
+    val root = new Path(dir)
     val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(numManifestDir(dir))) {
+    if (missing(s, dir, ZoneCodec.Num.dirName)) {
       val li = lineitem(s, d).select(col("l_extendedprice"),
         col("l_returnflag"), col("l_quantity"))
       // fragmented history: each commit is price-clustered over only
       // its own quantity slice — four parallel price grids of 8 files
-      numZonemapClusteredWrite(li.filter(col("l_quantity") <= 10),
+      zonemapClusteredWrite(li.filter(col("l_quantity") <= 10),
         "l_extendedprice", 8, dir)
       Seq(col("l_quantity") > 10 && col("l_quantity") <= 25,
           col("l_quantity") > 25 && col("l_quantity") <= 40,
           col("l_quantity") > 40).foreach { slice =>
-        numZonemapAppend(li.filter(slice), "l_extendedprice", 8, dir)
+        zonemapAppend(li.filter(slice), "l_extendedprice", 8, dir)
       }
       require(listDataFiles(fs, root).size == 32,
         "q272 fragmented history should hold 32 files pre-compaction")
@@ -2315,14 +1661,10 @@ object Storage {
     * records nulls == rows and the automatic rule can skip them. */
   private def q273Layout(s: SparkSession, d: String): String = {
     val dir = scratch(s, "q273_events_sparse", d)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(colzonesRoot(dir))) {
-      events(s, d).select(col("user_id"), col("value"),
-          when(col("value") >= 35.0, col("value")).as("big_value"))
-        .repartitionByRange(16, col("value"))
-        .sortWithinPartitions(col("value"))
-        .write.mode("overwrite").parquet(dir)
+    if (missing(s, dir, "_colzones")) {
+      clusteredWriter(events(s, d).select(col("user_id"), col("value"),
+          when(col("value") >= 35.0, col("value")).as("big_value")), 16, "value")
+        .mode("overwrite").parquet(dir)
       attachColumnZones(s, dir, Seq("big_value"))
     }
     dir

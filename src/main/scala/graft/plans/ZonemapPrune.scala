@@ -6,20 +6,20 @@ import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expre
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
-import org.apache.spark.sql.types.{ByteType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
-import graft.operators.Storage
+import graft.operators.{Storage, ZoneCodec, ZoneSet, ZonedColumn}
 
 /** AUTOMATIC zone-map pruning — the round-14 verdict's task-4 close of
   * the storage arc: `Storage.prunedRead`/`strPrunedRead`/
   * `compoundPrunedRead` skip files a probe cannot touch, but a user had
   * to CALL them. This [[Rule]] detects a pushed-down Filter over a
-  * parquet relation whose directory carries a persisted `_zonemap/`
-  * (date axis), `_szonemap/` (string axis) or
-  * `_nzonemap/` (numeric axis, r16 verdict task 3) manifest with a
-  * `_column` sidecar naming the clustered column, extracts the
-  * qualifying predicate bounds, and swaps the relation's file index for
-  * one listing ONLY the surviving files — so a plain
+  * parquet relation whose directory carries persisted zones
+  * ([[Storage.zoneStore]]: an axis manifest whose `_column` sidecar
+  * names the clustered column, or the multi-column `_colzones/`
+  * store), extracts the qualifying predicate bounds per zoned column,
+  * and swaps the relation's file index for one listing ONLY the
+  * surviving files — so a plain
   * `spark.read.parquet(dir).filter(col("day") >= ...)` gets the q216
   * skip without a facade call.
   *
@@ -33,11 +33,11 @@ import graft.operators.Storage
   *   - the Filter STAYS on top of the pruned relation — pruning is an
   *     optimization, never a filter (a file can survive on zones and
   *     still hold no matching rows);
-  *   - survivor sets follow [[Storage.survivorsFromManifests]]' union
+  *   - survivor sets follow [[Storage.survivorsFromColumnSets]]' union
   *     semantics: a file absent from one manifest is unskippable on
-  *     that axis, all axes intersect;
+  *     that column, all constrained columns intersect;
   *   - only PERSISTED manifests are consulted (plan cost = one small
-  *     file per axis, the Delta/Iceberg shape) — no silent O(files)
+  *     file per zoned column, the Delta/Iceberg shape) — no silent O(files)
   *     footer scans at plan time; manifest-less or sidecar-less
   *     layouts are left exactly as they were. Million-file tables
   *     stay on [[Storage.prunedReadScaled]]'s distributed manifest
@@ -56,17 +56,17 @@ import graft.operators.Storage
   * doing the job the other can't (a partition filter can't see
   * within-partition clustering; a zone can't see directory values).
   *
-  * Predicate extraction (widened in r16 to IN-lists, string ranges,
-  * same-column ORs; numeric comparisons this round): each top-level
-  * conjunct is desugared to a UNION of closed intervals over the
-  * clustered column —
+  * Predicate extraction (one implementation over [[ZoneCodec]]): each
+  * top-level conjunct is desugared to a UNION of closed intervals over
+  * the zoned column —
   *   comparisons (<, <=, >, >=, =, either operand order) → one
-  *     interval (string/numeric strict bounds conservatively widen to
+  *     interval (a strict bound closes as the codec says: a date moves
+  *     by a day, string/numeric bounds conservatively widen to
   *     inclusive — a superset never skips a file it shouldn't);
   *   IN (and its optimized InSet form) → point intervals;
   *   OR / nested AND → interval-set union / intersection, provided
-  *     EVERY leaf constrains the same clustered column.
-  * Constraining conjuncts INTERSECT. A file survives an axis when any
+  *     EVERY leaf constrains the same zoned column.
+  * Constraining conjuncts INTERSECT. A file survives a column when any
   * interval overlaps its zone. Anything else (casts around the column,
   * mixed-column disjunctions, NaN literals, streaming relations,
   * multi-root reads) leaves the plan untouched. Zones cover every row
@@ -84,53 +84,10 @@ import graft.operators.Storage
   * survivors, so a re-application finds nothing further to skip
   * (`finalFiles.size < listed.size` fails) and returns the plan
   * unchanged. Manifest reads are MEMOIZED per `apply()` invocation (r16
-  * advice): one small-file read per axis per DIRECTORY, however many
+  * advice): one small-file read per zoned column per DIRECTORY, however many
   * Filter nodes inspect it — on a remote FS a per-node re-read makes
   * plan latency scale with the number of filters. */
 object ZonemapPruneRule extends Rule[LogicalPlan] {
-
-  /** Everything the rule needs to know about one layout directory,
-    * read ONCE per optimizer pass: the per-axis `_column` sidecars,
-    * the persisted manifests for advertised axes, and the
-    * multi-column `_colzones/` store (any number of columns per
-    * codec). Legacy axes and colzones columns all INTERSECT. */
-  private[plans] case class DirAxes(
-      dateCol: Option[String], strCol: Option[String], numCol: Option[String],
-      dateMan: Option[Seq[Storage.FileZone]],
-      strMan: Option[Seq[Storage.StrFileZone]],
-      numMan: Option[Seq[Storage.NumFileZone]],
-      colzones: Storage.ColumnZones) {
-    def isEmpty: Boolean =
-      dateCol.isEmpty && strCol.isEmpty && numCol.isEmpty && colzones.isEmpty
-    /** Every (column, manifest) pair per codec — legacy axis first. */
-    def dateCands: Seq[(String, Seq[Storage.FileZone])] =
-      (for (c <- dateCol; m <- dateMan) yield (c, m)).toSeq ++ colzones.dateCols
-    def strCands: Seq[(String, Seq[Storage.StrFileZone])] =
-      (for (c <- strCol; m <- strMan) yield (c, m)).toSeq ++ colzones.strCols
-    def numCands: Seq[(String, Seq[Storage.NumFileZone])] =
-      (for (c <- numCol; m <- numMan) yield (c, m)).toSeq ++ colzones.numCols
-    /** The null axis lives only in the `_colzones/` store (written for
-      * every column, whatever its value codec). */
-    def nullCands: Seq[(String, Seq[Storage.NullStat])] = colzones.nullCols
-    /** Union of every path any persisted manifest lists — the set the
-      * zone guarantees cover. */
-    def manifestedPaths: Set[String] =
-      (dateMan.getOrElse(Seq.empty).map(_.path) ++
-        strMan.getOrElse(Seq.empty).map(_.path) ++
-        numMan.getOrElse(Seq.empty).map(_.path) ++
-        colzones.allPaths).toSet
-  }
-
-  private[plans] def loadAxes(s: SparkSession, dir: String): DirAxes = {
-    val dc = Storage.zonemapColumn(s, dir)
-    val sc = Storage.strZonemapColumn(s, dir)
-    val nc = Storage.numZonemapColumn(s, dir)
-    DirAxes(dc, sc, nc,
-      dc.flatMap(_ => Storage.readManifest(s, dir)),
-      sc.flatMap(_ => Storage.readStrManifest(s, dir)),
-      nc.flatMap(_ => Storage.readNumManifest(s, dir)),
-      Storage.readColumnZones(s, dir))
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val session = SparkSession.getActiveSession
@@ -138,11 +95,11 @@ object ZonemapPruneRule extends Rule[LogicalPlan] {
     if (session == null) plan
     else {
       // per-APPLY manifest memo: every Filter node shares the reads
-      val axesOf = scala.collection.mutable.Map.empty[String, DirAxes]
+      val storeOf = scala.collection.mutable.Map.empty[String, Storage.ColumnZones]
       plan.transformDown {
         case f @ Filter(cond, lr: LogicalRelation)
             if !lr.isStreaming && lr.relation.isInstanceOf[HadoopFsRelation] =>
-          prune(session, cond, lr, axesOf).getOrElse(f)
+          prune(session, cond, lr, storeOf).getOrElse(f)
       }
     }
   }
@@ -154,43 +111,32 @@ object ZonemapPruneRule extends Rule[LogicalPlan] {
 
   private def prune(s: SparkSession, cond: Expression,
       lr: LogicalRelation,
-      axesOf: scala.collection.mutable.Map[String, DirAxes])
+      storeOf: scala.collection.mutable.Map[String, Storage.ColumnZones])
       : Option[LogicalPlan] = {
     val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
     val roots = fsRel.location.rootPaths
     if (roots.size != 1) return None
     val dir = roots.head.toString
-    val axes = axesOf.getOrElseUpdate(dir, loadAxes(s, dir))
-    if (axes.isEmpty) return None
+    val store = storeOf.getOrElseUpdate(dir, Storage.zoneStore(s, dir))
+    if (store.isEmpty) return None
     val cs = conjuncts(cond)
     // every zoned column the predicate constrains contributes one
-    // (manifest, interval-union) pair; all pairs intersect
-    val dateHits = axes.dateCands.flatMap { case (c, man) =>
-      extractDateIvs(cs, lr, c).map(ivs => (c, man, ivs)) }
-    val strHits = axes.strCands.flatMap { case (c, man) =>
-      extractStrIvs(cs, lr, c).map(ivs => (c, man, ivs)) }
-    val numHits = axes.numCands.flatMap { case (c, man) =>
-      extractNumIvs(cs, lr, c).map(ivs => (c, man, ivs)) }
+    // ZoneSet; all sets intersect
+    val hits = store.cols.flatMap(zc => constrain(cs, lr, zc))
     // the null axis: explicit IS [NOT] NULL conjuncts, plus the
     // not-null a value constraint IMPLIES (a conjunct like `c >= 5`
     // is never true on a null row, so an all-null file cannot serve it)
-    val valueCols = (dateHits.map(_._1) ++ strHits.map(_._1) ++
-      numHits.map(_._1)).toSet
-    val nullSets = axes.nullCands.flatMap { case (c, man) =>
+    val valueCols = hits.map(_._1).toSet
+    val nullSets = store.nullCols.flatMap { case (c, man) =>
       extractNullWant(cs, lr, c, valueCols.contains(c)).map(w => (man, w)) }
-    val dateSets = dateHits.map(t => (t._2, t._3))
-    val strSets = strHits.map(t => (t._2, t._3))
-    val numSets = numHits.map(t => (t._2, t._3))
-    if (dateSets.isEmpty && strSets.isEmpty && numSets.isEmpty &&
-      nullSets.isEmpty) return None
-    survivingFilesOf(dateSets, strSets, numSets, nullSets).flatMap {
+    Storage.survivorsFromColumnSets(hits.map(_._2), nullSets).flatMap {
       case (survivors, _) =>
         // Coverage cross-check (r15 advice): the manifests only protect
         // files they LIST. A data file present in the directory but
         // absent from every persisted manifest (crash between the
         // parquet append commit and the manifest write, or any
         // out-of-band addition) must stay in the scan UNCONDITIONALLY —
-        // otherwise enabling the flag would change results vs the plain
+        // otherwise applying the rule would change results vs the plain
         // scan, breaking the rule's "results equal the unpruned scan by
         // construction" contract. Likewise a manifest row whose data
         // file no longer exists is dropped (the plain scan would not
@@ -199,7 +145,7 @@ object ZonemapPruneRule extends Rule[LogicalPlan] {
         def key(p: String): String = new Path(p).toUri.getPath
         val listed = fsRel.location.inputFiles.toSeq
         val listedKeys = listed.map(key).toSet
-        val manifested = axes.manifestedPaths.map(key)
+        val manifested = store.allPaths.map(key).toSet
         val unmanifested = listed.filter(p => !manifested.contains(key(p)))
         val finalFiles =
           survivors.filter(p => listedKeys.contains(key(p))) ++ unmanifested
@@ -225,14 +171,10 @@ object ZonemapPruneRule extends Rule[LogicalPlan] {
     }
   }
 
-  /** Seam for ZonemapPruneSpec's never-a-filter fault drill. */
-  private[plans] def survivingFilesOf(
-      dateSets: Seq[(Seq[Storage.FileZone], Seq[(Int, Int)])],
-      strSets: Seq[(Seq[Storage.StrFileZone], Seq[(Option[String], Option[String])])],
-      numSets: Seq[(Seq[Storage.NumFileZone], Seq[(Option[BigDecimal], Option[BigDecimal])])],
-      nullSets: Seq[(Seq[Storage.NullStat], Boolean)] = Seq.empty)
-      : Option[(Seq[String], Int)] =
-    Storage.survivorsFromColumnSets(dateSets, strSets, numSets, nullSets)
+  private def constrain[V](cs: Seq[Expression], lr: LogicalRelation,
+      zc: ZonedColumn[V]): Option[(String, ZoneSet[V])] =
+    extractIvs(cs, lr, zc.name, zc.codec)
+      .map(ivs => zc.name -> ZoneSet(zc.codec, zc.zones, ivs))
 
   /** The null-axis want for column `c` from the top-level conjuncts:
     * Some(true) when a conjunct demands NULL rows (skip no-null
@@ -256,204 +198,53 @@ object ZonemapPruneRule extends Rule[LogicalPlan] {
     else None
   }
 
-  /** Interval union over the clustered DateType column from the
-    * top-level conjuncts — None when no conjunct constrains it.
-    * Constraining conjuncts intersect; inside one conjunct, OR unions
-    * and nested AND intersects, each leaf a comparison/IN/InSet on the
-    * column (any leaf that is not kills that conjunct's extraction —
-    * conservative). */
-  private def extractDateIvs(cs: Seq[Expression], lr: LogicalRelation,
-      dateCol: String): Option[Seq[(Int, Int)]] = {
+  /** Interval union over zoned column `c` from the top-level conjuncts
+    * — None when no conjunct constrains it. Constraining conjuncts
+    * intersect; inside one conjunct, OR unions and nested AND
+    * intersects, each leaf a comparison/IN/InSet on the column (any
+    * leaf that is not kills that conjunct's extraction — conservative).
+    * The column must be of a type the codec serves and each literal
+    * must decode through it: a NaN literal does not (NaN ordering
+    * differs between Spark and IEEE, so zones never reason about it),
+    * and mixed-type comparisons arrive cast-wrapped from the analyzer
+    * and fail the column match — conservative again. */
+  private def extractIvs[V](cs: Seq[Expression], lr: LogicalRelation,
+      c: String, codec: ZoneCodec[V]): Option[Seq[(Option[V], Option[V])]] = {
+    type Iv = (Option[V], Option[V])
     def isCol(e: Expression): Boolean = e match {
       case a: Attribute =>
-        a.dataType == DateType && lr.output.exists(o =>
-          o.exprId == a.exprId && o.name == dateCol)
+        codec.serves(a.dataType) && lr.output.exists(o =>
+          o.exprId == a.exprId && o.name == c)
       case _ => false
     }
-    def litV(e: Expression): Option[Int] = e match {
-      case Literal(v: Int, DateType) => Some(v)
+    def litV(e: Expression): Option[V] = e match {
+      case Literal(v, dt) if v != null && codec.serves(dt) => codec.fromCatalyst(v)
       case _ => None
     }
-    def intersect(a: Seq[(Int, Int)], b: Seq[(Int, Int)]): Seq[(Int, Int)] =
-      for {
-        (al, ah) <- a; (bl, bh) <- b
-        lo = math.max(al, bl); hi = math.min(ah, bh) if lo <= hi
-      } yield (lo, hi)
-    def ivs(e: Expression): Option[Seq[(Int, Int)]] = e match {
-      case Or(l, r) => for (a <- ivs(l); b <- ivs(r)) yield a ++ b
-      case And(l, r) => for (a <- ivs(l); b <- ivs(r)) yield intersect(a, b)
-      case In(a, ls) if isCol(a) && ls.nonEmpty =>
-        val vs = ls.map(litV)
-        if (vs.forall(_.isDefined)) Some(vs.flatten.map(v => (v, v))) else None
-      case InSet(a, hset) if isCol(a) && hset.nonEmpty =>
-        val vs = hset.toSeq.map {
-          case i: java.lang.Integer => Some(i.intValue)
-          case _ => None
-        }
-        if (vs.forall(_.isDefined)) Some(vs.flatten.map(v => (v, v))) else None
-      case EqualTo(a, l) if isCol(a) => litV(l).map(v => Seq((v, v)))
-      case EqualTo(l, a) if isCol(a) => litV(l).map(v => Seq((v, v)))
-      case GreaterThanOrEqual(a, l) if isCol(a) =>
-        litV(l).map(v => Seq((v, Int.MaxValue)))
-      case GreaterThan(a, l) if isCol(a) =>
-        litV(l).map(v => Seq((v + 1, Int.MaxValue)))
-      case LessThanOrEqual(a, l) if isCol(a) =>
-        litV(l).map(v => Seq((Int.MinValue, v)))
-      case LessThan(a, l) if isCol(a) =>
-        litV(l).map(v => Seq((Int.MinValue, v - 1)))
-      // literal-on-the-left forms, flipped
-      case GreaterThanOrEqual(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((Int.MinValue, v)))
-      case GreaterThan(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((Int.MinValue, v - 1)))
-      case LessThanOrEqual(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((v, Int.MaxValue)))
-      case LessThan(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((v + 1, Int.MaxValue)))
-      case _ => None
-    }
-    val per = cs.flatMap(ivs(_))
-    if (per.isEmpty) None else Some(per.reduce(intersect))
-  }
-
-  /** Interval union over the clustered StringType column — equality,
-    * IN/InSet, ranges (strict bounds conservatively widen to
-    * inclusive: a superset interval never skips a file it shouldn't),
-    * OR/AND composition. Interval ends are Option (None = unbounded);
-    * intersection goes through [[Storage.strIntervalIntersect]]'s
-    * utf8 order. */
-  private def extractStrIvs(cs: Seq[Expression], lr: LogicalRelation,
-      strCol: String): Option[Seq[(Option[String], Option[String])]] = {
-    type Iv = (Option[String], Option[String])
-    def isCol(e: Expression): Boolean = e match {
-      case a: Attribute =>
-        a.dataType == StringType && lr.output.exists(o =>
-          o.exprId == a.exprId && o.name == strCol)
-      case _ => false
-    }
-    def litV(e: Expression): Option[String] = e match {
-      case Literal(v, StringType) if v != null => Some(v.toString)
-      case _ => None
-    }
+    def points(vs: Seq[Option[V]]): Option[Seq[Iv]] =
+      if (vs.forall(_.isDefined)) Some(vs.flatten.map(v => (Option(v), Option(v))))
+      else None
+    def from(v: V): Seq[Iv] = Seq((Option(v), None))
+    def upTo(v: V): Seq[Iv] = Seq((None, Option(v)))
     def intersect(a: Seq[Iv], b: Seq[Iv]): Seq[Iv] =
-      for (x <- a; y <- b; r <- Storage.strIntervalIntersect(x, y)) yield r
+      for (x <- a; y <- b; r <- codec.intersect(x, y)) yield r
     def ivs(e: Expression): Option[Seq[Iv]] = e match {
       case Or(l, r) => for (a <- ivs(l); b <- ivs(r)) yield a ++ b
       case And(l, r) => for (a <- ivs(l); b <- ivs(r)) yield intersect(a, b)
-      case In(a, ls) if isCol(a) && ls.nonEmpty =>
-        val vs = ls.map(litV)
-        if (vs.forall(_.isDefined))
-          Some(vs.flatten.map(v => (Option(v), Option(v)))) else None
+      case In(a, ls) if isCol(a) && ls.nonEmpty => points(ls.map(litV))
       case InSet(a, hset) if isCol(a) && hset.nonEmpty =>
-        val vs = hset.toSeq.map {
-          case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
-          case _ => None
-        }
-        if (vs.forall(_.isDefined))
-          Some(vs.flatten.map(v => (Option(v), Option(v)))) else None
-      case EqualTo(a, l) if isCol(a) =>
-        litV(l).map(v => Seq((Option(v), Option(v)): Iv))
-      case EqualTo(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((Option(v), Option(v)): Iv))
-      case GreaterThanOrEqual(a, l) if isCol(a) =>
-        litV(l).map(v => Seq((Option(v), None): Iv))
-      case GreaterThan(a, l) if isCol(a) => // conservative: >= v
-        litV(l).map(v => Seq((Option(v), None): Iv))
-      case LessThanOrEqual(a, l) if isCol(a) =>
-        litV(l).map(v => Seq((None, Option(v)): Iv))
-      case LessThan(a, l) if isCol(a) => // conservative: <= v
-        litV(l).map(v => Seq((None, Option(v)): Iv))
+        points(hset.toSeq.map(codec.fromCatalyst))
+      case EqualTo(a, l) if isCol(a) => points(Seq(litV(l)))
+      case EqualTo(l, a) if isCol(a) => points(Seq(litV(l)))
+      case GreaterThanOrEqual(a, l) if isCol(a) => litV(l).map(from)
+      case GreaterThan(a, l) if isCol(a) => litV(l).map(v => from(codec.after(v)))
+      case LessThanOrEqual(a, l) if isCol(a) => litV(l).map(upTo)
+      case LessThan(a, l) if isCol(a) => litV(l).map(v => upTo(codec.before(v)))
       // literal-on-the-left forms, flipped
-      case GreaterThanOrEqual(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((None, Option(v)): Iv))
-      case GreaterThan(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((None, Option(v)): Iv))
-      case LessThanOrEqual(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((Option(v), None): Iv))
-      case LessThan(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((Option(v), None): Iv))
-      case _ => None
-    }
-    val per = cs.flatMap(ivs(_))
-    if (per.isEmpty) None else Some(per.reduce(intersect))
-  }
-
-  /** Interval union over the clustered NUMERIC column (r16 verdict
-    * task 3) — comparisons, IN/InSet, OR/AND composition, the string
-    * extractor's shape with exact-decimal ends: integral literals
-    * convert losslessly, float/double literals through the shortest
-    * round-trip string (order-preserving — same codec as the manifest),
-    * DecimalType literals exactly. Strict bounds conservatively widen
-    * to inclusive. A NaN literal kills the conjunct's extraction
-    * (conservative — NaN ordering differs between Spark and IEEE, so
-    * zones must never reason about it). Mixed-type comparisons arrive
-    * cast-wrapped from the analyzer and fail the column match —
-    * conservative again. */
-  private def extractNumIvs(cs: Seq[Expression], lr: LogicalRelation,
-      numCol: String): Option[Seq[(Option[BigDecimal], Option[BigDecimal])]] = {
-    type Iv = (Option[BigDecimal], Option[BigDecimal])
-    def isNumType(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case IntegerType | LongType | ShortType | ByteType |
-           FloatType | DoubleType => true
-      case _: DecimalType => true
-      case _ => false
-    }
-    def isCol(e: Expression): Boolean = e match {
-      case a: Attribute =>
-        isNumType(a.dataType) && lr.output.exists(o =>
-          o.exprId == a.exprId && o.name == numCol)
-      case _ => false
-    }
-    def toDec(v: Any): Option[BigDecimal] = v match {
-      case i: java.lang.Integer => Some(BigDecimal(i.intValue))
-      case l: java.lang.Long => Some(BigDecimal(l.longValue))
-      case sh: java.lang.Short => Some(BigDecimal(sh.intValue))
-      case b: java.lang.Byte => Some(BigDecimal(b.intValue))
-      case d: java.lang.Double =>
-        if (d.isNaN) None else Some(BigDecimal(d.toString))
-      case f: java.lang.Float =>
-        if (f.isNaN) None else Some(BigDecimal(f.toString))
-      case dec: org.apache.spark.sql.types.Decimal => Some(dec.toBigDecimal)
-      case _ => None
-    }
-    def litV(e: Expression): Option[BigDecimal] = e match {
-      case Literal(v, dt) if v != null && isNumType(dt) => toDec(v)
-      case _ => None
-    }
-    def intersect(a: Seq[Iv], b: Seq[Iv]): Seq[Iv] =
-      for (x <- a; y <- b; r <- Storage.numIntervalIntersect(x, y)) yield r
-    def ivs(e: Expression): Option[Seq[Iv]] = e match {
-      case Or(l, r) => for (a <- ivs(l); b <- ivs(r)) yield a ++ b
-      case And(l, r) => for (a <- ivs(l); b <- ivs(r)) yield intersect(a, b)
-      case In(a, ls) if isCol(a) && ls.nonEmpty =>
-        val vs = ls.map(litV)
-        if (vs.forall(_.isDefined))
-          Some(vs.flatten.map(v => (Option(v), Option(v)))) else None
-      case InSet(a, hset) if isCol(a) && hset.nonEmpty =>
-        val vs = hset.toSeq.map(toDec)
-        if (vs.forall(_.isDefined))
-          Some(vs.flatten.map(v => (Option(v), Option(v)))) else None
-      case EqualTo(a, l) if isCol(a) =>
-        litV(l).map(v => Seq((Option(v), Option(v)): Iv))
-      case EqualTo(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((Option(v), Option(v)): Iv))
-      case GreaterThanOrEqual(a, l) if isCol(a) =>
-        litV(l).map(v => Seq((Option(v), None): Iv))
-      case GreaterThan(a, l) if isCol(a) => // conservative: >= v
-        litV(l).map(v => Seq((Option(v), None): Iv))
-      case LessThanOrEqual(a, l) if isCol(a) =>
-        litV(l).map(v => Seq((None, Option(v)): Iv))
-      case LessThan(a, l) if isCol(a) => // conservative: <= v
-        litV(l).map(v => Seq((None, Option(v)): Iv))
-      // literal-on-the-left forms, flipped
-      case GreaterThanOrEqual(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((None, Option(v)): Iv))
-      case GreaterThan(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((None, Option(v)): Iv))
-      case LessThanOrEqual(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((Option(v), None): Iv))
-      case LessThan(l, a) if isCol(a) =>
-        litV(l).map(v => Seq((Option(v), None): Iv))
+      case GreaterThanOrEqual(l, a) if isCol(a) => litV(l).map(upTo)
+      case GreaterThan(l, a) if isCol(a) => litV(l).map(v => upTo(codec.before(v)))
+      case LessThanOrEqual(l, a) if isCol(a) => litV(l).map(from)
+      case LessThan(l, a) if isCol(a) => litV(l).map(v => from(codec.after(v)))
       case _ => None
     }
     val per = cs.flatMap(ivs(_))

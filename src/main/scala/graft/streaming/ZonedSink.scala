@@ -3,12 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{SketchPlanner, Storage}
+import graft.operators.{SketchPlanner, Storage, ZoneCodec}
 
 /** STREAMING ingestion into a zone-mapped lake layout — the continuous
   * form of the storage arc's append discipline: each micro-batch lands
   * as one range-clustered parquet commit with its own `zones-<k>.json`
-  * manifest commit (`Storage.numZonemapAppend`, O(batch files) footer
+  * manifest commit (`Storage.zonemapAppend`, O(batch files) footer
   * reads), and, when asked, the persisted planner statistics ride
   * along via `SketchManifest.append` (CMS linearity — the merged
   * counters stay bit-identical to a from-scratch rebuild, so cold
@@ -56,17 +56,18 @@ object ZonedSink {
     * layout (and the sketch manifest, when `sketchCols` is nonempty);
     * every later commit appends zones + statistics incrementally.
     * Replayed batch ids (≤ the ledger's high water) are dropped. */
-  def appendBatch(batch: DataFrame, batchId: Long, numCol: String,
+  def appendBatch(batch: DataFrame, batchId: Long, zoneCol: String,
       nFiles: Int, path: String, sketchCols: Seq[String] = Seq.empty): Unit = {
     val s = batch.sparkSession
     if (batchId <= lastApplied(s, path)) return // replay after recovery
     if (!batch.isEmpty) {
-      if (Storage.readNumManifest(s, path).isEmpty) {
-        Storage.numZonemapClusteredWrite(batch, numCol, nFiles, path)
+      val codec = ZoneCodec.of(batch.schema(zoneCol).dataType, zoneCol)
+      if (Storage.readManifest(s, path, codec).isEmpty) {
+        Storage.zonemapClusteredWrite(batch, zoneCol, nFiles, path)
         if (sketchCols.nonEmpty)
           SketchPlanner.SketchManifest.write(s, path, sketchCols)
       } else {
-        Storage.numZonemapAppend(batch, numCol, nFiles, path)
+        Storage.zonemapAppend(batch, zoneCol, nFiles, path)
         if (sketchCols.nonEmpty)
           SketchPlanner.SketchManifest.append(s, path, batch, sketchCols)
       }
@@ -76,12 +77,12 @@ object ZonedSink {
 
   /** Wire a stream into the layout. One parquet + one manifest commit
     * per micro-batch; `sketchCols` keeps planner stats fresh in-stream. */
-  def start(stream: DataFrame, numCol: String, nFiles: Int, path: String,
+  def start(stream: DataFrame, zoneCol: String, nFiles: Int, path: String,
       checkpoint: String, sketchCols: Seq[String] = Seq.empty): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (b: Dataset[Row], id: Long) =>
-        appendBatch(b.toDF(), id, numCol, nFiles, path, sketchCols)
+        appendBatch(b.toDF(), id, zoneCol, nFiles, path, sketchCols)
       }
       .start()
 }

@@ -67,8 +67,8 @@ class CurationPropertiesSpec extends SparkSpec {
         li.filter(col("ship_date") < boundary), "ship_date", nBase, dir)
       Storage.zonemapAppend(
         li.filter(col("ship_date") >= boundary), "ship_date", nApp, dir)
-      assert(Storage.readManifest(spark, dir) ===
-        Some(Storage.zonemapManifest(spark, dir, "ship_date")), s"case $k")
+      assert(Storage.readManifest(spark, dir, ZoneCodec.Date) ===
+        Some(Storage.zonemapManifest(spark, dir, "ship_date", ZoneCodec.Date)), s"case $k")
       val (probe, total, skipped) =
         Storage.prunedRead(spark, dir, "ship_date", lo, hi)
       // RangePartitioner may collapse to fewer partitions than asked —

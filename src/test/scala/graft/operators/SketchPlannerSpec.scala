@@ -649,9 +649,9 @@ class SketchPlannerSpec extends SparkSpec with TempDirs {
     // fragmented history with a sketched join key riding along
     val rows = spark.range(8000).select(col("id"),
       pmod(col("id"), lit(250)).as("k"), (col("id") % 1000).cast("double").as("price"))
-    Storage.numZonemapClusteredWrite(rows.filter(col("id") % 2 === 0),
+    Storage.zonemapClusteredWrite(rows.filter(col("id") % 2 === 0),
       "price", 4, dir)
-    Storage.numZonemapAppend(rows.filter(col("id") % 2 === 1), "price", 4, dir)
+    Storage.zonemapAppend(rows.filter(col("id") % 2 === 1), "price", 4, dir)
     SketchPlanner.SketchManifest.write(spark, dir, Seq("k"))
     val preCount = SketchPlanner.SketchManifest.readCount(spark, dir)
     val preCms = SketchPlanner.SketchManifest.readCms(spark, dir, "k").get

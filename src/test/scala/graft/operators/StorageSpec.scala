@@ -1,17 +1,15 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Storage-layout scale levers: bucketing (shuffle-free co-located
   * joins), partition pruning, and window top-k pushdown — asserted
   * against physical plans, not assumed. */
-class StorageSpec extends SparkSpec {
+class StorageSpec extends SparkSpec with TempDirs {
 
   test("bucketed tables join without a shuffle (co-located join)") {
-    val wh = Files.createTempDirectory("graft-wh")
+    val wh = tempDir("graft-wh")
     val d = sf("sf0.001")
     try {
       Tables.orders(spark, d)
@@ -72,7 +70,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("partition-by write enables partition pruning in the scan") {
-    val dir = Files.createTempDirectory("graft-part").resolve("events")
+    val dir = tempDir("graft-part").resolve("events")
     Tables.events(spark, sf("sf0.001"))
       .write.partitionBy("event_type").mode("overwrite").parquet(dir.toString)
     val q = spark.read.parquet(dir.toString)
@@ -131,14 +129,14 @@ class StorageSpec extends SparkSpec {
     // into a partition filter on the fact scan (subquery reuse), so the
     // fact table reads ONLY the partitions the filtered dim reaches
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dpp").resolve("orders")
+    val dir = tempDir("graft-dpp").resolve("orders")
     Tables.orders(spark, sf("sf0.001"))
       .write.partitionBy("o_orderpriority").mode("overwrite")
       .parquet(dir.toString)
     // the dim must be a SOURCE relation: a local Seq constant-folds its
     // filter into the LocalRelation, and DPP requires a Filter node on
     // the dim side to call the predicate selective
-    val dimDir = Files.createTempDirectory("graft-dpp-dim").toString
+    val dimDir = tempDir("graft-dpp-dim").toString
     Seq(("1-URGENT", "hot"), ("5-LOW", "cold")).toDF("prio", "tier")
       .write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)
@@ -207,9 +205,9 @@ class StorageSpec extends SparkSpec {
   test("z-order layout clusters BOTH dimensions; a linear sort only one") {
     val li = Tables.lineitem(spark, sf("sf0.01"))
       .select(col("l_partkey"), col("l_suppkey"))
-    val zdir = Files.createTempDirectory("graft-zorder").toString
+    val zdir = tempDir("graft-zorder").toString
     Storage.zorderWrite(li, "l_partkey", "l_suppkey", 1024, 16, zdir)
-    val ldir = Files.createTempDirectory("graft-linear").toString
+    val ldir = tempDir("graft-linear").toString
     li.repartitionByRange(16, col("l_partkey"))
       .sortWithinPartitions(col("l_partkey"))
       .write.mode("overwrite").parquet(ldir)
@@ -256,7 +254,7 @@ class StorageSpec extends SparkSpec {
 
   test("fd audit: planted violation counted, clean dependency scores zero") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("fdspec").toString
+    val dir = tempDir("fdspec").toString
     // events: user 1 has two types (violates), user 2 one type
     Seq((1L, 0L, 1L, "a", 0.0, ""), (2L, 1L, 1L, "b", 0.0, ""),
       (3L, 2L, 2L, "a", 0.0, ""))
@@ -284,7 +282,7 @@ class StorageSpec extends SparkSpec {
 
   test("table digest: mergeable by XOR, order-free, single-row sensitive") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("digestspec").toString
+    val dir = tempDir("digestspec").toString
     def writeCustomers(rows: Seq[(Long, String, Int, String)], sub: String) = {
       val d2 = s"$dir/$sub"
       rows.toDF("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
@@ -372,17 +370,17 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.{DataFrame, Row}
-    val dir = Files.createTempDirectory("graft-zmprune").toString
+    val dir = tempDir("graft-zmprune").toString
     Storage.zonemapClusteredWrite(
       Tables.lineitem(spark, sf("sf0.01"))
         .select(to_date(col("l_shipdate")).as("ship_date"), col("l_quantity")),
       "ship_date", 64, dir)
-    val man = Storage.zonemapManifest(spark, dir, "ship_date")
+    val man = Storage.zonemapManifest(spark, dir, "ship_date", ZoneCodec.Date)
     assert(man.size === 64)
-    man.foreach(z => assert(z.lo <= z.hi))
+    man.foreach(z => assert(z.lo.get <= z.hi.get))
     // the write persisted the manifest; the planning path reads IT, not
     // 64 footers, and it must equal the footer-derived truth exactly
-    assert(Storage.readManifest(spark, dir) === Some(man))
+    assert(Storage.readManifest(spark, dir, ZoneCodec.Date) === Some(man))
     val (pruned, total, skipped) =
       Storage.prunedRead(spark, dir, "ship_date", "1997-01-01", "1997-03-31")
     assert(total === 64)
@@ -427,15 +425,15 @@ class StorageSpec extends SparkSpec {
 
   test("string zonemap: equality probe skips non-matching files, survives quotes/newlines in values, equals the full scan") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-szmprune").toString
+    val dir = tempDir("graft-szmprune").toString
     // 20 sources incl. values that would corrupt a naive JSON manifest
     val nasty = Seq("src\"q\"", "src\nnl", "src\\bs")
     val sources = (0 until 17).map(i => f"src$i%02d") ++ nasty
     val docs = (0 until 400).map { i =>
       (i.toLong, sources(i % sources.length), i % 7)
     }.toDF("doc_id", "source", "v")
-    Storage.strZonemapClusteredWrite(docs, "source", 16, dir)
-    val man = Storage.readStrManifest(spark, dir)
+    Storage.zonemapClusteredWrite(docs, "source", 16, dir)
+    val man = Storage.readManifest(spark, dir, ZoneCodec.Str)
     assert(man.isDefined && man.get.size === 16)
     man.get.foreach(z => assert(z.lo.get <= z.hi.get))
     // base64 round-trip: the persisted manifest equals footer truth
@@ -459,7 +457,7 @@ class StorageSpec extends SparkSpec {
 
   test("compound zonemap: the two-axis intersection skips at least as much as either axis, equals the full scan") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compound").toString
+    val dir = tempDir("graft-compound").toString
     val rows = for {
       t <- Seq("alpha", "beta", "gamma", "delta")
       d <- 1 to 20
@@ -494,7 +492,7 @@ class StorageSpec extends SparkSpec {
     // F0 9F 98 80) — the order parquet footer stats, UTF8String and
     // repartitionByRange all use. A Java-String-ordered intersection
     // reads the zone holding both as EMPTY and silently skips the file.
-    val dir1 = Files.createTempDirectory("graft-szm-utf8a").toString
+    val dir1 = tempDir("graft-szm-utf8a").toString
     val pair = Seq("￿", "😀")
     (0 until 80).map(i => (i.toLong, pair(i % 2), 1))
       .toDF("doc_id", "source", "v")
@@ -507,12 +505,12 @@ class StorageSpec extends SparkSpec {
     }
     // and across a clustered multi-file layout, every probe (BMP,
     // private-use, U+FFFF, supplementary) equals the full scan
-    val dir2 = Files.createTempDirectory("graft-szm-utf8b").toString
+    val dir2 = tempDir("graft-szm-utf8b").toString
     val sources = Seq("alpha", "beta", "zz", "￿", "😀")
     val docs = (0 until 200)
       .map(i => (i.toLong, sources(i % sources.length), i % 5))
       .toDF("doc_id", "source", "v")
-    Storage.strZonemapClusteredWrite(docs, "source", 2, dir2)
+    Storage.zonemapClusteredWrite(docs, "source", 2, dir2)
     sources.foreach { v =>
       val (pruned, _, _) = Storage.strPrunedRead(spark, dir2, "source", v)
       val got = pruned.agg(count(lit(1)), sum(col("v"))).collect()(0)
@@ -525,7 +523,7 @@ class StorageSpec extends SparkSpec {
 
   test("compound zonemap: a file absent from one manifest is unskippable, never dropped") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compound-drift").toString
+    val dir = tempDir("graft-compound-drift").toString
     val rows = for {
       t <- Seq("alpha", "beta", "gamma", "delta")
       d <- 1 to 20
@@ -560,7 +558,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("scaled pruned read: distributed zone filter over a 4000-entry manifest, driver holds only survivors") {
-    val dir = Files.createTempDirectory("graft-zmscaled").toString
+    val dir = tempDir("graft-zmscaled").toString
     Storage.zonemapClusteredWrite(
       Tables.lineitem(spark, sf("sf0.001"))
         .select(to_date(col("l_shipdate")).as("ship_date"), col("l_quantity")),
@@ -598,7 +596,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("zonemap append commit: incremental manifest equals a from-scratch rebuild") {
-    val dir = Files.createTempDirectory("graft-zmappend").toString
+    val dir = tempDir("graft-zmappend").toString
     val li = Tables.lineitem(spark, sf("sf0.001"))
       .select(to_date(col("l_shipdate")).as("ship_date"), col("l_quantity"))
     Storage.zonemapClusteredWrite(
@@ -609,8 +607,8 @@ class StorageSpec extends SparkSpec {
       "ship_date", 8, dir)
     // the incremental merge (prior zones + only-new footers) must be
     // byte-identical to rebuilding the whole manifest from footers
-    val incremental = Storage.readManifest(spark, dir)
-    assert(incremental === Some(Storage.zonemapManifest(spark, dir, "ship_date")))
+    val incremental = Storage.readManifest(spark, dir, ZoneCodec.Date)
+    assert(incremental === Some(Storage.zonemapManifest(spark, dir, "ship_date", ZoneCodec.Date)))
     assert(incremental.get.size === 16)
     // a probe spanning the commit boundary reads from both batches and
     // equals the unpruned answer
@@ -636,18 +634,18 @@ class StorageSpec extends SparkSpec {
   test("numeric and string zonemap append commits: incremental manifests equal from-scratch rebuilds (r17 axis parity)") {
     import spark.implicits._
     // numeric axis: exact quarter grid split at 500
-    val ndir = Files.createTempDirectory("graft-nzmappend").toString
+    val ndir = tempDir("graft-nzmappend").toString
     val rows = (0 until 4000).map(i => (i.toLong, i * 0.25))
       .toDF("id", "price")
-    Storage.numZonemapClusteredWrite(
+    Storage.zonemapClusteredWrite(
       rows.filter(col("price") < 500.0), "price", 8, ndir)
-    Storage.numZonemapAppend(
+    Storage.zonemapAppend(
       rows.filter(col("price") >= 500.0), "price", 8, ndir)
-    val nInc = Storage.readNumManifest(spark, ndir)
+    val nInc = Storage.readManifest(spark, ndir, ZoneCodec.Num)
     assert(nInc.isDefined && nInc.get.size === 16)
     // the incremental merge (prior commit + only-new footers) must equal
     // rebuilding the whole manifest from footers
-    assert(nInc === Some(Storage.numZonemapManifest(spark, ndir, "price")))
+    assert(nInc === Some(Storage.zonemapManifest(spark, ndir, "price", ZoneCodec.Num)))
     val probed = spark.read.parquet(ndir).filter(col("price").between(300.0, 700.0))
     assert(probed.count() === rows.filter(col("price").between(300.0, 700.0)).count())
     // every file the merged manifest lists exists and zones cover the data:
@@ -666,16 +664,16 @@ class StorageSpec extends SparkSpec {
         s"zone [$zlo,$zhi] does not cover file extent [$lo,$hi]")
     }
     // string axis: append a second alphabet half
-    val sdir = Files.createTempDirectory("graft-szmappend").toString
+    val sdir = tempDir("graft-szmappend").toString
     val docs = (0 until 400).map(i => (i.toLong, f"src${i % 20}%02d"))
       .toDF("doc_id", "source")
-    Storage.strZonemapClusteredWrite(
+    Storage.zonemapClusteredWrite(
       docs.filter(col("source") < "src10"), "source", 4, sdir)
-    Storage.strZonemapAppend(
+    Storage.zonemapAppend(
       docs.filter(col("source") >= "src10"), "source", 4, sdir)
-    val sInc = Storage.readStrManifest(spark, sdir)
+    val sInc = Storage.readManifest(spark, sdir, ZoneCodec.Str)
     assert(sInc.isDefined && sInc.get.size === 8)
-    assert(sInc === Some(Storage.strZonemapManifest(spark, sdir, "source")))
+    assert(sInc === Some(Storage.zonemapManifest(spark, sdir, "source", ZoneCodec.Str)))
     // probe spanning the commit boundary through the AUTOMATIC rule path:
     // survivors from the merged manifest must answer exactly
     val (probe, total, skipped) = Storage.strPrunedRead(spark, sdir, "source", "src10")
@@ -685,7 +683,7 @@ class StorageSpec extends SparkSpec {
 
   test("colzones append: per-column incremental commits equal a from-scratch rebuild") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-czappend").toString + "/t"
+    val dir = tempDir("graft-czappend").toString + "/t"
     val rows = (0 until 4000).map { i =>
       (i.toLong, i * 0.25, java.sql.Date.valueOf("2024-01-01").toLocalDate
         .plusDays(i / 40).toString, f"src${i % 20}")
@@ -711,10 +709,10 @@ class StorageSpec extends SparkSpec {
         s"column $c should carry 2 null-stat commits")
     }
     val incremental = Storage.readColumnZones(spark, dir)
-    assert(incremental.numCols.map(_._1) === Seq("price"))
-    assert(incremental.dateCols.map(_._1) === Seq("day"))
-    assert(incremental.strCols.map(_._1) === Seq("source"))
-    assert(incremental.numCols.head._2.size === 16)
+    assert(incremental.of(ZoneCodec.Num).map(_._1) === Seq("price"))
+    assert(incremental.of(ZoneCodec.Date).map(_._1) === Seq("day"))
+    assert(incremental.of(ZoneCodec.Str).map(_._1) === Seq("source"))
+    assert(incremental.of(ZoneCodec.Num).head._2.size === 16)
     // referee: drop the store, rebuild from scratch over ALL files —
     // the merged incremental read must equal the rebuild exactly
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_colzones"), true)
@@ -724,17 +722,17 @@ class StorageSpec extends SparkSpec {
 
   test("optimizeCompact: rows invariant, files drop, manifests re-derived, zones disjoint again") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = tempDir("graft-compact").toString + "/t"
     val rows = (0 until 6000).map(i => (i.toLong, (i % 1000) * 1.0))
       .toDF("id", "price")
     // fragmented history: each commit re-clusters ITS slice on price,
     // so the layout accumulates four parallel copies of the same price
     // grid — a window probe must open its surviving range in EVERY
     // commit (4x the file opens of a single-write layout)
-    Storage.numZonemapClusteredWrite(
+    Storage.zonemapClusteredWrite(
       rows.filter(col("id") % 4 === 0), "price", 6, dir)
     (1 to 3).foreach { r =>
-      Storage.numZonemapAppend(
+      Storage.zonemapAppend(
         rows.filter(col("id") % 4 === r), "price", 6, dir)
     }
     Storage.attachColumnZones(spark, dir, Seq("id"))
@@ -742,10 +740,10 @@ class StorageSpec extends SparkSpec {
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_sketch")) // stale stats stub
     assert(Storage.listDataFiles(fs, new org.apache.hadoop.fs.Path(dir)).size === 24)
-    val preMan = Storage.readNumManifest(spark, dir).get
+    val preMan = Storage.readManifest(spark, dir, ZoneCodec.Num).get
     val window = Seq((Some(BigDecimal(300)), Some(BigDecimal(700))))
     val preSurv = Storage.survivorsFromColumnSets(
-      Seq.empty, Seq.empty, Seq((preMan, window))).get
+      Seq(ZoneSet(ZoneCodec.Num, preMan, window))).get
     assert(preSurv._1.size === 16,
       "pre-compaction the probe pays its surviving range in all 4 commits")
     val before = spark.read.parquet(dir).orderBy("id").collect()
@@ -756,11 +754,11 @@ class StorageSpec extends SparkSpec {
     assert(spark.read.parquet(dir).orderBy("id").collect() === before)
     // the legacy numeric axis was re-derived over the new files and its
     // zones are DISJOINT again: the probe prunes where it could not
-    val postMan = Storage.readNumManifest(spark, dir).get
+    val postMan = Storage.readManifest(spark, dir, ZoneCodec.Num).get
     assert(postMan.size === 6)
-    assert(postMan === Storage.numZonemapManifest(spark, dir, "price"))
+    assert(postMan === Storage.zonemapManifest(spark, dir, "price", ZoneCodec.Num))
     val postSurv = Storage.survivorsFromColumnSets(
-      Seq.empty, Seq.empty, Seq((postMan, window))).get
+      Seq(ZoneSet(ZoneCodec.Num, postMan, window))).get
     assert(postSurv._1.size < 6, "post-compaction the probe skips files")
     assert(postSurv._1.size * 4 === preSurv._1.size,
       "compaction merges the 4x commit duplication out of the probe's reads")
@@ -772,7 +770,104 @@ class StorageSpec extends SparkSpec {
     }
     // the colzones store kept its column set; stale sketch stats dropped
     val cz = Storage.readColumnZones(spark, dir)
-    assert(cz.numCols.map(_._1) === Seq("id") && cz.numCols.head._2.size === 6)
+    assert(cz.of(ZoneCodec.Num).map(_._1) === Seq("id") && cz.of(ZoneCodec.Num).head._2.size === 6)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_sketch")))
+  }
+
+  test("zone manifests: every commit file keeps its bytes (date, string, numeric, _colzones, appends)") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    def dataFiles(dir: String): Set[String] =
+      if (!Files.isDirectory(Paths.get(dir))) Set.empty
+      else {
+        val ls = Files.list(Paths.get(dir))
+        try ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSet
+        finally ls.close()
+      }
+    // the name of the one data file `write` adds to `dir`
+    def added(dir: String)(write: => Unit): String = {
+      val before = dataFiles(dir)
+      write
+      val fresh = dataFiles(dir) -- before
+      assert(fresh.size === 1, s"one new file expected in $dir, got $fresh")
+      fresh.head
+    }
+    def text(dir: String, rel: String*): String =
+      Files.readString(Paths.get(dir, rel: _*))
+    // a commit file: one line per data file, sorted by file name
+    def commit(ls: (String, String)*): String =
+      ls.sortBy(_._1).map(_._2).mkString("", "\n", "\n")
+
+    // date axis: epoch days, and an all-null file as the unbounded zone
+    val ddir = tempDir("graft-bytes-date").toString + "/t"
+    def days(ds: java.sql.Date*) = ds.map(d => (d, 1L)).toDF("day", "v")
+    def day(s: String) = java.sql.Date.valueOf(s)
+    val d0 = added(ddir)(Storage.zonemapClusteredWrite(
+      days(day("2024-01-09"), day("2024-01-03"), day("2024-01-05")), "day", 1, ddir))
+    val d1 = added(ddir)(Storage.zonemapAppend(
+      days(day("2024-02-05"), day("2024-02-01")), "day", 1, ddir))
+    val d2 = added(ddir)(Storage.zonemapAppend(days(null), "day", 1, ddir))
+    assert(text(ddir, "_zonemap", "zones-00000.json") ===
+      commit(d0 -> s"""{"file":"$d0","lo":19725,"hi":19731}"""))
+    assert(text(ddir, "_zonemap", "zones-00001.json") ===
+      commit(d1 -> s"""{"file":"$d1","lo":19754,"hi":19758}"""))
+    assert(text(ddir, "_zonemap", "zones-00002.json") ===
+      commit(d2 -> s"""{"file":"$d2","lo":-2147483648,"hi":2147483647}"""))
+    assert(text(ddir, "_zonemap", "_column") === "day")
+
+    // string axis: base64 UTF-8 bounds (quote, newline, U+1F600) under
+    // the unsigned byte order, and an all-null file
+    val sdir = tempDir("graft-bytes-str").toString + "/t"
+    def srcs(vs: String*) = vs.map(v => (v, 1L)).toDF("source", "v")
+    val s0 = added(sdir)(Storage.zonemapClusteredWrite(
+      srcs("b\nnl", "a\"q"), "source", 1, sdir))
+    val s1 = added(sdir)(Storage.zonemapAppend(
+      srcs("😀", "zz"), "source", 1, sdir))
+    val s2 = added(sdir)(Storage.zonemapAppend(srcs(null), "source", 1, sdir))
+    assert(text(sdir, "_szonemap", "zones-00000.json") ===
+      commit(s0 -> s"""{"file":"$s0","lo64":"YSJx","hi64":"YgpubA=="}"""))
+    assert(text(sdir, "_szonemap", "zones-00001.json") ===
+      commit(s1 -> s"""{"file":"$s1","lo64":"eno=","hi64":"8J+YgA=="}"""))
+    assert(text(sdir, "_szonemap", "zones-00002.json") ===
+      commit(s2 -> s"""{"file":"$s2","unbounded":true}"""))
+    assert(text(sdir, "_szonemap", "_column") === "source")
+
+    // numeric axis: plain-decimal strings, a NaN-bearing double file unbounded
+    val ndir = tempDir("graft-bytes-num").toString + "/t"
+    def prices(ps: Double*) = ps.map(p => (p, 1L)).toDF("price", "v")
+    val n0 = added(ndir)(Storage.zonemapClusteredWrite(
+      prices(1.0e7, -0.5, 2.25), "price", 1, ndir))
+    val n1 = added(ndir)(Storage.zonemapAppend(
+      prices(3.0, Double.NaN), "price", 1, ndir))
+    assert(text(ndir, "_nzonemap", "zones-00000.json") ===
+      commit(n0 -> s"""{"file":"$n0","lo":"-0.5","hi":"10000000"}"""))
+    assert(text(ndir, "_nzonemap", "zones-00001.json") ===
+      commit(n1 -> s"""{"file":"$n1","unbounded":true}"""))
+    assert(text(ndir, "_nzonemap", "_column") === "price")
+
+    // _colzones/: an int-backed DECIMAL keeps its scale; `_type`, the
+    // null counts, and a two-file commit sorted by file name
+    val cdir = tempDir("graft-bytes-cz").toString + "/t"
+    def amts(as: String*) =
+      as.toDF("a").select(col("a").cast("decimal(9,2)").as("amt"))
+    val c0 = added(cdir)(amts("567.80", null, "12.34")
+      .coalesce(1).write.mode("append").parquet(cdir))
+    val c1 = added(cdir)(amts("-3.10")
+      .coalesce(1).write.mode("append").parquet(cdir))
+    Storage.attachColumnZones(spark, cdir, Seq("amt"))
+    val c2 = added(cdir)(Storage.colzonesAppend(amts("0.05", null), "amt", 1, cdir))
+    assert(text(cdir, "_colzones", "amt", "_type") === "num")
+    assert(text(cdir, "_colzones", "amt", "zones-00000.json") === commit(
+      c0 -> s"""{"file":"$c0","lo":"12.34","hi":"567.80"}""",
+      c1 -> s"""{"file":"$c1","lo":"-3.10","hi":"-3.10"}"""))
+    assert(text(cdir, "_colzones", "amt", "nulls-00000.json") === commit(
+      c0 -> s"""{"file":"$c0","nulls":1,"rows":3}""",
+      c1 -> s"""{"file":"$c1","nulls":0,"rows":1}"""))
+    assert(text(cdir, "_colzones", "amt", "zones-00001.json") ===
+      commit(c2 -> s"""{"file":"$c2","lo":"0.05","hi":"0.05"}"""))
+    assert(text(cdir, "_colzones", "amt", "nulls-00001.json") ===
+      commit(c2 -> s"""{"file":"$c2","nulls":1,"rows":2}"""))
   }
 }

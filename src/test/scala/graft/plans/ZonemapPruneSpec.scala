@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, TempDirs}
-import graft.operators.{Storage, Tables}
+import graft.operators.{FileZone, Storage, Tables, ZoneCodec}
 
 /** The automatic zone-map pruning rule: a plain
   * `spark.read.parquet(dir).filter(...)` over a manifest-bearing layout
@@ -89,7 +89,7 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
     val docs = (0 until 400).map { i =>
       (i.toLong, f"src${i % 20}%02d", (i % 7).toLong)
     }.toDF("doc_id", "source", "l_quantity")
-    Storage.strZonemapClusteredWrite(docs, "source", 8, dir)
+    Storage.zonemapClusteredWrite(docs, "source", 8, dir)
     def plain(v: String) =
       spark.read.parquet(dir).filter(col("source") === v)
     def probe(v: String) = pruned(plain(v))
@@ -162,10 +162,10 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
       .filter(col("ship_date").isin(days.map(Date.valueOf): _*))
     val off = agg(probe)
     // manifest referee: a file survives iff any probed day falls in its zone
-    val man = Storage.readManifest(spark, dateDir).get
+    val man = Storage.readManifest(spark, dateDir, ZoneCodec.Date).get
     def epoch(d: String) = Date.valueOf(d).toLocalDate.toEpochDay.toInt
     val expected = man.count(z =>
-      days.exists(d => z.lo <= epoch(d) && epoch(d) <= z.hi))
+      days.exists(d => z.lo.get <= epoch(d) && epoch(d) <= z.hi.get))
     assert(expected < 16, "fixture must actually skip something")
     assert(scanFiles(pruned(probe)) === expected.toLong,
       "IN-list survivors must equal the manifest union referee")
@@ -179,10 +179,10 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
     def probe = spark.read.parquet(dateDir)
       .filter(col("ship_date").isin(days.map(Date.valueOf): _*))
     val off = agg(probe)
-    val man = Storage.readManifest(spark, dateDir).get
+    val man = Storage.readManifest(spark, dateDir, ZoneCodec.Date).get
     def epoch(d: String) = Date.valueOf(d).toLocalDate.toEpochDay.toInt
     val expected = man.count(z =>
-      days.exists(d => z.lo <= epoch(d) && epoch(d) <= z.hi))
+      days.exists(d => z.lo.get <= epoch(d) && epoch(d) <= z.hi.get))
     assert(expected < 16)
     assert(scanFiles(pruned(probe)) === expected.toLong)
     assert(agg(pruned(probe)) === off)
@@ -194,10 +194,10 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
     val docs = (0 until 400).map { i =>
       (i.toLong, f"src${i % 20}%02d", (i % 7).toLong)
     }.toDF("doc_id", "source", "l_quantity")
-    Storage.strZonemapClusteredWrite(docs, "source", 8, dir)
-    val man = Storage.readStrManifest(spark, dir).get
+    Storage.zonemapClusteredWrite(docs, "source", 8, dir)
+    val man = Storage.readManifest(spark, dir, ZoneCodec.Str).get
     // srcNN values are ASCII, so plain string order == utf8 order here
-    def overlaps(z: Storage.StrFileZone, lo: String, hi: String) =
+    def overlaps(z: FileZone[String], lo: String, hi: String) =
       !(z.hi.exists(_ < lo) || z.lo.exists(_ > hi))
     def probeRange = spark.read.parquet(dir)
       .filter(col("source") >= "src03" && col("source") <= "src05")
@@ -313,11 +313,11 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
     // value, probe literal and footer stat is the same exact double);
     // l_quantity rides along for agg()
     val rows = (0 until 4000).map(i => (i.toLong, i * 0.25, (i % 7).toLong))
-    Storage.numZonemapClusteredWrite(
+    Storage.zonemapClusteredWrite(
       rows.toDF("id", "price", "l_quantity"), "price", 16, dir)
-    val man = Storage.readNumManifest(spark, dir).get
+    val man = Storage.readManifest(spark, dir, ZoneCodec.Num).get
     assert(man.size === 16 && man.forall(z => z.lo.isDefined && z.hi.isDefined))
-    def overlaps(z: Storage.NumFileZone, lo: BigDecimal, hi: BigDecimal) =
+    def overlaps(z: FileZone[BigDecimal], lo: BigDecimal, hi: BigDecimal) =
       !(z.hi.exists(_ < lo) || z.lo.exists(_ > hi))
     def probeRange = spark.read.parquet(dir)
       .filter(col("price") >= 500.0 && col("price") <= 700.0)
@@ -350,10 +350,10 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
     import spark.implicits._
     // integral axis: BIGINT zones convert losslessly
     val ldir = tempDir("graft-autoprune-long").toString
-    Storage.numZonemapClusteredWrite(
+    Storage.zonemapClusteredWrite(
       (0 until 2000).map(i => (i.toLong * 3, (i % 7).toLong))
         .toDF("amount", "l_quantity"), "amount", 8, ldir)
-    val lman = Storage.readNumManifest(spark, ldir).get
+    val lman = Storage.readManifest(spark, ldir, ZoneCodec.Num).get
     def probeL = spark.read.parquet(ldir)
       .filter(col("amount").between(900L, 1500L))
     val offL = agg(probeL)
@@ -369,9 +369,9 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
     val ndir = tempDir("graft-autoprune-nan").toString
     val vals = (1 to 100).map(i => (i.toLong, i.toDouble, 1L)) :+
       (101L, Double.NaN, 1L)
-    Storage.numZonemapClusteredWrite(
+    Storage.zonemapClusteredWrite(
       vals.toDF("id", "price", "l_quantity"), "price", 4, ndir)
-    val nman = Storage.readNumManifest(spark, ndir).get
+    val nman = Storage.readManifest(spark, ndir, ZoneCodec.Num).get
     assert(nman.exists(z => z.lo.isEmpty && z.hi.isEmpty),
       s"the NaN file must carry an unbounded zone, got $nman")
     def probeN = spark.read.parquet(ndir).filter(col("price") >= 1000.0)
@@ -393,13 +393,13 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
     Storage.partitionedZonemapClusteredWrite(
       rows.toDF("tenant", "day", "l_quantity"), "tenant", "day", 24, dir)
     val total = spark.read.parquet(dir).inputFiles.length
-    val man = Storage.readManifest(spark, dir).get
+    val man = Storage.readManifest(spark, dir, ZoneCodec.Date).get
     assert(man.size === total, "one root manifest must cover every partition's files")
     assert(man.exists(_.path.contains("tenant=")),
       "manifest must persist partition-relative paths")
     def epoch(d: String) = java.sql.Date.valueOf(d).toLocalDate.toEpochDay.toInt
     val (lo, hi) = (epoch("2024-01-05"), epoch("2024-01-08"))
-    val zoneSurvivors = man.filter(z => !(z.hi < lo || z.lo > hi))
+    val zoneSurvivors = man.filter(z => !(z.hi.get < lo || z.lo.get > hi))
     assert(zoneSurvivors.size < total, "fixture: zones must skip something")
     val expectedOpened = zoneSurvivors.count(_.path.contains("tenant=beta"))
     assert(expectedOpened > 0 && expectedOpened < zoneSurvivors.size,
@@ -429,7 +429,7 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
   test("randomized numeric predicate soak: 30 seeded probes — flag-on results always equal the plain scan") {
     import spark.implicits._
     val dir = tempDir("graft-autoprune-numsoak").toString
-    Storage.numZonemapClusteredWrite(
+    Storage.zonemapClusteredWrite(
       (0 until 3000).map(i => (i.toLong, i * 1.7 - 500.0, (i % 7).toLong))
         .toDF("id", "price", "l_quantity"), "price", 12, dir)
     val rnd = new scala.util.Random(1709)
@@ -471,15 +471,15 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
         (day - 1).toLong, math.round(value * 100), (i % 7).toLong)
     }.toDF("ev_date", "value", "dayi", "centi", "l_quantity")
     Storage.zorderWrite(rows, "dayi", "centi", 1024, 32, dir)
-    Storage.attachDateZonemap(spark, dir, "ev_date")
-    Storage.attachNumZonemap(spark, dir, "value")
-    val dman = Storage.readManifest(spark, dir).get
-    val nman = Storage.readNumManifest(spark, dir).get
+    Storage.attachZonemap(spark, dir, "ev_date")
+    Storage.attachZonemap(spark, dir, "value")
+    val dman = Storage.readManifest(spark, dir, ZoneCodec.Date).get
+    val nman = Storage.readManifest(spark, dir, ZoneCodec.Num).get
     assert(dman.size === 32 && nman.size === 32)
     def epoch(d: String) = java.sql.Date.valueOf(d).toLocalDate.toEpochDay.toInt
     val (dlo, dhi) = (epoch("2024-01-10"), epoch("2024-01-16"))
     val (vlo, vhi) = (BigDecimal(100), BigDecimal(200))
-    val dateSurv = dman.filter(z => !(z.hi < dlo || z.lo > dhi)).map(_.path).toSet
+    val dateSurv = dman.filter(z => !(z.hi.get < dlo || z.lo.get > dhi)).map(_.path).toSet
     val numSurv = nman.filter(z =>
       !(z.hi.exists(_ < vlo) || z.lo.exists(_ > vhi))).map(_.path).toSet
     val both = dateSurv & numSurv
@@ -508,12 +508,12 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
     Storage.zorderWrite(rows, "pk", "sk", 1024, 32, dir)
     Storage.attachColumnZones(spark, dir, Seq("pk", "sk", "source"))
     val cz = Storage.readColumnZones(spark, dir)
-    assert(cz.numCols.map(_._1).sorted === Seq("pk", "sk"))
-    assert(cz.strCols.map(_._1) === Seq("source"))
-    assert(cz.numCols.forall(_._2.size === 32))
-    val pkMan = cz.numCols.toMap.apply("pk")
-    val skMan = cz.numCols.toMap.apply("sk")
-    def surv(man: Seq[Storage.NumFileZone], lo: Int, hi: Int): Set[String] =
+    assert(cz.of(ZoneCodec.Num).map(_._1).sorted === Seq("pk", "sk"))
+    assert(cz.of(ZoneCodec.Str).map(_._1) === Seq("source"))
+    assert(cz.of(ZoneCodec.Num).forall(_._2.size === 32))
+    val pkMan = cz.of(ZoneCodec.Num).toMap.apply("pk")
+    val skMan = cz.of(ZoneCodec.Num).toMap.apply("sk")
+    def surv(man: Seq[FileZone[BigDecimal]], lo: Int, hi: Int): Set[String] =
       man.filter(z => !(z.hi.exists(_ < BigDecimal(lo)) ||
         z.lo.exists(_ > BigDecimal(hi)))).map(_.path).toSet
     val expected = surv(pkMan, 50, 90) & surv(skMan, 30, 70)
@@ -575,8 +575,8 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
     Storage.attachColumnZones(spark, dir, Seq("price"))
     val total = spark.read.parquet(dir).inputFiles.length
     val cz = Storage.readColumnZones(spark, dir)
-    assert(cz.numCols.map(_._1) === Seq("price"))
-    val man = cz.numCols.head._2
+    assert(cz.of(ZoneCodec.Num).map(_._1) === Seq("price"))
+    val man = cz.of(ZoneCodec.Num).head._2
     assert(man.size === total, "store must cover every partition's files")
     assert(man.exists(_.path.contains("tenant=")),
       "store must persist partition-relative paths")
@@ -654,7 +654,7 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
     def vp = spark.read.parquet(dir).filter(col("sparse") >= 750.0)
     val vpOff = agg(vp)
     assert(agg(pruned(vp)) === vpOff)
-    val zones = Storage.readColumnZones(spark, dir).numCols.head._2
+    val zones = Storage.readColumnZones(spark, dir).of(ZoneCodec.Num).head._2
     val valueSurv = zones.count(z => !z.hi.exists(_ < BigDecimal(750)))
     val expected = byFile.sortBy(_.path).zip(zones.sortBy(_.path))
       .count { case (n, z) =>
@@ -664,5 +664,54 @@ class ZonemapPruneSpec extends SparkSpec with TempDirs {
       "fixture: the implied not-null must beat value zones alone")
     assert(planFiles(vp) === expected,
       "value probe must intersect zones with the implied not-null")
+  }
+
+  test("every gated zone-map query opens fewer files than its layout holds when it executes (sf0.001)") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans)
+    }
+    // the layout directory a scan reads: above its files and partition dirs
+    def layoutOf(p: org.apache.hadoop.fs.Path): Path = {
+      var dir = Paths.get(p.toUri)
+      if (!Files.isDirectory(dir)) dir = dir.getParent
+      while (dir.getFileName.toString.contains("=")) dir = dir.getParent
+      dir
+    }
+    def heldFiles(root: Path): Long = {
+      val w = Files.walk(root)
+      try w.iterator().asScala.count { f =>
+        f.toString.endsWith(".parquet") && !root.relativize(f).iterator().asScala
+          .exists(n => n.toString.startsWith("_") || n.toString.startsWith("."))
+      }.toLong
+      finally w.close()
+    }
+    val d = sf("sf0.001")
+    val queries = Seq("q216_pruned_read", "q219_append_prune",
+      "q227_scaled_prune", "q241_string_prune", "q245_compound_prune",
+      "q247_auto_prune", "q260_autoprune_inlist", "q261_autoprune_strrange",
+      "q265_autoprune_numrange", "q266_partitioned_prune",
+      "q268_num_append_prune", "q269_zorder_autoprune", "q270_colzones_prune",
+      "q271_colzones_append", "q272_optimize_compact", "q273_notnull_prune",
+      "q274_isnull_prune")
+    assert(queries.size === 17)
+    for (name <- queries) {
+      val q = graft.SparkEntry.queries(name)(spark, d)
+      q.collect()
+      val ss = scans(q.queryExecution.executedPlan)
+      assert(ss.nonEmpty, s"$name: no parquet scan executed")
+      ss.foreach { scan =>
+        val layouts = scan.relation.location.rootPaths.map(layoutOf).distinct
+        assert(layouts.size === 1, s"$name: one scan over several layouts $layouts")
+        val opened = scan.metrics("numFiles").value
+        val held = heldFiles(layouts.head)
+        assert(opened < held,
+          s"$name opened $opened of the $held files its layout holds")
+      }
+    }
   }
 }

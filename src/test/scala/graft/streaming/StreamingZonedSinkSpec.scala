@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, TempDirs}
-import graft.operators.{SketchPlanner, Storage}
+import graft.operators.{SketchPlanner, Storage, ZoneCodec}
 
 /** The streaming zoned sink: every micro-batch is one parquet commit +
   * one zone-manifest commit (+ one CMS slice-merge), so the table stays
@@ -34,9 +34,9 @@ class StreamingZonedSinkSpec extends SparkSpec with TempDirs {
 
     // rows complete, one zone commit per batch, merged == rebuild
     assert(spark.read.parquet(dir).count() === 5000L)
-    val man = Storage.readNumManifest(spark, dir).get
+    val man = Storage.readManifest(spark, dir, ZoneCodec.Num).get
     assert(man.size === 12, "3 batches x 4 clustered files each")
-    assert(man === Storage.numZonemapManifest(spark, dir, "price"))
+    assert(man === Storage.zonemapManifest(spark, dir, "price", ZoneCodec.Num))
     assert(ZonedSink.lastApplied(spark, dir) === 2L)
 
     // in-stream sketch maintenance: count + CMS equal a from-scratch
